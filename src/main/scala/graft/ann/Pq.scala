@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.functions.vectors
+import graft.parquet.FooterStats
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -294,12 +295,21 @@ object Pq {
     * pre-rank (query_id, neighbor_id) max-cosine agg collapses duplicate
     * corpus rows for the same id (a retried half-finished
     * [[appendToAnnIndex]] leaves one) so a neighbor can never occupy two
-    * ranks; it runs over the bounded candidate set, not the corpus. */
+    * ranks; it runs over the bounded candidate set, not the corpus.
+    *
+    * One exchange serves both the agg and the rank window: the scored
+    * (query_id, neighbor_id, cosine) rows are hash-partitioned on
+    * `query_id` once, which already clusters every (query_id, neighbor_id)
+    * group and every per-query window. Skipping the agg's map-side partial
+    * step costs nothing at |queries| * k * refine rows; an unbounded
+    * candidate set (LSH) keeps its own two-step plan. */
   private def rerankExact(corpus: DataFrame, corpusId: Column, corpusVec: Column,
                           shortlist: DataFrame, k: Int): DataFrame =
     corpus.select(corpusId.as("neighbor_id"), corpusVec.as("cvec"))
       .join(broadcast(shortlist), "neighbor_id")
-      .withColumn("cosine", vectors.cosine_similarity(col("qvec"), col("cvec")))
+      .select(col("query_id"), col("neighbor_id"),
+        vectors.cosine_similarity(col("qvec"), col("cvec")).as("cosine"))
+      .repartition(col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
       .withColumn("rank", row_number().over(
@@ -362,7 +372,7 @@ object Pq {
       // output writes: the plain vectors dump rides inside the shuffling
       // enc job's wall time, and neither write races the cache
       base.count()
-      graft.parallelJobs(
+      graft.parallelJobs(spark)(
         () => base.write.mode("overwrite").parquet(s"$path/vectors"),
         () => {
           val enc =
@@ -423,6 +433,13 @@ object Pq {
    * probed buckets only, and exact-re-ranks from `vectors/`. Identical
    * results to the in-memory [[ivfPqTopK]] with the same quantizers
    * (sbt-pinned) — the corpus is never re-encoded.
+   *
+   * Building the DataFrame runs no Spark job: the params, IVF and PQ
+   * tables load on the driver (one file open each), and the `enc/` and
+   * `vectors/` schemas come from one footer each instead of an inference
+   * job. Collecting it runs 6 jobs (sbt-pinned budget): the two query-side
+   * broadcasts, the shortlist exchange and broadcast, the single re-rank
+   * exchange and the result stage.
    */
   def ivfPqTopKIndexed(queries: DataFrame, queryId: Column, queryVec: Column,
                        path: String, k: Int,
@@ -433,8 +450,8 @@ object Pq {
     val ivf = Ann.loadIvf(spark, s"$path/ivf")
     val index = loadPq(spark, s"$path/pq")
     ivfPqTopKFromEnc(queries, queryId, queryVec,
-      spark.read.parquet(s"$path/enc"),
-      spark.read.parquet(s"$path/vectors"),
+      FooterStats.readSparkWritten(spark, s"$path/enc"),
+      FooterStats.readSparkWritten(spark, s"$path/vectors"),
       ivf, index, k, nprobe, refine, residual)
   }
 }

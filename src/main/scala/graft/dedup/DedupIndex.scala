@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.UnpersistHandle
 import graft.functions.vectors
+import graft.parquet.FooterStats
 import graft.text.TextFunctions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -56,7 +57,7 @@ object DedupIndex {
       // shuffling buckets job's wall time (scheduler back-fill), and neither
       // write races the cache computation
       shingled.count()
-      parallelJobs(
+      graft.parallelJobs(df.sparkSession)(
         () => shingled.write.mode("overwrite").parquet(s"$path/shingles"),
         () => {
           val exploded = shingled.select(col("id"),
@@ -124,9 +125,6 @@ object DedupIndex {
     } finally shingled.unpersist()
   }
 
-  private def parallelJobs(a: () => Unit, b: () => Unit): Unit =
-    graft.parallelJobs(a, b)
-
   /** Read the saved index parameters (fails if the save never completed).
     * Driver-side read — no Spark job. */
   def readIndexParams(spark: SparkSession, path: String): IndexParams = {
@@ -168,13 +166,13 @@ object DedupIndex {
     // save already applied this cap), and REQUIRED after appends, where a
     // bucket can become hot only across batches
     val refBuckets = Dedup.pruneHotBuckets(
-      spark.read.parquet(s"$path/buckets"), p.maxBucketSize)
+      FooterStats.readSparkWritten(spark, s"$path/buckets"), p.maxBucketSize)
       .select(col("band"), col("bucket"), col("id").as("__ref_id"))
     val candidates = corpusX.join(refBuckets, Seq("band", "bucket"))
       .select(col("id").as("idA"), col("__ref_id").as("idB"))
       .distinct() // bare id pairs in the exchange, as in the direct path
     val a = corpusShingled.select(col("id").as("idA"), col("shingles").as("shinglesA"))
-    val b = spark.read.parquet(s"$path/shingles")
+    val b = FooterStats.readSparkWritten(spark, s"$path/shingles")
       .select(col("id").as("idB"), col("shingles").as("shinglesB"))
     candidates.join(a, "idA").join(b, "idB")
       .withColumn("jaccard", TextFunctions.jaccard(col("shinglesA"), col("shinglesB")))

@@ -93,20 +93,55 @@ package object graft {
   }
 
   /** Run two independent Spark actions concurrently and return both
-    * results, propagating the first failure. FIFO scheduling back-fills
-    * the second job's tasks into the first job's stragglers (§2.6), so
-    * wall time tracks the slower job, not the sum. Both closures must
-    * consume already-materialized inputs (a not-yet-materialized shared
-    * cache would be raced and computed twice) or fully disjoint inputs. */
-  private[graft] def parallelJobs[A, B](a: () => A, b: () => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    * results. FIFO scheduling back-fills the second job's tasks into the
+    * first job's stragglers (§2.6), so wall time tracks the slower job, not
+    * the sum. Both closures must consume already-materialized inputs (a
+    * not-yet-materialized shared cache would be raced and computed twice)
+    * or fully disjoint inputs.
+    *
+    * Failure: the first closure to throw cancels its sibling's running and
+    * future jobs through a job group private to this call, and that first
+    * failure is rethrown — but only after BOTH closures have settled, so
+    * the call never returns while one of its jobs still runs. The two
+    * worker threads inherit the caller's local properties (job
+    * description, job tags) except the job group, which this call owns. */
+  private[graft] def parallelJobs[A, B](spark: SparkSession)(a: () => A, b: () => B): (A, B) = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    val sc = spark.sparkContext
+    val group = s"graft-parallel-${java.util.UUID.randomUUID()}"
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val pool = Executors.newFixedThreadPool(2)
+    def start[T](f: () => T) = pool.submit(new Callable[T] {
+      def call(): T = {
+        sc.setJobGroup(group, sc.getLocalProperty(JobDescriptionProperty))
+        try f() catch {
+          case t: Throwable =>
+            if (firstFailure.compareAndSet(null, t))
+              sc.cancelJobGroupAndFutureJobs(group, "a parallel sibling job failed")
+            throw t
+        }
+      }
+    })
+    // an interrupted caller cancels the group too, then keeps waiting
+    def settle(f: java.util.concurrent.Future[_]): Unit = {
+      var interrupted = false
+      while (!f.isDone) {
+        try f.get() catch {
+          case _: ExecutionException =>
+          case _: InterruptedException =>
+            interrupted = true
+            sc.cancelJobGroupAndFutureJobs(group, "the calling thread was interrupted")
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
     try {
-      val fa = scala.concurrent.Future(a())
-      val fb = scala.concurrent.Future(b())
-      (scala.concurrent.Await.result(fa, scala.concurrent.duration.Duration.Inf),
-        scala.concurrent.Await.result(fb, scala.concurrent.duration.Duration.Inf))
+      val fa = start(a)
+      val fb = start(b)
+      settle(fa)
+      settle(fb)
+      Option(firstFailure.get()).foreach(t => throw t)
+      (fa.get(), fb.get())
     } finally pool.shutdown()
   }
 

@@ -2,12 +2,15 @@ package graft.parquet
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType, Type, Types}
@@ -36,6 +39,11 @@ import org.apache.spark.sql.{Row, SparkSession}
  * and renames into place last, so a torn write leaves a directory that
  * FAILS loudly at read time (no data files) rather than half-loading —
  * the params-last artifact discipline is preserved.
+ *
+ * Reads open each data file ONCE: the footer schema and every row group
+ * come from the same reader. Every load of a persisted quantizer or params
+ * table sits on a per-query path, and a second open re-reads the footer
+ * for nothing.
  *
  * NOT for data tables: anything row-count-proportional to the corpus must
  * go through Spark writes. Supported column types: int, long, float,
@@ -90,22 +98,30 @@ object LocalParquet {
     rows.head
   }
 
+  /** One open per file: the footer schema and every row group come from
+    * the same [[ParquetFileReader]]. */
   private def readFile(conf: Configuration, file: Path): Seq[Row] = {
-    val footer = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val msg = try footer.getFileMetaData.getSchema finally footer.close()
-    val schema = toStructType(msg)
-    val reader = ParquetReader.builder(new GroupReadSupport(), file)
-      .withConf(conf).build()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
     try {
+      val msg = reader.getFooter.getFileMetaData.getSchema
+      val schema = toStructType(msg)
+      val columns = new ColumnIOFactory().getColumnIO(msg)
       val out = Seq.newBuilder[Row]
-      var g = reader.read()
-      while (g != null) {
-        val values = schema.fields.indices.map { i =>
-          if (g.getFieldRepetitionCount(i) == 0) null
-          else readValue(g, msg.getType(i), i, schema.fields(i).dataType)
-        }.toArray[Any]
-        out += new GenericRowWithSchema(values, schema)
-        g = reader.read()
+      var rowGroup = reader.readNextRowGroup()
+      while (rowGroup != null) {
+        val records = columns.getRecordReader(rowGroup, new GroupRecordConverter(msg))
+        var n = rowGroup.getRowCount
+        while (n > 0) {
+          val g = records.read()
+          val values = schema.fields.indices.map { i =>
+            if (g.getFieldRepetitionCount(i) == 0) null
+            else readValue(g, msg.getType(i), i, schema.fields(i).dataType)
+          }.toArray[Any]
+          out += new GenericRowWithSchema(values, schema)
+          n -= 1
+        }
+        rowGroup = reader.readNextRowGroup()
       }
       out.result()
     } finally reader.close()

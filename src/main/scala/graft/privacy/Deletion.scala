@@ -106,7 +106,7 @@ object Deletion {
     // it never becomes a candidate — both equal the fully-scrubbed answer),
     // and the directories are disjoint with per-file swap protection, so
     // the two rewrites overlap (§2.6); a crash means re-run either way
-    val (a, b) = graft.parallelJobs(
+    val (a, b) = graft.parallelJobs(spark)(
       () => scrubParquetById(spark, s"$path/shingles", "id",
         doomed, doomedId, maxTouchedFiles),
       () => scrubParquetById(spark, s"$path/buckets", "id",
@@ -134,7 +134,7 @@ object Deletion {
     // vectors-only: shortlisted doomed codes drop at the re-rank join) —
     // so the two rewrites overlap (§2.6). A crash still means re-run, as
     // with the sequential order.
-    val (a, b) = graft.parallelJobs(
+    val (a, b) = graft.parallelJobs(spark)(
       () => scrubParquetById(spark, s"$path/enc", "neighbor_id",
         doomed, doomedId, maxTouchedFiles),
       () => scrubParquetById(spark, s"$path/vectors", "neighbor_id",

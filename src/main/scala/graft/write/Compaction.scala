@@ -152,7 +152,7 @@ object Compaction {
                       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
     // the two sides live in disjoint directories and each rewrite is
     // independently crash-safe (SwapFiles), so the jobs overlap (§2.6)
-    val (enc, vecs) = graft.parallelJobs(
+    val (enc, vecs) = graft.parallelJobs(spark)(
       () => compactInPlace(spark, s"$path/enc", targetFileBytes, Seq("cid")),
       () => compactInPlace(spark, s"$path/vectors", targetFileBytes))
     Map("enc" -> enc, "vectors" -> vecs)
@@ -166,7 +166,7 @@ object Compaction {
    */
   def compactDedupIndex(spark: SparkSession, path: String,
                         targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] = {
-    val (buckets, shingles) = graft.parallelJobs(
+    val (buckets, shingles) = graft.parallelJobs(spark)(
       () => compactInPlace(spark, s"$path/buckets", targetFileBytes,
         Seq("band", "bucket")),
       () => compactInPlace(spark, s"$path/shingles", targetFileBytes))

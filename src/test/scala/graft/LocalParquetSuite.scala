@@ -77,4 +77,62 @@ class LocalParquetSuite extends AnyFunSuite with SparkTest {
       LocalParquet.read(spark, java.nio.file.Files.createTempDirectory("localparquet-e").toString)
     }
   }
+
+  test("LocalParquet.read: every column type with nulls, zero rows, many row groups") {
+    val dir = java.nio.file.Files.createTempDirectory("localparquet-rt").toString
+    val elems = Seq(IntegerType, LongType, FloatType, DoubleType, BooleanType, StringType)
+    val all = StructType(elems.map(t => StructField(s"c_${t.typeName}", t)) ++
+      elems.map(t => StructField(s"a_${t.typeName}", ArrayType(t, containsNull = false))))
+    val rows = Seq(
+      Row(7, 8L, 1.5f, -2.25, true, "x", Seq(1, 2), Seq(3L), Seq(0.5f, 1.5f),
+        Seq(2.5), Seq(false, true), Seq("p", "q")),
+      Row(Seq.fill(12)(null): _*),
+      Row(0, 0L, 0.0f, 0.0, false, "", Seq.empty[Int], Seq.empty[Long],
+        Seq.empty[Float], Seq.empty[Double], Seq.empty[Boolean], Seq.empty[String]))
+    LocalParquet.write(spark, s"$dir/all", all, rows)
+    val back = LocalParquet.read(spark, s"$dir/all")
+    assert(back == rows)
+    assert(back.head.schema == StructType(all.fields.map(_.copy(nullable = true))))
+    // zero rows, written locally and by Spark: a footer and no row group
+    LocalParquet.write(spark, s"$dir/empty", all, Nil)
+    assert(LocalParquet.read(spark, s"$dir/empty").isEmpty)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], all)
+      .coalesce(1).write.parquet(s"$dir/spark-empty")
+    assert(LocalParquet.read(spark, s"$dir/spark-empty").isEmpty)
+    // a Spark-written file cut into several row groups: every one is read
+    spark.range(0, 5000).select(col("id").cast("int").as("i"), col("id").as("l"),
+        concat(lit("s"), col("id").cast("string")).as("s"),
+        array(col("id").cast("float")).as("af"))
+      .coalesce(1).write.option("parquet.block.size", "4096").parquet(s"$dir/groups")
+    val file = graft.parquet.SidecarFiles.dataFiles(spark, s"$dir/groups").head
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf()))
+    val rowGroups = try footer.getRowGroups.size finally footer.close()
+    assert(rowGroups > 1)
+    val grouped = LocalParquet.read(spark, s"$dir/groups")
+    assert(grouped.map(r => (r.getInt(0), r.getLong(1), r.getString(2), r.getSeq[Float](3))) ==
+      (0 until 5000).map(i => (i, i.toLong, s"s$i", Seq(i.toFloat))))
+  }
+
+  test("FooterStats.sparkSchema reads the written schema; the read equals an inferred one") {
+    val dir = java.nio.file.Files.createTempDirectory("footer-schema").toString
+    val df = Seq((1L, Seq(0.5f), "a"), (2L, Seq.empty[Float], null))
+      .toDF("id", "vec", "tag").repartition(2)
+    df.write.parquet(s"$dir/spark")
+    df.write.mode("append").parquet(s"$dir/spark")
+    val inferred = spark.read.parquet(s"$dir/spark")
+    // the footer keeps the written nullability; the relation relaxes it
+    // either way
+    assert(graft.parquet.FooterStats.sparkSchema(spark, s"$dir/spark") == df.schema)
+    val read = graft.parquet.FooterStats.readSparkWritten(spark, s"$dir/spark")
+    assert(read.schema == inferred.schema)
+    assert(read.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
+    // a file without Spark's row-schema key, and a directory without data
+    LocalParquet.write(spark, s"$dir/local",
+      StructType(Seq(StructField("v", IntegerType))), Seq(Row(1)))
+    intercept[IllegalArgumentException](graft.parquet.FooterStats.sparkSchema(spark, s"$dir/local"))
+    intercept[IllegalArgumentException](graft.parquet.FooterStats.sparkSchema(spark,
+      java.nio.file.Files.createTempDirectory("footer-schema-empty").toString))
+  }
 }
