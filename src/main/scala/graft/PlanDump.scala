@@ -1,10 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
-  * the optimization-round evidence trail (plans/rNN/<query>_{before,after}.txt).
+  * the optimization-round evidence trail (plans/<topic>/<query>_{before,after}.txt).
+  * Each dump opens with the driver's planning cost: the query's
+  * `QueryPlanningTracker` phase times, its slowest optimizer rules, and
+  * the time and size of the optimized plan's `constraints` (Catalyst's
+  * constraint propagation, which `InferFiltersFromConstraints`, every
+  * `checkpoint` and every join onto the result pay for again).
   * Usage: PlanDump <sfDir> <outDir> <suffix> <query> [query...] */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -30,10 +36,29 @@ object PlanDump {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
+      Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+        planningHeader(df.queryExecution) + txt)
       spark.catalog.clearCache()
       println(s"dumped $name")
     }
     spark.stop()
+  }
+
+  /** Comment lines with the planning cost of an already planned query. */
+  private def planningHeader(qe: QueryExecution): String = {
+    val tracker = qe.tracker
+    val phases = tracker.phases.toSeq.sortBy(_._2.startTimeMs)
+      .map { case (phase, summary) => s"$phase ${summary.durationMs} ms" }
+    val rules = tracker.topRulesByTime(5).map { case (rule, summary) =>
+      f"${rule.split('.').last} ${summary.totalTimeNs / 1e6}%.1f ms " +
+        s"(${summary.numEffectiveInvocations}/${summary.numInvocations} effective)"
+    }
+    val start = System.nanoTime()
+    val constraints = qe.optimizedPlan.constraints.size
+    val constraintsMs = (System.nanoTime() - start) / 1e6
+    Seq(s"# planning phases: ${phases.mkString(", ")}",
+      s"# slowest rules: ${rules.mkString(", ")}",
+      f"# optimizedPlan.constraints: $constraints expressions in $constraintsMs%.1f ms",
+      "").mkString("\n")
   }
 }

@@ -924,10 +924,12 @@ object ScaleProbe {
       val excerpts = big.filter(col("doc_id") % 5 === 1)
         .select((col("doc_id") + 500000000L).as("doc_id"),
           concat_ws(" ", slice(toks, 3, 30)).as("text"))
+      val h = UnpersistHandle()
       val (nPairs, t) = time {
         graft.dedup.Containment.containmentPairs(
-          big.unionAll(excerpts), col("doc_id"), col("text")).count()
+          big.unionAll(excerpts), col("doc_id"), col("text"), unpersistHandle = h).count()
       }
+      h.unpersist()
       report("containment", nPairs, t)
     }
 

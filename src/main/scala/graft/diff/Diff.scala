@@ -19,6 +19,19 @@ import java.util.Locale
  * one side is small) and one fused projection — no extra passes. All
  * comparisons are Column algebra, so whole-stage codegen and column pruning
  * stay effective.
+ *
+ * Planning invariant: each column is named once, before the join — value
+ * and ignored columns under their output name, id columns and the exists
+ * flags under an internal one — and the output projection aliases only the
+ * computed columns (the action, the change array, the coalesced ids, the
+ * sparse-mode values), never a bare attribute. Catalyst's constraint
+ * propagation adds, for every alias of a bare attribute, a rewritten copy
+ * of each constraint that mentions it; the action and change columns
+ * mention every value column, so renaming each value column a second
+ * time would double the constraint set once per column. Named once,
+ * driver planning stays linear in the width, as do the `localCheckpoint` /
+ * `checkpoint` of a diff result and every join onto it, which read the
+ * same constraints (`DiffPlanSuite` pins both).
  */
 class Differ(val options: DiffOptions) extends Serializable {
 
@@ -133,21 +146,40 @@ class Differ(val options: DiffOptions) extends Serializable {
     val valueColumns = valueColumnsOf(left, right, pkColumns, ignoreColumns, cs)
     val leftIgnored = left.columns.toSeq.filter(containsIn(ignoreColumns, cs))
     val rightIgnored = right.columns.toSeq.filter(containsIn(ignoreColumns, cs))
+    val lp = options.leftColumnPrefix
+    val rp = options.rightColumnPrefix
 
-    // Rename every column on each side to a unique internal name before the
-    // join. This avoids dataset-qualified references entirely, making the
-    // diff immune to Spark's ambiguous-self-join detection when both inputs
+    // Each side's columns get their join-side name before the join, once:
+    // value and ignored columns the output name they end up with, id
+    // columns and the exists flags an internal name. The internal prefix is
+    // distinct from every input and output name, and the join output has no
+    // duplicate names, so no reference is dataset-qualified: the diff is
+    // immune to Spark's ambiguous-self-join detection when both inputs
     // share lineage (e.g. two filters of the same source).
-    val internalPrefix = distinctPrefixFor(left.columns.toSeq ++ right.columns)
+    val internalPrefix = distinctPrefixFor(left.columns.toSeq ++ right.columns ++
+      outputColumnNames(left, right, pkColumns, ignoreColumns, cs))
     val existsName = internalPrefix + "exists"
-    def ln(c: String): Column = col(backticks(s"${internalPrefix}l_$c"))
-    def rn(c: String): Column = col(backticks(s"${internalPrefix}r_$c"))
+    def internal(c: String): Boolean = c == existsName || containsIn(pkColumns, cs)(c)
+    def leftName(c: String): String =
+      if (internal(c) || options.diffMode == DiffMode.RightSide) s"${internalPrefix}l_$c"
+      else if (options.diffMode == DiffMode.LeftSide) c
+      else s"${lp}_$c"
+    // right-side names carry the right schema's own spelling, so output
+    // columns preserve each side's case in case-insensitive sessions
+    def rightName(name: String): String = {
+      val c = rightNameOf(right, cs)(name)
+      if (internal(c) || options.diffMode == DiffMode.LeftSide) s"${internalPrefix}r_$c"
+      else if (options.diffMode == DiffMode.RightSide) c
+      else s"${rp}_$c"
+    }
+    def ln(c: String): Column = col(backticks(leftName(c)))
+    def rn(c: String): Column = col(backticks(rightName(c)))
     val l = left.toDF().select(
-      left.columns.map(c => col(backticks(c)).as(s"${internalPrefix}l_$c")) :+
-        lit(1).as(s"${internalPrefix}l_$existsName"): _*)
+      left.columns.map(c => col(backticks(c)).as(leftName(c))) :+
+        lit(1).as(leftName(existsName)): _*)
     val r = right.toDF().select(
-      right.columns.map(c => col(backticks(c)).as(s"${internalPrefix}r_$c")) :+
-        lit(1).as(s"${internalPrefix}r_$existsName"): _*)
+      right.columns.map(c => col(backticks(c)).as(rightName(c))) :+
+        lit(1).as(rightName(existsName)): _*)
 
     def field(name: String) = left.schema.fields
       .find(f => canon(f.name, cs) == canon(name, cs)).get
@@ -177,42 +209,36 @@ class Differ(val options: DiffOptions) extends Serializable {
 
     val idColumnsOut = pkColumns.map(c => coalesce(ln(c), rn(c)).as(c))
 
-    // sparse mode nulls out values that are null-safe-EQUAL on both sides —
-    // raw `<=>`, not the configured comparator, matching the reference
-    // (reference: Diff.scala:199-216: `when(not(left <=> right), side)`)
-    def sideValue(sideCol: Column, c: String): Column =
-      if (options.sparseMode) when(not(ln(c) <=> rn(c)), sideCol) else sideCol
-    def leftValue(c: String): Column = sideValue(ln(c), c)
-    def rightValue(c: String): Column = sideValue(rn(c), c)
-    // ignored columns: sparse applies only when the column exists on both sides
-    def ignoredValue(sideCol: Column, c: String): Column = {
-      val onBoth = containsIn(leftIgnored, cs)(c) && containsIn(rightIgnored, cs)(c)
-      if (options.sparseMode && onBoth) when(not(ln(c) <=> rn(c)), sideCol)
-      else sideCol
+    // Value columns are selected bare under the name they already carry;
+    // only sparse mode computes them. Sparse mode nulls out values that are
+    // null-safe-EQUAL on both sides — raw `<=>`, not the configured
+    // comparator, matching the reference
+    // (reference: Diff.scala:199-216: `when(not(left <=> right), side)`).
+    // Ignored columns are sparse only when they exist on both sides.
+    def valueOut(sideName: String, c: String, sparse: Boolean): Column = {
+      val side = col(backticks(sideName))
+      if (sparse) when(not(ln(c) <=> rn(c)), side).as(sideName) else side
     }
+    def ignoredSparse(c: String): Boolean = options.sparseMode &&
+      containsIn(leftIgnored, cs)(c) && containsIn(rightIgnored, cs)(c)
+    def leftValue(c: String): Column = valueOut(leftName(c), c, options.sparseMode)
+    def rightValue(c: String): Column = valueOut(rightName(c), c, options.sparseMode)
+    def leftIgnoredValue(c: String): Column = valueOut(leftName(c), c, ignoredSparse(c))
+    def rightIgnoredValue(c: String): Column = valueOut(rightName(c), c, ignoredSparse(c))
 
-    val lp = options.leftColumnPrefix
-    val rp = options.rightColumnPrefix
-    val rightName = rightNameOf(right, cs) _
+    // sparse applies to one-sided modes too (reference: the sparse value
+    // maps feed every mode, Diff.scala:199-264)
     val valueColumnsOut: Seq[Column] = options.diffMode match {
       case DiffMode.ColumnByColumn =>
-        valueColumns.flatMap(c =>
-          Seq(leftValue(c).as(s"${lp}_$c"), rightValue(c).as(s"${rp}_${rightName(c)}"))) ++
-          leftIgnored.map(c => ignoredValue(ln(c), c).as(s"${lp}_$c")) ++
-          rightIgnored.map(c => ignoredValue(rn(c), c).as(s"${rp}_$c"))
+        valueColumns.flatMap(c => Seq(leftValue(c), rightValue(c))) ++
+          leftIgnored.map(leftIgnoredValue) ++ rightIgnored.map(rightIgnoredValue)
       case DiffMode.SideBySide =>
-        valueColumns.map(c => leftValue(c).as(s"${lp}_$c")) ++
-          leftIgnored.map(c => ignoredValue(ln(c), c).as(s"${lp}_$c")) ++
-          valueColumns.map(c => rightValue(c).as(s"${rp}_${rightName(c)}")) ++
-          rightIgnored.map(c => ignoredValue(rn(c), c).as(s"${rp}_$c"))
-      // sparse applies to one-sided modes too (reference: the sparse value
-      // maps feed every mode, Diff.scala:199-264)
+        valueColumns.map(leftValue) ++ leftIgnored.map(leftIgnoredValue) ++
+          valueColumns.map(rightValue) ++ rightIgnored.map(rightIgnoredValue)
       case DiffMode.LeftSide =>
-        valueColumns.map(c => leftValue(c).as(c)) ++
-          leftIgnored.map(c => ignoredValue(ln(c), c).as(c))
+        valueColumns.map(leftValue) ++ leftIgnored.map(leftIgnoredValue)
       case DiffMode.RightSide =>
-        valueColumns.map(c => rightValue(c).as(rightName(c))) ++
-          rightIgnored.map(c => ignoredValue(rn(c), c).as(c))
+        valueColumns.map(rightValue) ++ rightIgnored.map(rightIgnoredValue)
     }
 
     l.join(r, joinCondition, "fullouter")

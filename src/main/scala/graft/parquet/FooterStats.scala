@@ -1,7 +1,7 @@
 package graft.parquet
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -26,23 +26,41 @@ object FooterStats {
   private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** The row schema Spark wrote into the footer of the first data file
-    * (by name) in `dir` — the key Spark's schema inference reads from one
-    * data file of an un-merged parquet read, read here on the driver
-    * instead of in an inference job. One footer open, row-group metadata
-    * skipped. Fails loudly on a directory with no data files or a file
-    * Spark did not write: there is deliberately no inference fallback. */
+    * (by name) in `dir`, or, when `dir` holds no data file of its own, in
+    * its first hive partition directory that does — the key Spark's schema
+    * inference reads from one data file of an un-merged parquet read, read
+    * here on the driver instead of in an inference job. One footer open,
+    * row-group metadata skipped. The footer schema holds the data columns
+    * only; a read with it appends the partition columns from the paths, as
+    * an inferred read does. Fails loudly on a directory with no data files
+    * or a file Spark did not write: there is deliberately no inference
+    * fallback. */
   def sparkSchema(spark: SparkSession, dir: String): StructType = {
-    val file = SidecarFiles.dataFiles(spark, dir).sorted.headOption.getOrElse(
-      throw new IllegalArgumentException(s"no data files in $dir"))
     val conf = spark.sessionState.newHadoopConf()
-    val path = new Path(file)
+    val root = new Path(dir)
+    val path = firstDataFile(root.getFileSystem(conf), root).getOrElse(
+      throw new IllegalArgumentException(s"no data files in $dir"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
       HadoopReadOptions.builder(conf, path)
         .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
     val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
       .get(SparkRowSchemaKey) finally reader.close()
-    require(json != null, s"$file carries no Spark row schema ($SparkRowSchemaKey)")
+    require(json != null, s"$path carries no Spark row schema ($SparkRowSchemaKey)")
     DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /** Names Spark's file listing skips: `_SUCCESS`, sidecars such as
+    * `_manifest`, dot files; a `_`-name holding `=` is a partition. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
+  /** The first visible file by name in `dir`, else the first one under its
+    * visible subdirectories, taken in name order. */
+  private def firstDataFile(fs: FileSystem, dir: Path): Option[Path] = {
+    val (dirs, files) = fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName))
+      .partition(_.isDirectory)
+    files.map(_.getPath).sortBy(_.getName).headOption.orElse(
+      dirs.map(_.getPath).sortBy(_.getName).iterator.flatMap(firstDataFile(fs, _)).nextOption())
   }
 
   /** `spark.read.parquet(dir)` for a directory only Spark writes, with the

@@ -1062,9 +1062,15 @@ object PyBridge {
 
   def containmentPairs(df: DataFrame, id: Column, text: Column,
                        shingleSize: Int, window: Int, threshold: Double,
-                       minShingles: Int, maxPrintBucket: Int): DataFrame =
-    graft.dedup.Containment.containmentPairs(df, id, text, shingleSize, window,
-      threshold, minShingles, maxPrintBucket)
+                       minShingles: Int, maxPrintBucket: Int): DataFrame = {
+    val handle = UnpersistHandle()
+    val pairs = graft.dedup.Containment.containmentPairs(df, id, text, shingleSize, window,
+      threshold, minShingles, maxPrintBucket, unpersistHandle = handle)
+    // pin the pairs past the unpersist of the shingle pass
+    val pinned = pairs.localCheckpoint(true)
+    handle.unpersist()
+    pinned
+  }
 
   def mergeKmvSketches(sketches: DataFrame, sketchCol: Column, k: Int): DataFrame =
     graft.dedup.CorpusOverlap.mergeKmvSketches(sketches, sketchCol, k)

@@ -2,6 +2,7 @@ package graft
 
 import graft.ann.{Ann, Pq}
 import graft.dedup.DedupIndex
+import graft.diff.SnapshotDiff
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
@@ -79,5 +80,28 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
       col("id"), col("text"), idx, storageLevel = StorageLevel.NONE))
     assert(planJobs == 0)
     assert(pairs.select("idA", "idB").as[(Long, Long)].collect().toSeq == Seq((10L, 1L)))
+  }
+
+  test("snapshot diff: storing and diffing snapshots runs no schema-inference job") {
+    val dirs = Seq("left", "right").map(s => graft.createTemporaryDir(s"snapshot-job-budget-$s"))
+    val versions = Seq(
+      Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0)),
+      Seq((1L, "a", 10.0), (2L, "a", 21.0), (3L, "b", 30.0)))
+    val writeJobs = dirs.zip(versions).map { case (dir, rows) =>
+      jobsIn(SnapshotDiff.writePartitionedWithManifest(rows.toDF("id", "p", "v"), dir,
+        Seq("p")))._2
+    }
+    // the write and the manifest aggregate; the read-back that fingerprints
+    // the written files takes its schema from a footer
+    assert(writeJobs.forall(_ <= 3), s"writePartitionedWithManifest ran $writeJobs jobs")
+    // detection collects the changed partitions from the manifests (an
+    // aggregate and a join); both snapshot reads take their schemas from
+    // footers
+    val (diff, planJobs) = jobsIn(SnapshotDiff.diffSnapshots(spark, dirs(0), dirs(1),
+      Seq("id"), Seq("p")))
+    assert(planJobs <= 3, s"diffSnapshots ran $planJobs jobs before its result is used")
+    assert(diff.select("diff", "id").as[(String, Long)].collect().toSet ==
+      Set(("N", 1L), ("C", 2L)))
+    info(s"jobs: write ${writeJobs.mkString(", ")}, diffSnapshots $planJobs")
   }
 }

@@ -135,4 +135,19 @@ class LocalParquetSuite extends AnyFunSuite with SparkTest {
     intercept[IllegalArgumentException](graft.parquet.FooterStats.sparkSchema(spark,
       java.nio.file.Files.createTempDirectory("footer-schema-empty").toString))
   }
+
+  test("FooterStats.sparkSchema finds a file under hive partitions, skipping the manifest") {
+    val dir = java.nio.file.Files.createTempDirectory("footer-schema-hive").toString + "/snap"
+    val df = Seq((1L, "a", 1, 0.5), (2L, "b", 1, 1.5), (3L, "b", 2, 2.5)).toDF("id", "p", "q", "v")
+    // the `_manifest` sidecar sorts first and carries no Spark row schema
+    graft.diff.SnapshotDiff.writePartitionedWithManifest(df, dir, Seq("p", "q"))
+    assert(new java.io.File(s"$dir/_manifest").isDirectory)
+    // the footer holds the data columns; the partition columns come from the paths
+    assert(graft.parquet.FooterStats.sparkSchema(spark, dir) == df.drop("p", "q").schema)
+    val inferred = spark.read.parquet(dir)
+    val read = graft.parquet.FooterStats.readSparkWritten(spark, dir)
+    assert(read.columns.toSeq == Seq("id", "v", "p", "q"))
+    assert(read.schema == inferred.schema)
+    assert(read.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq)
+  }
 }

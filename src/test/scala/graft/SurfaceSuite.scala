@@ -53,6 +53,19 @@ class SurfaceSuite extends AnyFunSuite with SparkTest {
     assert(spark.read.parquet(dir).count() == 2)
   }
 
+  test("PyBridge.containmentPairs leaves no cache entry behind") {
+    spark.catalog.clearCache() // see note in the writePartitionedBy test
+    val excerpt = (30 until 60).map(i => s"w$i").mkString(" ")
+    val docs = Seq((1L, (0 until 90).map(i => s"w$i").mkString(" ")), (2L, excerpt))
+      .toDF("doc_id", "text")
+    val pairs = graft.python.PyBridge.containmentPairs(docs, $"doc_id", $"text",
+      shingleSize = 3, window = 4, threshold = 0.5, minShingles = 10, maxPrintBucket = 64)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the pinned pairs stay readable after the shingle pass is released
+    assert(pairs.select("idA", "idB").as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("UnpersistHandle semantics: set-once, unset throws, Silent tolerates") {
     spark.catalog.clearCache() // see note in the writePartitionedBy test
     val strict = UnpersistHandle()
