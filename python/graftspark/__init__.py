@@ -1,11 +1,11 @@
-"""PySpark mirror of the graft Scala engine (classic Spark sessions only).
+"""PySpark mirror of the graft Scala engine.
 
 Every operator bridges to the JVM implementation via py4j — the Python layer
 does argument marshalling only, so the Scala code paths (and their tests and
 oracles) are the single source of truth. This requires a classic Spark
-session with the graft jar on the driver classpath; Spark Connect is not
-supported (there is no JVM to bridge to), matching the documented limitation
-of JVM-backed features.
+session with the graft jar on the driver classpath. The one exception is
+diff (graftspark.diff), which also runs on Spark Connect sessions through
+its pure-PySpark engine (graftspark.diff._pure).
 
 Usage:
     spark = (SparkSession.builder

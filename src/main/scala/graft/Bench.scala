@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR and
  * prints one JSON line. Timing forces execution via queryExecution.toRdd.count()
@@ -54,16 +52,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS): read as long, session-wide and
-      // order-independent (no per-query conf mutation)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // WindowExec warns "No Partition Defined for Window operation" on every
     // deliberately-global window: the #partitions-row offset windows of
     // RowNumbers/PrefixSum (three-phase design — the global window only ever

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import java.nio.file.{Files, Paths}
 
@@ -21,15 +20,7 @@ object PlanDump {
     val names = args.drop(3).toSeq
     val unknown = names.toSet.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       spark.sparkContext.setJobDescription(s"plandump: $name")

@@ -44,17 +44,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same datagen-drift shield as Bench/Verify: TIMESTAMP(NANOS) parquet
-      // vintages read as LongType nanos, which eventTsUs dispatches on
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // optional comma-separated probe filter, e.g. SPARK_GRAFT_SCALE_PROBES=
     // "minhash_pairs,assign_clusters" — lets the cheap probes run at large N

@@ -187,7 +187,7 @@ object SparkEntry {
     * corpus lacks. ONE definition for both the in-plan and SQL-artifact
     * gates; the third copy in tools/make_golden.py is deliberate
     * (independent-replication discipline), so edits must land there too. */
-  private[graft] val byteBpeHazards: Seq[(Long, String)] = Seq(
+  private val byteBpeHazards: Seq[(Long, String)] = Seq(
     "it's the'll 've 'd mix",
     "Hello World HELLO hello",
     "a  b   c\td\ne f  ",
@@ -365,7 +365,7 @@ object SparkEntry {
   /** Deterministic 256-bucket weight table for the classifier gate — the
     * SAME generated literal feeds the Spark kernel and the DuckDB oracle's
     * list, so there is one source of truth for the model. */
-  private[graft] val classifierGateWeights: Array[Int] =
+  private val classifierGateWeights: Array[Int] =
     Array.tabulate(256)(i => ((i * 37 + 11) % 21) - 10)
 
   /** Fixed phrase blocklist for the `pattern_hits` gate — ONE literal list

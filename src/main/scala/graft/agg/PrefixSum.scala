@@ -69,47 +69,10 @@ object PrefixSum {
       storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     require(order.nonEmpty, "withRunningTotal needs at least one order column")
-    require(storageLevel != StorageLevel.NONE,
-      "storageLevel must not be NONE: the persist pins partition ids between phases")
-
-    val prefix = distinctPrefixFor(df.columns.toSeq :+ outputColumn)
-    val valCol = prefix + "value"
-    val pidCol = prefix + "partition_id"
-    val localCol = prefix + "local_sum"
-    val totalCol = prefix + "partition_total"
-    val offsetCol = prefix + "offset"
-
-    // phase 1+2: order, pin pids, persist; partition-local running sums
-    val withPid = df
-      .withColumn(valCol, valueCol)
-      .orderBy(order: _*)
-      .withColumn(pidCol, spark_partition_id())
-      .persist(storageLevel)
-    unpersistHandle.setDataFrame(withPid)
-
-    val bounds =
-      if (exclusive) (Window.unboundedPreceding, -1L) else (Window.unboundedPreceding, Window.currentRow)
-    val localWindow = Window.partitionBy(col(pidCol)).orderBy(order: _*)
-      .rowsBetween(bounds._1, bounds._2)
-    val withLocal = withPid.withColumn(localCol,
-      coalesce(sum(col(valCol)).over(localWindow), lit(0)))
-
-    // phase 3: per-partition totals -> cumulative offsets (tiny window,
-    // exactly #partitions rows — constant partition key documents the
-    // single-partition intent and silences WindowExec's warning),
-    // shifted one partition forward, broadcast back
-    val cumWindow = Window.partitionBy(lit(0)).orderBy(col(pidCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offsets = densePids(withPid, pidCol)
-      .join(withPid.groupBy(col(pidCol)).agg(sum(col(valCol)).as(totalCol)),
-        Seq(pidCol), "left")
-      .withColumn(offsetCol, sum(col(totalCol)).over(cumWindow))
-      .select((col(pidCol) + 1).as(pidCol), col(offsetCol))
-
-    withLocal
-      .join(broadcast(offsets), Seq(pidCol), "left")
-      .withColumn(outputColumn, col(localCol) + coalesce(col(offsetCol), lit(0)))
-      .drop(valCol, pidCol, localCol, offsetCol)
+    withRunning(df, valueCol, order, outputColumn, exclusive, storageLevel,
+      unpersistHandle, "local_sum", "partition_total", sum(_: Column),
+      local => coalesce(local, lit(0)),
+      (local, offset) => local + coalesce(offset, lit(0)))
   }
 
   /**
@@ -133,16 +96,45 @@ object PrefixSum {
       storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     require(order.nonEmpty, "withRunningMax needs at least one order column")
+    // greatest ignores nulls; both-null (first row, first partition) stays null
+    withRunning(df, valueCol, order, outputColumn, exclusive, storageLevel,
+      unpersistHandle, "local_max", "partition_max", max(_: Column),
+      identity, greatest(_, _))
+  }
+
+  /**
+   * The three-phase plan both running aggregates share. `aggregate` is the
+   * decomposable aggregate (sum or max): it computes the partition-local
+   * running value, each partition's whole-partition value and the
+   * cumulative value over whole previous partitions. `fillLocal` wraps the
+   * local window value; `combine(local, offset)` folds the previous
+   * partitions' cumulative value (null for the first partition) into it.
+   * `localName` and `totalName` name the internal columns.
+   */
+  private def withRunning(
+      df: DataFrame,
+      valueCol: Column,
+      order: Seq[Column],
+      outputColumn: String,
+      exclusive: Boolean,
+      storageLevel: StorageLevel,
+      unpersistHandle: UnpersistHandle,
+      localName: String,
+      totalName: String,
+      aggregate: Column => Column,
+      fillLocal: Column => Column,
+      combine: (Column, Column) => Column): DataFrame = {
     require(storageLevel != StorageLevel.NONE,
       "storageLevel must not be NONE: the persist pins partition ids between phases")
 
     val prefix = distinctPrefixFor(df.columns.toSeq :+ outputColumn)
     val valCol = prefix + "value"
     val pidCol = prefix + "partition_id"
-    val localCol = prefix + "local_max"
-    val totalCol = prefix + "partition_max"
+    val localCol = prefix + localName
+    val totalCol = prefix + totalName
     val offsetCol = prefix + "offset"
 
+    // phase 1+2: order, pin pids, persist; partition-local running values
     val withPid = df
       .withColumn(valCol, valueCol)
       .orderBy(order: _*)
@@ -151,28 +143,29 @@ object PrefixSum {
     unpersistHandle.setDataFrame(withPid)
 
     val bounds =
-      if (exclusive) (Window.unboundedPreceding, -1L)
-      else (Window.unboundedPreceding, Window.currentRow)
+      if (exclusive) (Window.unboundedPreceding, -1L) else (Window.unboundedPreceding, Window.currentRow)
     val localWindow = Window.partitionBy(col(pidCol)).orderBy(order: _*)
       .rowsBetween(bounds._1, bounds._2)
-    val withLocal = withPid.withColumn(localCol, max(col(valCol)).over(localWindow))
+    val withLocal = withPid.withColumn(localCol,
+      fillLocal(aggregate(col(valCol)).over(localWindow)))
 
+    // phase 3: per-partition values -> cumulative offsets (tiny window,
+    // exactly #partitions rows — constant partition key documents the
+    // single-partition intent and silences WindowExec's warning),
+    // shifted one partition forward, broadcast back. Dense pids: with only
+    // non-empty partitions in the frame, a gap partition would leave the
+    // NEXT partition offset-less (see densePids)
     val cumWindow = Window.partitionBy(lit(0)).orderBy(col(pidCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // dense pids: with only non-empty partitions in the frame, a gap
-    // partition would leave the NEXT partition offset-less — and unlike
-    // the sum twin, greatest(local, null) cannot distinguish
-    // null-because-first-partition from null-because-gap
     val offsets = densePids(withPid, pidCol)
-      .join(withPid.groupBy(col(pidCol)).agg(max(col(valCol)).as(totalCol)),
+      .join(withPid.groupBy(col(pidCol)).agg(aggregate(col(valCol)).as(totalCol)),
         Seq(pidCol), "left")
-      .withColumn(offsetCol, max(col(totalCol)).over(cumWindow))
+      .withColumn(offsetCol, aggregate(col(totalCol)).over(cumWindow))
       .select((col(pidCol) + 1).as(pidCol), col(offsetCol))
 
     withLocal
       .join(broadcast(offsets), Seq(pidCol), "left")
-      // greatest ignores nulls; both-null (first row, first partition) stays null
-      .withColumn(outputColumn, greatest(col(localCol), col(offsetCol)))
+      .withColumn(outputColumn, combine(col(localCol), col(offsetCol)))
       .drop(valCol, pidCol, localCol, offsetCol)
   }
 }

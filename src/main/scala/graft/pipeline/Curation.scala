@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.UnpersistHandle
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -81,61 +81,40 @@ object Curation {
       dsirPortableHash: Boolean = true): (DataFrame, DataFrame) = {
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
 
-    val spark = docs.sparkSession
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    var live: Option[DataFrame] = None
+    val stages = new Stages(storageLevel)
 
-    def step(stage: String, next: DataFrame): DataFrame = {
-      val p = next.persist(storageLevel)
-      counts += stage -> p.count()
-      live.foreach(_.unpersist(false))
-      live = Some(p)
-      p
-    }
-
-    // The two leading stages are pure narrow filters, so their attrition
+    // The leading stages are pure narrow filters, so their attrition
     // counts fuse into ONE aggregate pass over the input — no per-stage
     // scan, no per-stage cache. The quality-survivor set itself stays lazy:
     // it is scanned exactly once (by the exact-dedup stage), so persisting
     // it would only add a cache write.
-    val (langKeep, qualKeep, clsKeep, dsirKeep) = keepPredicates(
+    val leading = leadingStages(
       text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
-    val head = docs.agg(
-      count(lit(1)),
-      coalesce(sum(when(langKeep, 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(langKeep && qualKeep, 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(langKeep && qualKeep && clsKeep, 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(langKeep && qualKeep && clsKeep && dsirKeep, 1L).otherwise(0L)), lit(0L))).head()
-    counts += "0_input" -> head.getLong(0)
-    if (keepLangs.nonEmpty) counts += "1_langid" -> head.getLong(1)
-    counts += "2_quality" -> head.getLong(2)
-    if (classifierWeights.nonEmpty) counts += "2b_classifier" -> head.getLong(3)
-    if (dsirWeights.nonEmpty) counts += "2c_dsir" -> head.getLong(4)
-    var cur = docs.filter(langKeep && qualKeep && clsKeep && dsirKeep)
+    stages.counts ++= leading.report(leading.measure(docs))
+    var cur = docs.filter(leading.keep)
 
-    cur = step("3_exact", graft.dedup.Dedup.dropExactTextDuplicates(cur, text, id))
+    cur = stages.step("3_exact", graft.dedup.Dedup.dropExactTextDuplicates(cur, text, id))
 
     // near-dup shingle cache is internal to the stage: release it as soon
     // as the survivor set is materialized
     val mhHandle = graft.UnpersistHandle()
-    cur = step("4_neardup", graft.dedup.Dedup.deduplicateMinHash(
+    cur = stages.step("4_neardup", graft.dedup.Dedup.deduplicateMinHash(
       cur, id, text, shingleSize, bands, rowsPerBand, minHashThreshold,
       unpersistHandle = mhHandle))
     mhHandle.unpersist()
 
     blocklist.foreach { case (bdf, btext) =>
-      cur = step("5_decontaminate", graft.dedup.Dedup.decontaminate(
+      cur = stages.step("5_decontaminate", graft.dedup.Dedup.decontaminate(
         cur, id, text, bdf, btext, blocklistShingleSize, minOverlap))
     }
 
     if (sampleRate < 1.0)
-      cur = step("6_sample", graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
+      cur = stages.step("6_sample", graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
 
     unpersistHandle.setDataFrame(cur)
-    import spark.implicits._
-    (cur, counts.toSeq.toDF("stage", "n_rows"))
+    (cur, report(docs.sparkSession, stages.counts.toSeq))
   }
 
   /**
@@ -179,7 +158,7 @@ object Curation {
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
 
     val spark = docs.sparkSession
-    val (langKeep, qualKeep, clsKeep, dsirKeep) = keepPredicates(
+    val leading = leadingStages(
       text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
@@ -187,13 +166,10 @@ object Curation {
     // the leading fused pass becomes observe counters on the INPUT node:
     // the same conditional sums, zero extra scans, no driver-side action
     val obsIn = new org.apache.spark.sql.Observation("curate_leading")
-    var cur = docs.observe(obsIn,
-        count(lit(1)).as("n_input"),
-        coalesce(sum(when(langKeep, 1L).otherwise(0L)), lit(0L)).as("n_lang"),
-        coalesce(sum(when(langKeep && qualKeep, 1L).otherwise(0L)), lit(0L)).as("n_qual"),
-        coalesce(sum(when(langKeep && qualKeep && clsKeep, 1L).otherwise(0L)), lit(0L)).as("n_cls"),
-        coalesce(sum(when(langKeep && qualKeep && clsKeep && dsirKeep, 1L).otherwise(0L)), lit(0L)).as("n_dsir"))
-      .filter(langKeep && qualKeep && clsKeep && dsirKeep)
+    val counterNames = Seq("n_input", "n_lang", "n_qual", "n_cls", "n_dsir")
+    val named = leading.counters.zip(counterNames).map { case (c, name) => c.as(name) }
+    var cur = docs.observe(obsIn, named.head, named.tail: _*)
+      .filter(leading.keep)
 
     val stageObs = scala.collection.mutable.ArrayBuffer.empty[(String, org.apache.spark.sql.Observation, DataFrame)]
     def observed(stage: String, next: DataFrame): DataFrame = {
@@ -254,26 +230,13 @@ object Curation {
     // belt-and-braces: if an observation still came back empty (a non-AQE
     // rule pruned its node), recompute that counter with a direct action —
     // only ever pays in the degenerate empty-stage case
-    val leading = {
+    val leadingCounts = {
       val got = obsIn.get
-      if (got.nonEmpty) got
-      else docs.agg(
-        count(lit(1)).as("n_input"),
-        coalesce(sum(when(langKeep, 1L).otherwise(0L)), lit(0L)).as("n_lang"),
-        coalesce(sum(when(langKeep && qualKeep, 1L).otherwise(0L)), lit(0L)).as("n_qual"),
-        coalesce(sum(when(langKeep && qualKeep && clsKeep, 1L).otherwise(0L)), lit(0L)).as("n_cls"),
-        coalesce(sum(when(langKeep && qualKeep && clsKeep && dsirKeep, 1L).otherwise(0L)), lit(0L)).as("n_dsir"))
-        .first().getValuesMap[Any](Seq("n_input", "n_lang", "n_qual", "n_cls", "n_dsir"))
+      if (got.nonEmpty) counterNames.map(got(_).asInstanceOf[Long])
+      else leading.measure(docs)
     }
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    counts += "0_input" -> leading("n_input").asInstanceOf[Long]
-    if (keepLangs.nonEmpty) counts += "1_langid" -> leading("n_lang").asInstanceOf[Long]
-    counts += "2_quality" -> leading("n_qual").asInstanceOf[Long]
-    if (classifierWeights.nonEmpty) counts += "2b_classifier" -> leading("n_cls").asInstanceOf[Long]
-    if (dsirWeights.nonEmpty) counts += "2c_dsir" -> leading("n_dsir").asInstanceOf[Long]
-    stageObs.foreach { case (stage, obs, stageDf) =>
-      val got = obs.get
-      counts += stage -> got.getOrElse("n", {
+    val stageCounts = stageObs.toSeq.map { case (stage, obs, stageDf) =>
+      stage -> obs.get.getOrElse("n", {
         // a pruned CollectMetrics node costs a full recount of this stage —
         // should only ever happen on a degenerate empty stage; say so if not
         System.err.println(s"[curateObserved] observation for $stage came " +
@@ -283,13 +246,9 @@ object Curation {
     }
     mhHandle.unpersist()
     preNearDup.unpersist()
-    import spark.implicits._
-    (persisted, counts.toSeq.toDF("stage", "n_rows"))
+    (persisted, report(spark, leading.report(leadingCounts) ++ stageCounts))
   }
 
-  /** The stage-gate predicates shared by [[curate]] and [[curateObserved]]:
-    * (language keep, quality keep, classifier keep, DSIR keep) — all
-    * narrow fused-kernel columns. */
   /**
    * The daily-ingest curation loop in one call: curate a NEW batch against
    * a persisted near-dup index ([[graft.dedup.DedupIndex.saveDedupIndex]])
@@ -331,48 +290,30 @@ object Curation {
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
     val spark = batch.sparkSession
     val p = graft.dedup.DedupIndex.readIndexParams(spark, indexPath)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    var live: Option[DataFrame] = None
-    def step(stage: String, next: DataFrame): DataFrame = {
-      val persisted = next.persist(storageLevel)
-      counts += stage -> persisted.count()
-      live.foreach(_.unpersist(false))
-      live = Some(persisted)
-      persisted
-    }
-    val (langKeep, qualKeep, clsKeep, dsirKeep) = keepPredicates(
+    val stages = new Stages(storageLevel)
+    val leading = leadingStages(
       text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
-    val head = batch.agg(
-      count(lit(1)),
-      coalesce(sum(when(langKeep, 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(langKeep && qualKeep, 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(langKeep && qualKeep && clsKeep, 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(when(langKeep && qualKeep && clsKeep && dsirKeep, 1L).otherwise(0L)), lit(0L))).head()
-    counts += "0_input" -> head.getLong(0)
-    if (keepLangs.nonEmpty) counts += "1_langid" -> head.getLong(1)
-    counts += "2_quality" -> head.getLong(2)
-    if (classifierWeights.nonEmpty) counts += "2b_classifier" -> head.getLong(3)
-    if (dsirWeights.nonEmpty) counts += "2c_dsir" -> head.getLong(4)
-    var cur = batch.filter(langKeep && qualKeep && clsKeep && dsirKeep)
+    stages.counts ++= leading.report(leading.measure(batch))
+    var cur = batch.filter(leading.keep)
 
-    cur = step("3_exact", graft.dedup.Dedup.dropExactTextDuplicates(cur, text, id))
+    cur = stages.step("3_exact", graft.dedup.Dedup.dropExactTextDuplicates(cur, text, id))
 
     val mhHandle = graft.UnpersistHandle()
-    cur = step("4_neardup_batch", graft.dedup.Dedup.deduplicateMinHash(
+    cur = stages.step("4_neardup_batch", graft.dedup.Dedup.deduplicateMinHash(
       cur, id, text, p.shingleSize, p.bands, p.rowsPerBand, minHashThreshold,
       unpersistHandle = mhHandle))
     mhHandle.unpersist()
 
     val idxHandle = graft.UnpersistHandle()
-    cur = step("5_neardup_index", graft.dedup.DedupIndex.deduplicateAgainstIndex(
+    cur = stages.step("5_neardup_index", graft.dedup.DedupIndex.deduplicateAgainstIndex(
       cur, id, text, indexPath, minHashThreshold, p.maxBucketSize,
       storageLevel, idxHandle))
     idxHandle.unpersist()
 
     if (sampleRate < 1.0)
-      cur = step("6_sample", graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
+      cur = stages.step("6_sample", graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
 
     if (appendSurvivors) {
       // the append writes to the same path the survivor plan READS;
@@ -382,17 +323,74 @@ object Curation {
       // disappears from the returned frame. The survivor set is defined
       // by the PRE-append index, so pin it by truncating lineage first.
       val pinned = cur.localCheckpoint(true)
-      live.foreach(_.unpersist(false))
+      stages.live.foreach(_.unpersist(false))
       graft.dedup.DedupIndex.appendToDedupIndex(pinned, id, text, indexPath)
       cur = pinned
     }
 
     unpersistHandle.setDataFrame(cur)
-    import spark.implicits._
-    (cur, counts.toSeq.toDF("stage", "n_rows"))
+    (cur, report(spark, stages.counts.toSeq))
   }
 
-  private def keepPredicates(
+  /**
+   * Per-stage bookkeeping of [[curate]] and [[curateIncrement]]: each
+   * shuffling stage's survivors are persisted and counted, and the previous
+   * stage's cache is dropped at once, so at most two stage caches are live.
+   */
+  private final class Stages(storageLevel: StorageLevel) {
+    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    var live: Option[DataFrame] = None
+
+    def step(stage: String, next: DataFrame): DataFrame = {
+      val persisted = next.persist(storageLevel)
+      counts += stage -> persisted.count()
+      live.foreach(_.unpersist(false))
+      live = Some(persisted)
+      persisted
+    }
+  }
+
+  /** The attrition report: one `(stage, n_rows)` row per stage. */
+  private def report(spark: SparkSession, counts: Seq[(String, Long)]): DataFrame = {
+    import spark.implicits._
+    counts.toDF("stage", "n_rows")
+  }
+
+  /**
+   * The leading narrow stages shared by [[curate]], [[curateObserved]] and
+   * [[curateIncrement]]: each stage's keep predicate (language, quality,
+   * classifier, DSIR — all narrow fused-kernel columns) and whether the
+   * optional ones are on.
+   */
+  private final case class LeadingStages(
+      lang: Column, qual: Column, cls: Column, dsir: Column,
+      langOn: Boolean, clsOn: Boolean, dsirOn: Boolean) {
+    /** A row's survival of each successive stage: lang, lang && qual, … */
+    private val survives: Seq[Column] = Seq(qual, cls, dsir).scanLeft(lang)(_ && _)
+
+    /** A row survives every leading stage. */
+    val keep: Column = survives.last
+
+    /** The fused attrition aggregate: the input rows, then the rows
+      * surviving each successive stage. */
+    val counters: Seq[Column] =
+      count(lit(1)) +: survives.map(s => coalesce(sum(when(s, 1L).otherwise(0L)), lit(0L)))
+
+    /** [[counters]] computed over `df` by one direct action. */
+    def measure(df: DataFrame): Seq[Long] = {
+      val row = df.agg(counters.head, counters.tail: _*).head()
+      counters.indices.map(row.getLong)
+    }
+
+    /** Report rows `0_input, [1_langid,] 2_quality[, 2b_classifier][, 2c_dsir]`
+      * from the values of [[counters]]; a stage that is off gets no row. */
+    def report(values: Seq[Long]): Seq[(String, Long)] =
+      Seq("0_input" -> true, "1_langid" -> langOn, "2_quality" -> true,
+        "2b_classifier" -> clsOn, "2c_dsir" -> dsirOn).zip(values)
+        .collect { case ((stage, true), n) => stage -> n }
+  }
+
+  private def leadingStages(
       text: Column, keepLangs: Set[String],
       minTokens: Int, maxTokens: Int,
       minAvgTokenLen: Double, maxAvgTokenLen: Double,
@@ -400,7 +398,7 @@ object Curation {
       classifierWeights: Option[Array[Int]], classifierBias: Long,
       classifierThreshold: Long,
       dsirWeights: Option[Array[Int]], dsirThreshold: Long,
-      dsirPortableHash: Boolean): (Column, Column, Column, Column) = {
+      dsirPortableHash: Boolean): LeadingStages = {
     val langKeep: Column =
       if (keepLangs.isEmpty) lit(true)
       else graft.text.TextFunctions.langId(text, graft.text.TextFunctions.AsciiTokenPattern)
@@ -422,6 +420,7 @@ object Curation {
           text, w, portableHash = dsirPortableHash) >= dsirThreshold
       case None => lit(true)
     }
-    (langKeep, qualKeep, clsKeep, dsirKeep)
+    LeadingStages(langKeep, qualKeep, clsKeep, dsirKeep,
+      keepLangs.nonEmpty, classifierWeights.nonEmpty, dsirWeights.nonEmpty)
   }
 }

@@ -1,7 +1,8 @@
 #!/bin/bash
-# Run any graft main (Bench, Profile*, ...) via bare java with the JDK17
-# add-opens flags Spark needs outside spark-submit — same flag set as
-# tools/run_verify.sh. Usage: tools/run_main.sh <mainClass> [args...]
+# Run a local graft main (Bench, Verify, ScaleProbe, PlanDump) via bare
+# java with the JDK17 add-opens flags Spark needs outside spark-submit —
+# same flag set as tools/run_verify.sh.
+# Usage: tools/run_main.sh <mainClass> [args...]
 set -e
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift
