@@ -1092,7 +1092,7 @@ def curate(df: DataFrame, id_col: ColumnOrName, text: ColumnOrName, *,
            blocklist: DataFrame = None, blocklist_text: ColumnOrName = None,
            blocklist_shingle_size: int = 5, min_overlap: int = 1,
            sample_rate: float = 1.0, sample_salt: str = "graft",
-           dsir_portable_hash: bool = True, observed: bool = False):
+           dsir_portable_hash: bool = True):
     """End-to-end curation pass (langid -> quality -> classifier -> exact
     dedup -> minhash near-dup -> decontaminate -> hash sample). Returns
     (curated, report): curated keeps all original columns; report is one
@@ -1104,11 +1104,12 @@ def curate(df: DataFrame, id_col: ColumnOrName, text: ColumnOrName, *,
     setting the DSIR weights were fitted under (dsir_fit_weights) —
     scoring under the wrong bucket family silently misfilters. All
     configuration parameters are keyword-only so signature growth can
-    never silently shift a positional call. observed=True computes the
-    attrition report with Observation counters (one action) instead of
-    per-stage persist+count — same counts, no checkpoint semantics."""
+    never silently shift a positional call. The leading filters' counts
+    come from one fused aggregate; each shuffling stage is persisted and
+    counted once, and the curated rows are returned pinned, with no cache
+    left behind."""
     sess = df.sparkSession
-    jarr = getattr(_bridge(df), "curateObserved" if observed else "curate")(
+    jarr = _bridge(df).curate(
         df._jdf, _jcol(id_col), _jcol(text), list(keep_langs),
         int(min_tokens), int(max_tokens),
         float(min_avg_token_len), float(max_avg_token_len),

@@ -2382,13 +2382,6 @@ class GraftsparkTest(unittest.TestCase):
         prints = docs.select(
             P.winnowed_shingles(col("text"), 3, 4).alias("p")).collect()
         self.assertTrue(all(len(r["p"]) > 0 for r in prints))
-        # observe-mode curation reports the same attrition as persist-mode
-        _, rep_p = P.curate(docs, col("doc_id"), col("text"), keep_langs=[],
-                            min_tokens=1, max_tokens=10000)
-        _, rep_o = P.curate(docs, col("doc_id"), col("text"), keep_langs=[],
-                            min_tokens=1, max_tokens=10000, observed=True)
-        self.assertEqual(sorted(map(tuple, rep_p.collect())),
-                         sorted(map(tuple, rep_o.collect())))
 
     def test_parquet_zonemap_pruning(self):
         from graftspark import parquet as GP

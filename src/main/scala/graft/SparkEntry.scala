@@ -1379,33 +1379,6 @@ object SparkEntry {
       report
     }),
 
-    // the observe-mode twin: same stages, same attrition counts, ONE action
-    // (counters ride the job as Observation metrics instead of four
-    // persist+count boundaries) — the shape to prefer when the caller does
-    // not want checkpoint semantics; sbt pins observed == persisted counts.
-    // Bench note: at gate SF this can read SLOWER than persist-mode — the
-    // four persist+count actions there run over cached, shrinking survivor
-    // sets (nearly free on 50k rows) while the single action carries the
-    // whole chain once. That inversion flips at scale: one pass over the
-    // corpus beats four materializations of it, which is the operator's
-    // reason to exist.
-    "curation_report_observed" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val handle = UnpersistHandle()
-      val (_, report) = graft.pipeline.Curation.curateObserved(
-        docs, col("doc_id"), col("text"),
-        keepLangs = Set("en"),
-        minTokens = 30, maxTokens = 90,
-        minAvgTokenLen = 3.0, maxAvgTokenLen = 6.0,
-        minStopwordRatio = 0.02, maxTopBigramFraction = 0.2,
-        classifierWeights = Some(classifierGateWeights),
-        blocklist = Some((docs.filter(col("doc_id") % 97 === 0), col("text"))),
-        sampleRate = 0.25,
-        unpersistHandle = handle)
-      handle.unpersist()
-      report
-    }),
-
     // ---------------------------------------------------------------------
     // streaming operators through the batch gate: the bounded table becomes
     // an ordered file-source replay (StreamHarness), the streaming plan runs
@@ -7315,10 +7288,6 @@ object SparkEntry {
           "FROM parquet_metadata('/root/testdata/sf0.01/lineitem.parquet')")
     )
     base ++ Map(
-      // observe-mode curation computes the SAME attrition report with one
-      // action instead of four persist+count boundaries — gate it against
-      // the identical chained-pipeline oracle
-      "curation_report_observed" -> base("curation_report"),
       // streaming flags the LATER doc of each containment pair (candidates
       // collide against each print's first owner, exact verify gate-side);
       // the replay feeds originals before excerpts, so flagged == the

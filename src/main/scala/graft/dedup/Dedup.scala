@@ -30,6 +30,10 @@ object Dedup {
     * (a degenerate bucket means the feature, not the pair set, is degenerate). */
   val DefaultMaxBucketSize = 1000
 
+  /** Default cap on the distinct blocklist shingles the broadcast
+    * decontamination shapes collect to the driver: 32M shingles, 256 MB. */
+  val DefaultMaxBlocklistShingles: Long = 32L * 1024 * 1024
+
   // --------------------------------------------------------------------------
   // Exact dedup
   // --------------------------------------------------------------------------
@@ -157,9 +161,9 @@ object Dedup {
    * training corpus.
    *
    * Scale shape: the blocklist (benchmark suites) is tiny next to a 100 TB
-   * corpus, so its distinct shingle set is broadcast (`broadcastBlocklist`,
-   * default on) — the corpus-side explode+join is then narrow (no shuffle of
-   * corpus data); only the matched (doc, shingle) rows — a small set — are
+   * corpus, so its distinct shingle set is broadcast — the corpus-side
+   * explode+join is then narrow (no shuffle of corpus data); only the
+   * matched (doc, shingle) rows — a small set — are
    * shuffled for the per-doc overlap count, and the final anti-join is
    * against that small contaminated-id set. Shingles are hashed 64-bit
    * (collision odds 2^-64 — the same representation the dedup pipeline uses),
@@ -168,13 +172,11 @@ object Dedup {
   def decontaminate(
       corpus: DataFrame, id: Column, text: Column,
       blocklist: DataFrame, blocklistText: Column,
-      shingleSize: Int = 8, minOverlap: Int = 1,
-      broadcastBlocklist: Boolean = true): DataFrame = {
+      shingleSize: Int = 8, minOverlap: Int = 1): DataFrame = {
     require(minOverlap >= 1, s"minOverlap must be >= 1: $minOverlap")
-    val blockShingles = blocklist
+    val bl = broadcast(blocklist
       .select(explode(TextFunctions.hashedTextShingles(blocklistText, shingleSize)).as("__h"))
-      .distinct()
-    val bl = if (broadcastBlocklist) broadcast(blockShingles) else blockShingles
+      .distinct())
     // per-doc shingles are distinct (hashedTextShingles dedups), so the join
     // match count IS the distinct-overlap count
     val docShingles = corpus.select(
@@ -253,7 +255,7 @@ object Dedup {
       corpus: DataFrame, id: Column, text: Column,
       blocklist: DataFrame, blocklistText: Column,
       shingleSize: Int = 8, minOverlap: Int = 1,
-      maxBlocklistShingles: Long = 32L * 1024 * 1024): DataFrame = {
+      maxBlocklistShingles: Long = DefaultMaxBlocklistShingles): DataFrame = {
     require(minOverlap >= 1, s"minOverlap must be >= 1: $minOverlap")
     val probe = broadcastShingleProbe(
       corpus, text, blocklist, blocklistText, shingleSize, maxBlocklistShingles)
@@ -273,7 +275,7 @@ object Dedup {
       corpus: DataFrame, id: Column, text: Column,
       blocklist: DataFrame, blocklistText: Column,
       shingleSize: Int = 8,
-      maxBlocklistShingles: Long = 32L * 1024 * 1024): DataFrame = {
+      maxBlocklistShingles: Long = DefaultMaxBlocklistShingles): DataFrame = {
     val probe = broadcastShingleProbe(
       corpus, text, blocklist, blocklistText, shingleSize, maxBlocklistShingles)
     val nShingles = size(TextFunctions.hashedTextShingles(text, shingleSize))

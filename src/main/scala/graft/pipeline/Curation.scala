@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import graft.UnpersistHandle
+import graft.{SilentUnpersistHandle, UnpersistHandle}
+import graft.dedup.{Dedup, DedupIndex}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -76,177 +77,22 @@ object Curation {
       blocklist: Option[(DataFrame, Column)] = None,
       blocklistShingleSize: Int = 5, minOverlap: Int = 1,
       sampleRate: Double = 1.0, sampleSalt: String = "graft",
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       dsirPortableHash: Boolean = true): (DataFrame, DataFrame) = {
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
-
-    val stages = new Stages(storageLevel)
-
-    // The leading stages are pure narrow filters, so their attrition
-    // counts fuse into ONE aggregate pass over the input — no per-stage
-    // scan, no per-stage cache. The quality-survivor set itself stays lazy:
-    // it is scanned exactly once (by the exact-dedup stage), so persisting
-    // it would only add a cache write.
     val leading = leadingStages(
       text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
-    stages.counts ++= leading.report(leading.measure(docs))
-    var cur = docs.filter(leading.keep)
-
-    cur = stages.step("3_exact", graft.dedup.Dedup.dropExactTextDuplicates(cur, text, id))
-
-    // near-dup shingle cache is internal to the stage: release it as soon
-    // as the survivor set is materialized
-    val mhHandle = graft.UnpersistHandle()
-    cur = stages.step("4_neardup", graft.dedup.Dedup.deduplicateMinHash(
+    val nearDup: Step = "4_neardup" -> ((cur, handle) => Dedup.deduplicateMinHash(
       cur, id, text, shingleSize, bands, rowsPerBand, minHashThreshold,
-      unpersistHandle = mhHandle))
-    mhHandle.unpersist()
-
-    blocklist.foreach { case (bdf, btext) =>
-      cur = stages.step("5_decontaminate", graft.dedup.Dedup.decontaminate(
+      unpersistHandle = handle))
+    val decontaminate: Option[Step] = blocklist.map { case (bdf, btext) =>
+      "5_decontaminate" -> ((cur, _) => Dedup.decontaminate(
         cur, id, text, bdf, btext, blocklistShingleSize, minOverlap))
     }
-
-    if (sampleRate < 1.0)
-      cur = stages.step("6_sample", graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
-
-    unpersistHandle.setDataFrame(cur)
-    (cur, report(docs.sparkSession, stages.counts.toSeq))
-  }
-
-  /**
-   * The observe-mode twin of [[curate]]: identical stages, identical
-   * report, but the per-stage attrition counts ride the query as
-   * `Dataset.observe` counters (the [[graft.agg.Checks.observeChecks]] /
-   * StreamingCurate pattern) instead of a persist+count action per
-   * shuffling stage. ONE action — the count that warms the final survivor
-   * cache — materializes the whole chain and every counter with it.
-   *
-   * The tradeoff is checkpoint semantics: [[curate]]'s per-stage
-   * persist+count pairs give every stage boundary a cache AND an action;
-   * here the only caches are the ones consumed twice structurally (the
-   * MinHash stage's shingle frame and its input, which feeds both the
-   * candidate side and the keep-first anti-join), and there are exactly
-   * TWO actions: one that materializes the double-consumed mid-pipeline
-   * cache (so the final action's concurrent stages read it instead of
-   * racing its first computation), and the final count that warms the
-   * survivor cache and flows the remaining counters. For the
-   * narrow-dominated pipeline shape this is a strict win (4+ actions ->
-   * 2); for callers who want stage-boundary checkpoint semantics,
-   * [[curate]] stands.
-   */
-  def curateObserved(
-      docs: DataFrame, id: Column, text: Column,
-      keepLangs: Set[String] = Set("en"),
-      minTokens: Int = 50, maxTokens: Int = 100000,
-      minAvgTokenLen: Double = 3.0, maxAvgTokenLen: Double = 10.0,
-      minStopwordRatio: Double = 0.02, maxTopBigramFraction: Double = 0.18,
-      classifierWeights: Option[Array[Int]] = None,
-      classifierBias: Long = 0L, classifierThreshold: Long = 0L,
-      dsirWeights: Option[Array[Int]] = None, dsirThreshold: Long = 0L,
-      minHashThreshold: Double = 0.8, shingleSize: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 8,
-      blocklist: Option[(DataFrame, Column)] = None,
-      blocklistShingleSize: Int = 5, minOverlap: Int = 1,
-      sampleRate: Double = 1.0, sampleSalt: String = "graft",
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
-      dsirPortableHash: Boolean = true): (DataFrame, DataFrame) = {
-    require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
-
-    val spark = docs.sparkSession
-    val leading = leadingStages(
-      text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
-      minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
-      classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
-
-    // the leading fused pass becomes observe counters on the INPUT node:
-    // the same conditional sums, zero extra scans, no driver-side action
-    val obsIn = new org.apache.spark.sql.Observation("curate_leading")
-    val counterNames = Seq("n_input", "n_lang", "n_qual", "n_cls", "n_dsir")
-    val named = leading.counters.zip(counterNames).map { case (c, name) => c.as(name) }
-    var cur = docs.observe(obsIn, named.head, named.tail: _*)
-      .filter(leading.keep)
-
-    val stageObs = scala.collection.mutable.ArrayBuffer.empty[(String, org.apache.spark.sql.Observation, DataFrame)]
-    def observed(stage: String, next: DataFrame): DataFrame = {
-      val obs = new org.apache.spark.sql.Observation(s"curate_$stage")
-      val withObs = next.observe(obs, count(lit(1)).as("n"))
-      stageObs += ((stage, obs, next))
-      withObs
-    }
-
-    cur = observed("3_exact", graft.dedup.Dedup.dropExactTextDuplicates(cur, text, id))
-    // the near-dup stage consumes its input TWICE structurally (the shingle
-    // side feeding candidate pairs AND the keep-first anti-join's left
-    // side); without a stage-boundary persist the second consumer would
-    // recompute the whole upstream chain — cache it for the one action and
-    // release right after. Materialize it HERE, before the final action's
-    // stages fan out: two not-yet-materialized consumers submitted
-    // concurrently inside one job race the cache and each recompute the
-    // upstream chain (cache blocks are computed twice, stored once), which
-    // measured ~1 s slower than curate() despite fewer actions. The count
-    // flows the leading observe counters, so obsIn completes here too.
-    val preNearDup = cur.persist(storageLevel)
-    preNearDup.count()
-    val mhHandle = graft.UnpersistHandle()
-    cur = observed("4_neardup", graft.dedup.Dedup.deduplicateMinHash(
-      preNearDup, id, text, shingleSize, bands, rowsPerBand, minHashThreshold,
-      unpersistHandle = mhHandle))
-    blocklist.foreach { case (bdf, btext) =>
-      cur = observed("5_decontaminate", graft.dedup.Dedup.decontaminate(
-        cur, id, text, bdf, btext, blocklistShingleSize, minOverlap))
-    }
-    if (sampleRate < 1.0)
-      cur = observed("6_sample",
-        graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
-
-    // the single action: warms the survivor cache AND flows every counter.
-    // AQE's empty-relation propagation can replace an already-EXECUTED
-    // query-stage subtree (together with its CollectMetricsExec nodes) by
-    // EmptyRelation when a stage output turns out empty at runtime; the
-    // ObservationManager then cannot find the node in the final plan and
-    // completes the observation with an EMPTY row even though the metric
-    // accumulators fired. Keep that one rule off for this single action so
-    // stacked observes survive stages that go empty mid-pipeline; the
-    // shortcut it disables is worthless here anyway (an empty curation
-    // stage makes all downstream work trivially small).
-    val aqeExcludedKey = "spark.sql.adaptive.optimizer.excludedRules"
-    val prevExcluded = spark.conf.getOption(aqeExcludedKey)
-    val emptyRule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
-    spark.conf.set(aqeExcludedKey,
-      prevExcluded.filter(_.nonEmpty).map(_ + "," + emptyRule).getOrElse(emptyRule))
-    val persisted = cur.persist(storageLevel)
-    try persisted.count()
-    finally prevExcluded match {
-      case Some(v) => spark.conf.set(aqeExcludedKey, v)
-      case None => spark.conf.unset(aqeExcludedKey)
-    }
-    unpersistHandle.setDataFrame(persisted)
-
-    // belt-and-braces: if an observation still came back empty (a non-AQE
-    // rule pruned its node), recompute that counter with a direct action —
-    // only ever pays in the degenerate empty-stage case
-    val leadingCounts = {
-      val got = obsIn.get
-      if (got.nonEmpty) counterNames.map(got(_).asInstanceOf[Long])
-      else leading.measure(docs)
-    }
-    val stageCounts = stageObs.toSeq.map { case (stage, obs, stageDf) =>
-      stage -> obs.get.getOrElse("n", {
-        // a pruned CollectMetrics node costs a full recount of this stage —
-        // should only ever happen on a degenerate empty stage; say so if not
-        System.err.println(s"[curateObserved] observation for $stage came " +
-          "back empty; paying a direct recount")
-        stageDf.count()
-      }).asInstanceOf[Long]
-    }
-    mhHandle.unpersist()
-    preNearDup.unpersist()
-    (persisted, report(spark, leading.report(leadingCounts) ++ stageCounts))
+    runStages(docs, id, text, leading, nearDup +: decontaminate.toSeq,
+      sampleRate, sampleSalt, append = None, unpersistHandle)
   }
 
   /**
@@ -284,38 +130,75 @@ object Curation {
       minHashThreshold: Double = 0.8,
       sampleRate: Double = 1.0, sampleSalt: String = "graft",
       appendSurvivors: Boolean = true,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       dsirPortableHash: Boolean = true): (DataFrame, DataFrame) = {
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
-    val spark = batch.sparkSession
-    val p = graft.dedup.DedupIndex.readIndexParams(spark, indexPath)
-    val stages = new Stages(storageLevel)
+    val p = DedupIndex.readIndexParams(batch.sparkSession, indexPath)
     val leading = leadingStages(
       text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
-    stages.counts ++= leading.report(leading.measure(batch))
-    var cur = batch.filter(leading.keep)
-
-    cur = stages.step("3_exact", graft.dedup.Dedup.dropExactTextDuplicates(cur, text, id))
-
-    val mhHandle = graft.UnpersistHandle()
-    cur = stages.step("4_neardup_batch", graft.dedup.Dedup.deduplicateMinHash(
+    val nearDup: Step = "4_neardup_batch" -> ((cur, handle) => Dedup.deduplicateMinHash(
       cur, id, text, p.shingleSize, p.bands, p.rowsPerBand, minHashThreshold,
-      unpersistHandle = mhHandle))
-    mhHandle.unpersist()
+      unpersistHandle = handle))
+    val nearDupIndex: Step = "5_neardup_index" -> ((cur, handle) =>
+      DedupIndex.deduplicateAgainstIndex(cur, id, text, indexPath, minHashThreshold,
+        p.maxBucketSize, corpusHandle = handle))
+    val append = Option.when(appendSurvivors)(
+      (pinned: DataFrame) => DedupIndex.appendToDedupIndex(pinned, id, text, indexPath))
+    runStages(batch, id, text, leading, Seq(nearDup, nearDupIndex),
+      sampleRate, sampleSalt, append, unpersistHandle)
+  }
 
-    val idxHandle = graft.UnpersistHandle()
-    cur = stages.step("5_neardup_index", graft.dedup.DedupIndex.deduplicateAgainstIndex(
-      cur, id, text, indexPath, minHashThreshold, p.maxBucketSize,
-      storageLevel, idxHandle))
-    idxHandle.unpersist()
+  /** A shuffling stage after `3_exact`: its report name, and its body over
+    * the previous survivors. The body may give an internal cache to the
+    * handle; [[runStages]] releases it once the stage's survivors are
+    * counted. */
+  private type Step = (String, (DataFrame, UnpersistHandle) => DataFrame)
+
+  /**
+   * The stage sequence of [[curate]] and [[curateIncrement]]: the fused
+   * leading aggregate and filter, `3_exact`, each of `steps`, then
+   * `6_sample` when `sampleRate < 1`. Each shuffling stage's survivors are
+   * persisted and counted, and the previous stage's cache is dropped at
+   * once, so at most two stage caches are live. With `append`, the
+   * survivors are pinned by a local checkpoint, the last stage cache is
+   * dropped and `append` gets the pinned rows. The survivors go to
+   * `unpersistHandle`; the report is built on the driver.
+   */
+  private def runStages(
+      docs: DataFrame, id: Column, text: Column, leading: LeadingStages,
+      steps: Seq[Step], sampleRate: Double, sampleSalt: String,
+      append: Option[DataFrame => Unit],
+      unpersistHandle: UnpersistHandle): (DataFrame, DataFrame) = {
+    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    var live: Option[DataFrame] = None
+    def step(stage: String, next: DataFrame): DataFrame = {
+      val persisted = next.persist(StorageLevel.MEMORY_AND_DISK)
+      counts += stage -> persisted.count()
+      live.foreach(_.unpersist(false))
+      live = Some(persisted)
+      persisted
+    }
+
+    // The leading stages are pure narrow filters, so their attrition
+    // counts fuse into ONE aggregate pass over the input — no per-stage
+    // scan, no per-stage cache. The quality-survivor set itself stays lazy:
+    // it is scanned exactly once (by the exact-dedup stage), so persisting
+    // it would only add a cache write.
+    counts ++= leading.report(leading.measure(docs))
+    var cur = step("3_exact", Dedup.dropExactTextDuplicates(docs.filter(leading.keep), text, id))
+
+    steps.foreach { case (stage, body) =>
+      val handle = new SilentUnpersistHandle()
+      cur = step(stage, body(cur, handle))
+      handle.unpersist()
+    }
 
     if (sampleRate < 1.0)
-      cur = stages.step("6_sample", graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
+      cur = step("6_sample", graft.sample.Sampling.hashSample(cur, id, sampleRate, sampleSalt))
 
-    if (appendSurvivors) {
+    append.foreach { appendTo =>
       // the append writes to the same path the survivor plan READS;
       // Spark's cache manager re-caches path-dependent plans on write,
       // which would re-run the index dedup against the just-appended
@@ -323,74 +206,54 @@ object Curation {
       // disappears from the returned frame. The survivor set is defined
       // by the PRE-append index, so pin it by truncating lineage first.
       val pinned = cur.localCheckpoint(true)
-      stages.live.foreach(_.unpersist(false))
-      graft.dedup.DedupIndex.appendToDedupIndex(pinned, id, text, indexPath)
+      live.foreach(_.unpersist(false))
+      appendTo(pinned)
       cur = pinned
     }
 
     unpersistHandle.setDataFrame(cur)
-    (cur, report(spark, stages.counts.toSeq))
-  }
-
-  /**
-   * Per-stage bookkeeping of [[curate]] and [[curateIncrement]]: each
-   * shuffling stage's survivors are persisted and counted, and the previous
-   * stage's cache is dropped at once, so at most two stage caches are live.
-   */
-  private final class Stages(storageLevel: StorageLevel) {
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    var live: Option[DataFrame] = None
-
-    def step(stage: String, next: DataFrame): DataFrame = {
-      val persisted = next.persist(storageLevel)
-      counts += stage -> persisted.count()
-      live.foreach(_.unpersist(false))
-      live = Some(persisted)
-      persisted
-    }
-  }
-
-  /** The attrition report: one `(stage, n_rows)` row per stage. */
-  private def report(spark: SparkSession, counts: Seq[(String, Long)]): DataFrame = {
+    val spark = docs.sparkSession
     import spark.implicits._
-    counts.toDF("stage", "n_rows")
+    (cur, counts.toSeq.toDF("stage", "n_rows"))
   }
 
   /**
-   * The leading narrow stages shared by [[curate]], [[curateObserved]] and
-   * [[curateIncrement]]: each stage's keep predicate (language, quality,
-   * classifier, DSIR — all narrow fused-kernel columns) and whether the
-   * optional ones are on.
+   * The leading narrow stages shared by [[curate]], [[curateIncrement]] and
+   * [[graft.streaming.StreamingCurate]]: each stage's keep predicate
+   * (language, quality, classifier, DSIR — all narrow fused-kernel columns)
+   * and whether the optional ones are on.
    */
-  private final case class LeadingStages(
+  private[graft] final case class LeadingStages(
       lang: Column, qual: Column, cls: Column, dsir: Column,
       langOn: Boolean, clsOn: Boolean, dsirOn: Boolean) {
     /** A row's survival of each successive stage: lang, lang && qual, … */
-    private val survives: Seq[Column] = Seq(qual, cls, dsir).scanLeft(lang)(_ && _)
+    val survives: Seq[Column] = Seq(qual, cls, dsir).scanLeft(lang)(_ && _)
 
     /** A row survives every leading stage. */
     val keep: Column = survives.last
 
-    /** The fused attrition aggregate: the input rows, then the rows
-      * surviving each successive stage. */
-    val counters: Seq[Column] =
-      count(lit(1)) +: survives.map(s => coalesce(sum(when(s, 1L).otherwise(0L)), lit(0L)))
-
-    /** [[counters]] computed over `df` by one direct action. */
+    /** The fused [[attrition]] aggregate over [[survives]], computed over
+      * `df` by one direct action. */
     def measure(df: DataFrame): Seq[Long] = {
+      val counters = attrition(survives)
       val row = df.agg(counters.head, counters.tail: _*).head()
       counters.indices.map(row.getLong)
     }
 
     /** Report rows `0_input, [1_langid,] 2_quality[, 2b_classifier][, 2c_dsir]`
-      * from the values of [[counters]]; a stage that is off gets no row. */
+      * from the values of [[measure]]; a stage that is off gets no row. */
     def report(values: Seq[Long]): Seq[(String, Long)] =
       Seq("0_input" -> true, "1_langid" -> langOn, "2_quality" -> true,
         "2b_classifier" -> clsOn, "2c_dsir" -> dsirOn).zip(values)
         .collect { case ((stage, true), n) => stage -> n }
   }
 
-  private def leadingStages(
+  /** The attrition aggregate of a survival chain: the input rows, then the
+    * rows surviving each successive stage. */
+  private[graft] def attrition(survives: Seq[Column]): Seq[Column] =
+    count(lit(1)) +: survives.map(s => coalesce(sum(when(s, 1L).otherwise(0L)), lit(0L)))
+
+  private[graft] def leadingStages(
       text: Column, keepLangs: Set[String],
       minTokens: Int, maxTokens: Int,
       minAvgTokenLen: Double, maxAvgTokenLen: Double,

@@ -371,38 +371,6 @@ object PyBridge {
     Array(pinned, report)
   }
 
-  def curateObserved(df: DataFrame, id: Column, text: Column,
-                     keepLangs: JList[String],
-                     minTokens: Int, maxTokens: Int,
-                     minAvgTokenLen: Double, maxAvgTokenLen: Double,
-                     minStopwordRatio: Double, maxTopBigramFraction: Double,
-                     classifierWeights: JList[Integer],
-                     classifierBias: Long, classifierThreshold: Long,
-                     dsirWeights: JList[Integer], dsirThreshold: Long,
-                     minHashThreshold: Double, shingleSize: Int, bands: Int, rowsPerBand: Int,
-                     blocklist: DataFrame, blocklistText: Column,
-                     blocklistShingleSize: Int, minOverlap: Int,
-                     sampleRate: Double, sampleSalt: String,
-                     dsirPortableHash: Boolean): Array[DataFrame] = {
-    val handle = UnpersistHandle()
-    val (curated, report) = graft.pipeline.Curation.curateObserved(
-      df, id, text, keepLangs.asScala.toSet,
-      minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
-      minStopwordRatio, maxTopBigramFraction,
-      Option(classifierWeights).map(_.asScala.map(_.intValue()).toArray),
-      classifierBias, classifierThreshold,
-      Option(dsirWeights).map(_.asScala.map(_.intValue()).toArray), dsirThreshold,
-      minHashThreshold = minHashThreshold, shingleSize = shingleSize,
-      bands = bands, rowsPerBand = rowsPerBand,
-      blocklist = Option(blocklist).map(b => (b, blocklistText)),
-      blocklistShingleSize = blocklistShingleSize, minOverlap = minOverlap,
-      sampleRate = sampleRate, sampleSalt = sampleSalt,
-      unpersistHandle = handle, dsirPortableHash = dsirPortableHash)
-    val pinned = curated.localCheckpoint(true)
-    handle.unpersist()
-    Array(pinned, report)
-  }
-
   def containmentCandidatesStream(stream: DataFrame, id: Column, text: Column,
                                   eventTimeColumn: String, delayThreshold: String,
                                   shingleSize: Int, window: Int): DataFrame =

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.dedup.Dedup
+import graft.pipeline.Curation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -69,56 +71,34 @@ object StreamingCurate {
       "use Curation.curate for batch frames (same stages plus near-dup dedup)")
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
 
-    // stage predicates, built once so the filters and the observed counters
-    // share one definition (identical decisions by construction)
-    val langKeep: Column =
-      if (keepLangs.isEmpty) lit(true)
-      else graft.text.TextFunctions.langId(text, graft.text.TextFunctions.AsciiTokenPattern)
-        .isin(keepLangs.toSeq: _*)
-    val qualKeep: Column = graft.text.QualityFilters.gopherKeep(
-      text, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
-      minStopwordRatio, maxTopBigramFraction)
-    // the model filter is one fused kernel pass — stateless, so the stream
-    // decision is identical to the batch stage's
-    val clsKeep: Column = classifierWeights match {
-      case Some(w) =>
-        graft.text.Classifier.logit(text, w, classifierBias) >= classifierThreshold
-      case None => lit(true)
-    }
-    // dsirPortableHash must match the weights' fit setting (Dsir.fitWeights)
-    // — scoring under the wrong bucket family silently misfilters
-    val dsirKeep: Column = dsirWeights match {
-      case Some(w) =>
-        graft.functions.vectors.hashed_linear_score(
-          text, w, portableHash = dsirPortableHash) >= dsirThreshold
-      case None => lit(true)
-    }
+    // the batch pass's leading stages, continued through the two stateless
+    // filters the stream adds: the filter and the observed counters share
+    // one definition (identical decisions by construction)
+    val leading = Curation.leadingStages(
+      text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
+      minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
+      classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
     val decontKeep: Column = blocklist match {
       case Some((bdf, btext)) =>
-        val probe = graft.dedup.Dedup.broadcastShingleProbe(
-          stream, text, bdf, btext, blocklistShingleSize, 32L * 1024 * 1024)
+        val probe = Dedup.broadcastShingleProbe(
+          stream, text, bdf, btext, blocklistShingleSize, Dedup.DefaultMaxBlocklistShingles)
         probe < minOverlap || probe.isNull
       case None => lit(true)
     }
     val sampleKeep: Column =
       if (sampleRate < 1.0) graft.sample.Sampling.hashSamplePredicate(id, sampleRate, sampleSalt)
       else lit(true)
+    val survives = leading.survives ++ Seq(decontKeep, sampleKeep).scanLeft(leading.keep)(_ && _).tail
 
     var cur = stream
     observationName.foreach { name =>
-      def pass(c: Column, colName: String): Column =
-        coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L)).as(colName)
-      cur = cur.observe(name,
-        count(lit(1)).as("input_rows"),
-        pass(langKeep, "after_langid"),
-        pass(langKeep && qualKeep, "after_quality"),
-        pass(langKeep && qualKeep && clsKeep, "after_classifier"),
-        pass(langKeep && qualKeep && clsKeep && dsirKeep, "after_dsir"),
-        pass(langKeep && qualKeep && clsKeep && dsirKeep && decontKeep, "after_decontaminate"),
-        pass(langKeep && qualKeep && clsKeep && dsirKeep && decontKeep && sampleKeep, "after_sample"))
+      val counters = Curation.attrition(survives).zip(Seq("input_rows", "after_langid",
+        "after_quality", "after_classifier", "after_dsir", "after_decontaminate",
+        "after_sample")).map { case (c, counter) => c.as(counter) }
+      cur = cur.observe(name, counters.head, counters.tail: _*)
     }
 
-    cur = cur.filter(langKeep && qualKeep && clsKeep && dsirKeep && decontKeep && sampleKeep)
+    cur = cur.filter(survives.last)
 
     // stateful stage last: every earlier filter shrinks what reaches the
     // state store

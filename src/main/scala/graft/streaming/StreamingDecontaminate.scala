@@ -34,7 +34,7 @@ object StreamingDecontaminate {
       stream: DataFrame, text: Column,
       blocklist: DataFrame, blocklistText: Column,
       shingleSize: Int = 8, minOverlap: Int = 1,
-      maxBlocklistShingles: Long = 32L * 1024 * 1024): DataFrame = {
+      maxBlocklistShingles: Long = Dedup.DefaultMaxBlocklistShingles): DataFrame = {
     require(stream.isStreaming, "decontaminateStream expects a streaming DataFrame; " +
       "use Dedup.decontaminateBroadcast (same semantics) for batch frames")
     val probe = Dedup.broadcastShingleProbe(

@@ -222,14 +222,11 @@ object Packing {
       packed: DataFrame,
       capacity: Int,
       sepId: Int,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       maxSequences: Long = 1L << 22): DataFrame = {
     val fused = packed.select(col("seq_id"),
       zip_with(col("ids"), col("mask"),
         (i, m) => i * 2 + (m =!= 0).cast("int")).as("ids"))
-    unpackTokenIds(fused, capacity, sepId * 2, storageLevel,
-        unpersistHandle, maxSequences)
+    unpackTokenIds(fused, capacity, sepId * 2, maxSequences)
       .select(col("doc_idx"),
         transform(col("ids"), v => shiftright(v, 1)).as("ids"),
         transform(col("ids"), v => v.bitwiseAND(1)).as("mask"))
@@ -284,24 +281,23 @@ object Packing {
    * row per non-empty segment carrying an array SLICE (the payload is
    * O(total tokens) bytes either way, but never one row per token). The
    * segment's document index is pure arithmetic — the sequence's global
-   * separator census (one O(sequences) prefix sum, no explode) plus the
-   * segment's ordinal — which eliminates the per-token window and the
-   * per-token join the first implementation paid. The final per-document
-   * aggregation reassembles slices in global-position order (bounded by
-   * document length). `maxSequences` still bounds the QA: packed
+   * separator census (one O(sequences) prefix sum, no explode, computed
+   * and pinned when this is called) plus the segment's ordinal — which
+   * eliminates the per-token window and the per-token join the first
+   * implementation paid. The final per-document aggregation reassembles
+   * slices in global-position order (bounded by document length). The call
+   * leaves no cache behind. `maxSequences` still bounds the QA: packed
    * `seq_id`s are dense from 0, so any row with `seq_id >= maxSequences`
    * proves the pack exceeds the budget — the guard is an in-plan
-   * `assert_true` (fails the job on first violation, costs no extra
-   * action; the P112 `maxTouchedFiles` discipline). Default 2^22
-   * sequences ≈ 2^31 tokens at capacity 512; raise it deliberately, or
-   * QA a slice ([[unpackTokenIdsRange]]).
+   * `assert_true` that fails the census job on the first violation, so
+   * the call itself throws (the P112 `maxTouchedFiles` discipline).
+   * Default 2^22 sequences ≈ 2^31 tokens at capacity 512; raise it
+   * deliberately, or QA a slice ([[unpackTokenIdsRange]]).
    */
   def unpackTokenIds(
       packed: DataFrame,
       capacity: Int,
       sepId: Int,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       maxSequences: Long = 1L << 22): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     require(maxSequences > 0, s"maxSequences must be positive: $maxSequences")
@@ -310,18 +306,33 @@ object Packing {
         lit(s" >= maxSequences=$maxSequences — per-token QA over a pack " +
           "this large is a deliberate act; raise maxSequences or QA a " +
           "slice"))).isNull)
-    val perSeq = guarded.select(col("seq_id"),
-      size(filter(col("ids"), i => i === sepId)).cast("long").as("__nsep"))
-    val offsets = PrefixSum.withRunningTotal(perSeq, col("__nsep"),
-      Seq(col("seq_id")), "__sepsBefore",
-      exclusive = true, storageLevel, unpersistHandle)
-      .select(col("seq_id"), col("__sepsBefore"))
+    val offsets = separatorCensus(separatorsPerSequence(guarded, sepId))
     segmentsToDocs(guarded.join(offsets, "seq_id"), capacity, sepId)
       .groupBy(col("__docIdx").as("doc_idx"))
       .agg(flatten(transform(
         array_sort(collect_list(struct(col("__gpos"), col("__piece")))),
         x => x.getField("__piece"))).as("ids"))
       .select(col("doc_idx"), col("ids"))
+  }
+
+  /** `(seq_id, __nsep)`: the number of separators in each sequence. */
+  private def separatorsPerSequence(packed: DataFrame, sepId: Int): DataFrame =
+    packed.select(col("seq_id"),
+      size(filter(col("ids"), i => i === sepId)).cast("long").as("__nsep"))
+
+  /** The unpack family's global separator census: `(seq_id,
+    * __sepsBefore)`, the separators in all earlier sequences, from
+    * [[separatorsPerSequence]] rows. It has one row per sequence and is
+    * pinned by an eager local checkpoint, so the prefix sum's internal
+    * cache is released before the census is returned. */
+  private def separatorCensus(perSeq: DataFrame): DataFrame = {
+    val handle = UnpersistHandle()
+    val census = PrefixSum.withRunningTotal(perSeq, col("__nsep"),
+      Seq(col("seq_id")), "__sepsBefore", exclusive = true, unpersistHandle = handle)
+      .select(col("seq_id"), col("__sepsBefore"))
+      .localCheckpoint(eager = true)
+    handle.unpersist()
+    census
   }
 
   /** Shared segment explode of the unpack family: from `(seq_id, ids,
@@ -382,18 +393,12 @@ object Packing {
       capacity: Int,
       sepId: Int,
       fromSeq: Long,
-      untilSeq: Long,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+      untilSeq: Long): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     require(fromSeq >= 0 && fromSeq < untilSeq,
       s"bad sequence range: [$fromSeq, $untilSeq)")
-    val perSeq = packed.select(col("seq_id"),
-      size(filter(col("ids"), i => i === sepId)).cast("long").as("__nsep"))
-    val offsets = PrefixSum.withRunningTotal(perSeq, col("__nsep"),
-      Seq(col("seq_id")), "__sepsBefore",
-      exclusive = true, storageLevel, unpersistHandle)
-      .select(col("seq_id"), col("__sepsBefore"))
+    val perSeq = separatorsPerSequence(packed, sepId)
+    val offsets = separatorCensus(perSeq)
     // left-edge alignment + census bounds: three driver-sized scalars
     val bounds = perSeq.agg(
       coalesce(sum(when(col("seq_id") < fromSeq, col("__nsep"))), lit(0L)),

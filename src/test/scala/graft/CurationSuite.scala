@@ -537,53 +537,15 @@ class CurationSuite extends AnyFunSuite with SparkTest {
     assert(s4.select("id").as[Long].collect().isEmpty)
   }
 
-  test("curateObserved reports the same attrition as curate with one action") {
-    val docs = curationDocs
-    val blockDoc = Seq((99L, "benchmark secret answer token stream")).toDF("id", "text")
-    def run(observed: Boolean) = {
-      val handle = UnpersistHandle()
-      // sampleRate < 1 so the 6_sample stage counter is exercised too
-      val (curated, report) =
-        if (observed) graft.pipeline.Curation.curateObserved(
-          docs, col("id"), col("text"), keepLangs = Set("en"),
-          minTokens = 5, maxTokens = 1000, minAvgTokenLen = 1.0, maxAvgTokenLen = 10.0,
-          minStopwordRatio = 0.01, maxTopBigramFraction = 0.9,
-          minHashThreshold = 0.8,
-          blocklist = Some((blockDoc, col("text"))), sampleRate = 0.75,
-          unpersistHandle = handle)
-        else graft.pipeline.Curation.curate(
-          docs, col("id"), col("text"), keepLangs = Set("en"),
-          minTokens = 5, maxTokens = 1000, minAvgTokenLen = 1.0, maxAvgTokenLen = 10.0,
-          minStopwordRatio = 0.01, maxTopBigramFraction = 0.9,
-          minHashThreshold = 0.8,
-          blocklist = Some((blockDoc, col("text"))), sampleRate = 0.75,
-          unpersistHandle = handle)
-      val ids = curated.select("id").as[Long].collect().sorted.toSeq
-      val rep = report.as[(String, Long)].collect().toSeq
-      handle.unpersist()
-      (ids, rep)
-    }
-    val (idsP, repP) = run(observed = false)
-    val (idsO, repO) = run(observed = true)
-    // observe-mode counters must equal the persist+count actions row for
-    // row (same stages, same order, same values), and the survivor set
-    // must be identical
-    assert(repO == repP, s"observe $repO vs persist $repP")
-    assert(idsO == idsP)
-    assert(repO.map(_._1).contains("6_sample"))
-  }
-
-  test("curateObserved survives a stage that goes empty mid-pipeline") {
-    // regression: AQE's empty-relation propagation used to replace the
-    // executed query stages (and their CollectMetrics nodes) with
-    // EmptyRelation when the quality gate filtered everything out, so the
-    // ObservationManager completed the leading observation with an EMPTY
-    // row -> "key not found: n_input". Stopword-free docs reproduce it:
-    // the 0.02 min-stopword-ratio default rejects all three.
+  test("curate survives a stage that goes empty mid-pipeline") {
+    // the quality gate filters everything out, so every shuffling stage
+    // runs on an empty frame. Stopword-free docs: the 0.02
+    // min-stopword-ratio default rejects all three.
+    spark.catalog.clearCache() // observe only this call's caches
     val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"),
       (3L, "alpha beta gamma")).toDF("id", "text")
     val handle = UnpersistHandle()
-    val (curated, report) = graft.pipeline.Curation.curateObserved(
+    val (curated, report) = graft.pipeline.Curation.curate(
       docs, col("id"), col("text"), keepLangs = Set.empty,
       minTokens = 1, maxTokens = 1000, unpersistHandle = handle)
     assert(curated.count() == 0L)
@@ -591,6 +553,7 @@ class CurationSuite extends AnyFunSuite with SparkTest {
     assert(rep == Map("0_input" -> 3L, "2_quality" -> 0L,
       "3_exact" -> 0L, "4_neardup" -> 0L), rep.toString)
     handle.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("curate classifier stage filters by the exact kernel logit") {

@@ -82,6 +82,54 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
     assert(pairs.select("idA", "idB").as[(Long, Long)].collect().toSeq == Seq((10L, 1L)))
   }
 
+  private val curationText =
+    "the cat and the dog walked to the park and it was a fine day for all of them to play"
+
+  /** Docs for the curation pins: an exact and a near duplicate, a French
+    * doc, a short doc and a contaminated doc among English ones. */
+  private def curationDocs(from: Long) = Seq(
+    (from, s"$curationText in the sun one"),
+    (from + 1, s"$curationText in the sun one"),
+    (from + 2, s"$curationText in the sun one two"),
+    (from + 3, "le chat et le chien une promenade dans les rues pour une belle journee avec des amis"),
+    (from + 4, "it is x y"),
+    (from + 5, s"$curationText benchmark secret answer token stream here"),
+    (from + 6, "a bird sang on the wall of the old house and the children ran to see it fly away"),
+    (from + 7, "we read the book in the evening and talked about it with the rest of the family"))
+    .toDF("id", "text")
+
+  test("curation: curate with every stage on and an increment with its append") {
+    val blocklist = Seq((99L, "benchmark secret answer token stream")).toDF("id", "text")
+    val handle = UnpersistHandle()
+    val ((_, report), curateJobs) = jobsIn(graft.pipeline.Curation.curate(
+      curationDocs(1L), col("id"), col("text"),
+      minTokens = 5, minAvgTokenLen = 1.0, minStopwordRatio = 0.01,
+      maxTopBigramFraction = 0.9, blocklist = Some((blocklist, col("text"))),
+      sampleRate = 0.9, unpersistHandle = handle))
+    handle.unpersist()
+    assert(report.as[(String, Long)].collect().map(_._1).toSeq == Seq("0_input",
+      "1_langid", "2_quality", "3_exact", "4_neardup", "5_decontaminate", "6_sample"))
+
+    val idx = graft.createTemporaryDir("curation-job-budget")
+    // the index holds the first four docs, so the increment's copies of
+    // them meet the index stage and its new docs survive to the append
+    DedupIndex.saveDedupIndex(curationDocs(1L).filter(col("id") < 5), col("id"),
+      col("text"), idx)
+    val incrHandle = UnpersistHandle()
+    val ((_, incrReport), incrementJobs) = jobsIn(graft.pipeline.Curation.curateIncrement(
+      curationDocs(100L), col("id"), col("text"), idx,
+      minTokens = 5, minAvgTokenLen = 1.0, minStopwordRatio = 0.01,
+      maxTopBigramFraction = 0.9, unpersistHandle = incrHandle))
+    incrHandle.unpersist()
+    assert(incrReport.as[(String, Long)].collect().map(_._1).toSeq == Seq("0_input",
+      "1_langid", "2_quality", "3_exact", "4_neardup_batch", "5_neardup_index"))
+    info(s"jobs: curate $curateJobs, curateIncrement $incrementJobs")
+    // exact pins, not ceilings: a change to how the stages run must not
+    // move these counts unnoticed, in either direction
+    assert(curateJobs == 31, s"curate ran $curateJobs jobs")
+    assert(incrementJobs == 44, s"curateIncrement ran $incrementJobs jobs")
+  }
+
   test("snapshot diff: storing and diffing snapshots runs no schema-inference job") {
     val dirs = Seq("left", "right").map(s => graft.createTemporaryDir(s"snapshot-job-budget-$s"))
     val versions = Seq(

@@ -305,6 +305,25 @@ class ShardsSuite extends AnyFunSuite with SparkTest {
     assert(loaded == direct)
   }
 
+  test("the unpack calls leave no cache entry behind") {
+    val dir = java.nio.file.Files.createTempDirectory("shards-no-cache").toString + "/s"
+    save(dir)
+    val packed = Shards.loadShards(spark, dir).data
+    val nSeq = packed.count()
+    // mask 0 everywhere keeps the fused separator at 2 * sep
+    val masked = packed.withColumn("mask", transform(col("ids"), _ => lit(0)))
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "unpackTokenIds" -> (() => Packing.unpackTokenIds(packed, 16, sep)),
+      "unpackTokenIdsRange" -> (() => Packing.unpackTokenIdsRange(packed, 16, sep, 0, nSeq)),
+      "unpackTokenIdsWithMask" -> (() => Packing.unpackTokenIdsWithMask(masked, 16, sep)),
+      "Shards.unpackShards" -> (() => Shards.unpackShards(spark, dir))
+    ).foreach { case (name, unpack) =>
+      spark.catalog.clearCache() // observe only this call's caches
+      assert(unpack().count() == 4, name)
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a CacheManager entry")
+    }
+  }
+
   test("unpack QA budget guard fails fast past maxSequences") {
     val packed = Packing.packTokenIds(docs,
       ByteBpe.encodeIds(coalesce(col("text"), lit("")), model),

@@ -1,12 +1,15 @@
 # Compare graft.Verify output against the DuckDB oracle (driver-style).
-# Usage: python3 tools/check_oracle.py [sfDir]   (expects /tmp/verify_out)
+# Usage: python3 tools/check_oracle.py [sfDir] [outDir]
+# outDir is the directory given to tools/run_verify.sh <sfDir> <outDir>
+# (default /tmp/verify_out).
 import duckdb, json, glob, pandas as pd, numpy as np, sys
 con = duckdb.connect(); sf = sys.argv[1] if len(sys.argv)>1 else '/root/testdata/sf0.01'
 for t in ['region','nation','customer','supplier','part','orders',
           'lineitem','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
-oracle = json.load(open('/tmp/verify_out/oracle_sql.json'))
-out_dirs = [d.split('/')[-1] for d in glob.glob('/tmp/verify_out/*') if not d.endswith('.json')]
+out = sys.argv[2] if len(sys.argv)>2 else '/tmp/verify_out'
+oracle = json.load(open(f'{out}/oracle_sql.json'))
+out_dirs = [d.split('/')[-1] for d in glob.glob(f'{out}/*') if not d.endswith('.json')]
 ok, bad = [], []
 def canon(df):
     df = df.reindex(sorted(df.columns), axis=1)
@@ -17,7 +20,7 @@ def canon(df):
             df[c] = df[c].round(6)
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 for name in sorted(out_dirs):
-    files = glob.glob(f'/tmp/verify_out/{name}/*.parquet')
+    files = glob.glob(f'{out}/{name}/*.parquet')
     if not files: bad.append((name, 'no output files')); continue
     s = pd.concat([pd.read_parquet(p) for p in files])
     # The driver's comparator sorts/hashes scalar cells only — an array
