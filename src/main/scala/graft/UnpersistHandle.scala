@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Handle to unpersist a DataFrame that an operator caches internally and the
@@ -52,4 +53,10 @@ case object NoopUnpersistHandle extends UnpersistHandle {
 object UnpersistHandle {
   def apply(): UnpersistHandle = new UnpersistHandle()
   val Noop: UnpersistHandle = NoopUnpersistHandle
+
+  /** Persist an operator's internal intermediate at `MEMORY_AND_DISK` (the
+    * one level the library caches at) and register it on `handle`, so the
+    * caller can release it once the result is materialized. */
+  private[graft] def persist(df: DataFrame, handle: UnpersistHandle): DataFrame =
+    handle.setDataFrame(df.persist(StorageLevel.MEMORY_AND_DISK))
 }

@@ -5,7 +5,6 @@ import graft.UnpersistHandle
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Global prefix sums (running totals) without a single-partition window.
@@ -66,10 +65,9 @@ object PrefixSum {
       order: Seq[Column],
       outputColumn: String = "running_total",
       exclusive: Boolean = true,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     require(order.nonEmpty, "withRunningTotal needs at least one order column")
-    withRunning(df, valueCol, order, outputColumn, exclusive, storageLevel,
+    withRunning(df, valueCol, order, outputColumn, exclusive,
       unpersistHandle, "local_sum", "partition_total", sum(_: Column),
       local => coalesce(local, lit(0)),
       (local, offset) => local + coalesce(offset, lit(0)))
@@ -93,11 +91,10 @@ object PrefixSum {
       order: Seq[Column],
       outputColumn: String = "running_max",
       exclusive: Boolean = true,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     require(order.nonEmpty, "withRunningMax needs at least one order column")
     // greatest ignores nulls; both-null (first row, first partition) stays null
-    withRunning(df, valueCol, order, outputColumn, exclusive, storageLevel,
+    withRunning(df, valueCol, order, outputColumn, exclusive,
       unpersistHandle, "local_max", "partition_max", max(_: Column),
       identity, greatest(_, _))
   }
@@ -117,16 +114,12 @@ object PrefixSum {
       order: Seq[Column],
       outputColumn: String,
       exclusive: Boolean,
-      storageLevel: StorageLevel,
       unpersistHandle: UnpersistHandle,
       localName: String,
       totalName: String,
       aggregate: Column => Column,
       fillLocal: Column => Column,
       combine: (Column, Column) => Column): DataFrame = {
-    require(storageLevel != StorageLevel.NONE,
-      "storageLevel must not be NONE: the persist pins partition ids between phases")
-
     val prefix = distinctPrefixFor(df.columns.toSeq :+ outputColumn)
     val valCol = prefix + "value"
     val pidCol = prefix + "partition_id"
@@ -135,12 +128,10 @@ object PrefixSum {
     val offsetCol = prefix + "offset"
 
     // phase 1+2: order, pin pids, persist; partition-local running values
-    val withPid = df
+    val withPid = UnpersistHandle.persist(df
       .withColumn(valCol, valueCol)
       .orderBy(order: _*)
-      .withColumn(pidCol, spark_partition_id())
-      .persist(storageLevel)
-    unpersistHandle.setDataFrame(withPid)
+      .withColumn(pidCol, spark_partition_id()), unpersistHandle)
 
     val bounds =
       if (exclusive) (Window.unboundedPreceding, -1L) else (Window.unboundedPreceding, Window.currentRow)

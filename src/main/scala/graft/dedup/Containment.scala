@@ -50,21 +50,19 @@ object Containment {
       shingleSize: Int = 3, window: Int = 4,
       threshold: Double = 0.5, minShingles: Int = 10,
       maxPrintBucket: Int = 64,
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0, 1]: $threshold")
     // persisted: the kernel pass (word shingles + winnowed prints over the
     // full text — the expensive narrow work) feeds FIVE plan branches (hot
     // census, the self-join's two candidate sides, the verify's two array
     // sides); uncached, each branch re-runs the scan and both kernels
-    // (the Dedup.persistShingles discipline — release via the handle)
-    val docs = unpersistHandle.setDataFrame(df.select(
+    // (released via the handle)
+    val docs = graft.UnpersistHandle.persist(df.select(
       id.cast("long").as("__cid"),
       vectors.hashed_word_shingles(text, shingleSize).as("__sh"),
       winnow.winnowed_shingles(text, shingleSize, window).as("__wp"))
-      .filter(size(col("__sh")) >= minShingles)
-      .persist(storageLevel))
+      .filter(size(col("__sh")) >= minShingles),
+      unpersistHandle)
     val prints = docs.select(col("__cid"), explode(col("__wp")).as("__print"))
     val hot = prints.groupBy(col("__print"))
       .agg(count(lit(1)).as("__n"))

@@ -177,23 +177,18 @@ object CorpusOverlap {
    * distinct key (the estimator's own working set) and live only for the
    * duration of this call: the one-row estimate is computed EAGERLY and
    * returned as a local literal frame, and both caches are unpersisted
-   * before returning, so callers never accumulate CacheManager entries
-   * (the optional handles remain for API compatibility and see the
-   * already-released frames). The join key itself is NEVER shuffled between the
-   * tables. Every step is deterministic hash/integer/IEEE arithmetic, so
-   * the DuckDB oracle replays the estimate bit-for-bit (the u_k hex parse
-   * is 8 manual digits, the classifier-gate trick).
+   * before returning, so callers never accumulate CacheManager entries.
+   * The join key itself is NEVER shuffled between the tables. Every step
+   * is deterministic hash/integer/IEEE arithmetic, so the DuckDB oracle
+   * replays the estimate bit-for-bit (the u_k hex parse is 8 manual
+   * digits, the classifier-gate trick).
    *
    * Output, one row: `(k_used, n_heavy, heavy_mass, k_rest,
    * sum_products_rest, d_union, join_estimate)`.
    */
   def joinSizeEstimate(
       a: DataFrame, aKey: Column, b: DataFrame, bKey: Column,
-      k: Int, exactTopN: Int = 64,
-      storageLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
-      aHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop,
-      bHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame = {
+      k: Int, exactTopN: Int = 64): DataFrame = {
     val ha = a.select(md5(aKey.cast("string")).as("h")).where(col("h").isNotNull)
     val hb = b.select(md5(bKey.cast("string")).as("h")).where(col("h").isNotNull)
 
@@ -202,8 +197,9 @@ object CorpusOverlap {
     // shape above)
     def grouped(hashes: DataFrame, as: String): DataFrame = hashes
       .groupBy(col("h")).agg(count(lit(1)).as(as))
-    val ga = aHandle.setDataFrame(grouped(ha, "ca").persist(storageLevel))
-    val gb = bHandle.setDataFrame(grouped(hb, "cb").persist(storageLevel))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ga = grouped(ha, "ca")
+    val gb = grouped(hb, "cb")
     // materialize each cache ONCE before the ~10 downstream branches fan
     // out: submitted concurrently inside one action, the branches would
     // otherwise race the un-materialized cache and recompute the corpus

@@ -6,7 +6,6 @@ import graft.UnpersistHandle
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Deduplication operators for large-scale training-data pipelines.
@@ -344,25 +343,20 @@ object Dedup {
    * `jaccard >= threshold`. Output: (idA, idB, jaccard), idA < idB.
    *
    * The shingle set feeds candidate generation AND both sides of the verify
-   * join, so it is persisted at `storageLevel` (one tokenize+shingle+hash pass
-   * over the corpus instead of three; pass `StorageLevel.NONE` to recompute
-   * instead). Pass an [[UnpersistHandle]] to release the cache after the
-   * result has been materialized.
+   * join, so it is persisted (one tokenize+shingle+hash pass over the corpus
+   * instead of three). Pass an [[UnpersistHandle]] to release the cache
+   * after the result has been materialized.
    */
   def nearDupPairsMinHash(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val shingled = persistShingles(
-      df.select(id.as("id"),
-        TextFunctions.hashedTextShingles(text, shingleSize).as("shingles")),
-      storageLevel, unpersistHandle)
+    val shingled = persistShingles(df, id, text, shingleSize, unpersistHandle)
     val candidates = minHashCandidates(
       shingled, col("id"), col("shingles"), bands, rowsPerBand, maxBucketSize)
-    verifyJaccard(candidates, shingled, threshold)
+    verifyJaccard(candidates, shingled, shingled, threshold)
   }
 
   /**
@@ -395,15 +389,11 @@ object Dedup {
       shingleSize: Int = 3, bands: Int = 8, maxHamming: Int = 12,
       threshold: Double = 0.8,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val shingled = persistShingles(
-      df.select(id.as("id"),
-        TextFunctions.hashedTextShingles(text, shingleSize).as("shingles")),
-      storageLevel, unpersistHandle)
+    val shingled = persistShingles(df, id, text, shingleSize, unpersistHandle)
     val candidates = simHashCandidates(
       shingled, col("id"), col("shingles"), bands, maxHamming, maxBucketSize)
-    verifyJaccard(candidates, shingled, threshold)
+    verifyJaccard(candidates, shingled, shingled, threshold)
   }
 
   /**
@@ -427,30 +417,13 @@ object Dedup {
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       corpusHandle: UnpersistHandle = UnpersistHandle.Noop,
       referenceHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    def shingle(df: DataFrame, handle: UnpersistHandle): DataFrame = persistShingles(
-      df.select(id.as("id"), TextFunctions.hashedTextShingles(text, shingleSize).as("shingles")),
-      storageLevel, handle)
-    def explodeBands(shingled: DataFrame): DataFrame = shingled
-      .select(col("id"),
-        posexplode(vectors.minhash_band_hashes(col("shingles"), bands, rowsPerBand))
-          .as(Seq("band", "bucket")))
-    val corpusShingled = shingle(corpus, corpusHandle)
-    val refShingled = shingle(reference, referenceHandle)
-    val corpusX = pruneHotBuckets(explodeBands(corpusShingled), maxBucketSize)
-    val refX = pruneHotBuckets(explodeBands(refShingled), maxBucketSize)
-    val candidates = corpusX
-      .join(refX.withColumnRenamed("id", "__ref_id"), Seq("band", "bucket"))
-      .select(col("id").as("idA"), col("__ref_id").as("idB"))
-      .distinct() // bare 16-byte id pairs in the exchange
-    val a = corpusShingled.select(col("id").as("idA"), col("shingles").as("shinglesA"))
-    val b = refShingled.select(col("id").as("idB"), col("shingles").as("shinglesB"))
-    candidates.join(a, "idA").join(b, "idB")
-      .withColumn("jaccard", TextFunctions.jaccard(col("shinglesA"), col("shinglesB")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("idA"), col("idB"), col("jaccard"))
+    val corpusShingled = persistShingles(corpus, id, text, shingleSize, corpusHandle)
+    val refShingled = persistShingles(reference, id, text, shingleSize, referenceHandle)
+    pairsAgainst(corpusShingled, bands, rowsPerBand, maxBucketSize,
+      pruneHotBuckets(bandRows(refShingled, bands, rowsPerBand), maxBucketSize),
+      refShingled, threshold)
   }
 
   /** Drop every corpus document near-duplicating a reference document —
@@ -461,12 +434,11 @@ object Dedup {
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       corpusHandle: UnpersistHandle = UnpersistHandle.Noop,
       referenceHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     val matched = nearDupPairsMinHashAgainst(corpus, reference, id, text,
       shingleSize, bands, rowsPerBand, threshold, maxBucketSize,
-      storageLevel, corpusHandle, referenceHandle)
+      corpusHandle, referenceHandle)
       .select(col("idA").as("__drop_id")).distinct()
     corpus.join(matched, id === col("__drop_id"), "left_anti")
   }
@@ -563,22 +535,44 @@ object Dedup {
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
       maxBucketSize: Int = DefaultMaxBucketSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame =
     keepFirst(df, id, nearDupPairsMinHash(df, id, text, shingleSize, bands, rowsPerBand,
-      threshold, maxBucketSize, storageLevel, unpersistHandle))
+      threshold, maxBucketSize, unpersistHandle))
 
   // --------------------------------------------------------------------------
   // internals
   // --------------------------------------------------------------------------
 
-  /** Persist the shingle set unless disabled with `StorageLevel.NONE`;
-    * register with the caller's handle so the cache can be released. */
+  /** `(id, shingles)` rows of `df`, persisted and registered with the
+    * caller's handle so the cache can be released. */
   private[dedup] def persistShingles(
-      shingled: DataFrame, storageLevel: StorageLevel,
+      df: DataFrame, id: Column, text: Column, shingleSize: Int,
       unpersistHandle: UnpersistHandle): DataFrame =
-    if (storageLevel == StorageLevel.NONE) shingled
-    else unpersistHandle.setDataFrame(shingled.persist(storageLevel))
+    UnpersistHandle.persist(
+      df.select(id.as("id"), TextFunctions.hashedTextShingles(text, shingleSize).as("shingles")),
+      unpersistHandle)
+
+  /** One `(id, band, bucket)` row per MinHash band of each shingle set. */
+  private[dedup] def bandRows(shingled: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    shingled.select(col("id"),
+      posexplode(vectors.minhash_band_hashes(col("shingles"), bands, rowsPerBand))
+        .as(Seq("band", "bucket")))
+
+  /** The candidate + verify half of every MinHash against-reference path:
+    * band and prune the persisted corpus shingles, equi-join them against
+    * the reference side's pruned `(band, bucket, id)` rows, and verify the
+    * candidates against the reference's `(id, shingles)` rows. Output
+    * `(idA, idB, jaccard)`, idA from the corpus. */
+  private[dedup] def pairsAgainst(
+      corpusShingled: DataFrame, bands: Int, rowsPerBand: Int, maxBucketSize: Int,
+      refBuckets: DataFrame, refShingles: DataFrame, threshold: Double): DataFrame = {
+    val corpusX = pruneHotBuckets(bandRows(corpusShingled, bands, rowsPerBand), maxBucketSize)
+    val candidates = corpusX
+      .join(refBuckets.withColumnRenamed("id", "__ref_id"), Seq("band", "bucket"))
+      .select(col("id").as("idA"), col("__ref_id").as("idB"))
+      .distinct() // bare 16-byte id pairs in the exchange
+    verifyJaccard(candidates, corpusShingled, refShingles, threshold)
+  }
 
   /** Drop rows in oversized (band, bucket) groups — the same map-side-
     * combined count + left-semi join discipline as [[bucketPairsWith]], but
@@ -638,11 +632,14 @@ object Dedup {
     verify(pairs.select((aCols ++ bCols): _*)).distinct()
   }
 
-  /** Join candidate pairs back to their shingle sets and keep those with
-    * exact Jaccard >= threshold. Output (idA, idB, jaccard). */
-  private[dedup] def verifyJaccard(candidates: DataFrame, shingled: DataFrame, threshold: Double): DataFrame = {
-    val a = shingled.select(col("id").as("idA"), col("shingles").as("shinglesA"))
-    val b = shingled.select(col("id").as("idB"), col("shingles").as("shinglesB"))
+  /** Join candidate pairs back to their `(id, shingles)` rows — `sideA`'s
+    * for idA, `sideB`'s for idB (the same frame for a self-join) — and keep
+    * those with exact Jaccard >= threshold. Output (idA, idB, jaccard). */
+  private[dedup] def verifyJaccard(
+      candidates: DataFrame, sideA: DataFrame, sideB: DataFrame,
+      threshold: Double): DataFrame = {
+    val a = sideA.select(col("id").as("idA"), col("shingles").as("shinglesA"))
+    val b = sideB.select(col("id").as("idB"), col("shingles").as("shinglesB"))
     candidates
       .join(a, "idA").join(b, "idB")
       .withColumn("jaccard", TextFunctions.jaccard(col("shinglesA"), col("shinglesB")))

@@ -1,12 +1,9 @@
 package graft.dedup
 
 import graft.UnpersistHandle
-import graft.functions.vectors
 import graft.parquet.FooterStats
-import graft.text.TextFunctions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Persisted MinHash dedup index for INCREMENTAL cross-corpus dedup: the
@@ -48,9 +45,8 @@ object DedupIndex {
                      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): Unit = {
     require(shingleSize >= 1, s"shingleSize must be >= 1: $shingleSize")
     require(bands >= 1 && rowsPerBand >= 1, s"bad banding: $bands x $rowsPerBand")
-    val shingled = df
-      .select(id.as("id"), TextFunctions.hashedTextShingles(text, shingleSize).as("shingles"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // two outputs read it once each
+    // two outputs read it once each
+    val shingled = Dedup.persistShingles(df, id, text, shingleSize, UnpersistHandle.Noop)
     try {
       // materialize the cache with one narrow pass, then OVERLAP the two
       // independent output writes: the plain shingles dump rides inside the
@@ -59,17 +55,8 @@ object DedupIndex {
       shingled.count()
       graft.parallelJobs(df.sparkSession)(
         () => shingled.write.mode("overwrite").parquet(s"$path/shingles"),
-        () => {
-          val exploded = shingled.select(col("id"),
-            posexplode(vectors.minhash_band_hashes(col("shingles"), bands, rowsPerBand))
-              .as(Seq("band", "bucket")))
-          Dedup.pruneHotBuckets(exploded, maxBucketSize)
-            // cluster files by the join key so an increment's bucket join
-            // scans coherent row groups (plain parquet: no metastore
-            // bucketing needed)
-            .repartition(col("band"), col("bucket"))
-            .write.mode("overwrite").parquet(s"$path/buckets")
-        })
+        () => bucketRows(shingled, bands, rowsPerBand, maxBucketSize)
+          .write.mode("overwrite").parquet(s"$path/buckets"))
       // params last: their presence marks a COMPLETE index (one
       // driver-resident row — no Spark job)
       graft.parquet.LocalParquet.write(df.sparkSession, s"$path/params",
@@ -104,9 +91,7 @@ object DedupIndex {
   def appendToDedupIndex(df: DataFrame, id: Column, text: Column,
                          path: String): Unit = {
     val p = readIndexParams(df.sparkSession, path)
-    val shingled = df
-      .select(id.as("id"), TextFunctions.hashedTextShingles(text, p.shingleSize).as("shingles"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val shingled = Dedup.persistShingles(df, id, text, p.shingleSize, UnpersistHandle.Noop)
     try {
       // the append has NO completeness marker (unlike the save's
       // params-last), so write ORDER is the crash contract: shingles land
@@ -116,14 +101,19 @@ object DedupIndex {
       // shingles are missing (candidate pairs silently vanish). Do NOT
       // overlap these two writes.
       shingled.write.mode("append").parquet(s"$path/shingles")
-      val exploded = shingled.select(col("id"),
-        posexplode(vectors.minhash_band_hashes(col("shingles"), p.bands, p.rowsPerBand))
-          .as(Seq("band", "bucket")))
-      Dedup.pruneHotBuckets(exploded, p.maxBucketSize)
-        .repartition(col("band"), col("bucket"))
+      bucketRows(shingled, p.bands, p.rowsPerBand, p.maxBucketSize)
         .write.mode("append").parquet(s"$path/buckets")
     } finally shingled.unpersist()
   }
+
+  /** The bucket rows save and append write: band the shingle sets, drop
+    * hot buckets, and cluster files by the join key so an increment's
+    * bucket join scans coherent row groups (plain parquet: no metastore
+    * bucketing needed). */
+  private def bucketRows(shingled: DataFrame, bands: Int, rowsPerBand: Int,
+                         maxBucketSize: Int): DataFrame =
+    Dedup.pruneHotBuckets(Dedup.bandRows(shingled, bands, rowsPerBand), maxBucketSize)
+      .repartition(col("band"), col("bucket"))
 
   /** Read the saved index parameters (fails if the save never completed).
     * Driver-side read — no Spark job. */
@@ -149,35 +139,17 @@ object DedupIndex {
       corpus: DataFrame, id: Column, text: Column, path: String,
       threshold: Double = 0.8,
       maxBucketSize: Int = Dedup.DefaultMaxBucketSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       corpusHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     val spark = corpus.sparkSession
     val p = readIndexParams(spark, path)
-    val corpusShingled = Dedup.persistShingles(
-      corpus.select(id.as("id"),
-        TextFunctions.hashedTextShingles(text, p.shingleSize).as("shingles")),
-      storageLevel, corpusHandle)
-    val corpusX = Dedup.pruneHotBuckets(
-      corpusShingled.select(col("id"),
-        posexplode(vectors.minhash_band_hashes(col("shingles"), p.bands, p.rowsPerBand))
-          .as(Seq("band", "bucket"))),
-      maxBucketSize)
+    val corpusShingled = Dedup.persistShingles(corpus, id, text, p.shingleSize, corpusHandle)
     // re-prune the loaded buckets: idempotent for a single-save index (the
     // save already applied this cap), and REQUIRED after appends, where a
     // bucket can become hot only across batches
     val refBuckets = Dedup.pruneHotBuckets(
       FooterStats.readSparkWritten(spark, s"$path/buckets"), p.maxBucketSize)
-      .select(col("band"), col("bucket"), col("id").as("__ref_id"))
-    val candidates = corpusX.join(refBuckets, Seq("band", "bucket"))
-      .select(col("id").as("idA"), col("__ref_id").as("idB"))
-      .distinct() // bare id pairs in the exchange, as in the direct path
-    val a = corpusShingled.select(col("id").as("idA"), col("shingles").as("shinglesA"))
-    val b = FooterStats.readSparkWritten(spark, s"$path/shingles")
-      .select(col("id").as("idB"), col("shingles").as("shinglesB"))
-    candidates.join(a, "idA").join(b, "idB")
-      .withColumn("jaccard", TextFunctions.jaccard(col("shinglesA"), col("shinglesB")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("idA"), col("idB"), col("jaccard"))
+    Dedup.pairsAgainst(corpusShingled, p.bands, p.rowsPerBand, maxBucketSize,
+      refBuckets, FooterStats.readSparkWritten(spark, s"$path/shingles"), threshold)
   }
 
   /** Drop every increment document near-duplicating an indexed document —
@@ -186,10 +158,9 @@ object DedupIndex {
       corpus: DataFrame, id: Column, text: Column, path: String,
       threshold: Double = 0.8,
       maxBucketSize: Int = Dedup.DefaultMaxBucketSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       corpusHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     val matched = nearDupPairsAgainstIndex(corpus, id, text, path, threshold,
-      maxBucketSize, storageLevel, corpusHandle)
+      maxBucketSize, corpusHandle)
       .select(col("idA").as("__drop_id")).distinct()
     corpus.join(matched, id === col("__drop_id"), "left_anti")
   }

@@ -5,7 +5,6 @@ import graft.UnpersistHandle
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * EXACT set-similarity self-join via prefix filtering (the AllPairs /
@@ -44,23 +43,20 @@ object PrefixJoin {
   /**
    * All pairs of documents with word-shingle Jaccard >= `threshold`,
    * exactly. Output: `(idA, idB, jaccard)` with idA < idB. The shingle set
-   * feeds ranking AND verification, so it is persisted at `storageLevel`
-   * (pass `StorageLevel.NONE` to recompute; pass an [[UnpersistHandle]] to
-   * release the cache once the result is materialized).
+   * feeds ranking AND verification, so it is persisted; pass an
+   * [[UnpersistHandle]] to release the cache once the result is
+   * materialized.
    */
   def jaccardJoinPrefix(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, threshold: Double = 0.8,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val shingled0 = df.select(id.as("id"),
-      TextFunctions.hashedTextShingles(text, shingleSize).as("shingles"))
-      .filter(size(col("shingles")) >= 1)
-    val shingled =
-      if (storageLevel == StorageLevel.NONE) shingled0
-      else unpersistHandle.setDataFrame(shingled0.persist(storageLevel))
+    val shingled = UnpersistHandle.persist(
+      df.select(id.as("id"), TextFunctions.hashedTextShingles(text, shingleSize).as("shingles"))
+        .filter(size(col("shingles")) >= 1),
+      unpersistHandle)
 
     val tok = shingled.select(
       col("id"), size(col("shingles")).as("len"),
@@ -85,13 +81,7 @@ object PrefixJoin {
           col("a.len").cast("double") >= lit(threshold) * col("b.len").cast("double"))
       .select(col("a.id").as("idA"), col("b.id").as("idB"))
       .distinct()
-
-    val a = shingled.select(col("id").as("idA"), col("shingles").as("shinglesA"))
-    val b = shingled.select(col("id").as("idB"), col("shingles").as("shinglesB"))
-    cand.join(a, "idA").join(b, "idB")
-      .withColumn("jaccard", TextFunctions.jaccard(col("shinglesA"), col("shinglesB")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("idA"), col("idB"), col("jaccard"))
+    Dedup.verifyJaccard(cand, shingled, shingled, threshold)
   }
 
   /** Keep-first dedup on top of the exact join: drop every document with a
@@ -100,10 +90,8 @@ object PrefixJoin {
   def deduplicateExactJaccard(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, threshold: Double = 0.8,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val pairs = jaccardJoinPrefix(
-      df, id, text, shingleSize, threshold, storageLevel, unpersistHandle)
+    val pairs = jaccardJoinPrefix(df, id, text, shingleSize, threshold, unpersistHandle)
     Dedup.keepFirst(df, id, pairs)
   }
 }

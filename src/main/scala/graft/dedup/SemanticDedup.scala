@@ -5,7 +5,6 @@ import graft.ann.Ann
 import graft.functions.vectors
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Semantic (embedding-space) deduplication, SemDeDup-style: cluster the
@@ -29,7 +28,7 @@ import org.apache.spark.storage.StorageLevel
  *    skew guard as MinHash bucket pruning;
  *  - the within-cluster pairing is a hash-partitioned self-equi-join on the
  *    cluster id (plan-pinned: an equi-join, never a CartesianProduct); with
- *    the default persist both sides read ONE cached assignment, so the
+ *    the persist both sides read ONE cached assignment, so the
  *    kernel pass over the corpus runs once; the cosine filter runs inside
  *    the join's codegen'd output stream, so the cross product is streamed,
  *    never materialized.
@@ -49,26 +48,23 @@ object SemanticDedup {
    * both members of the same quantizer cluster, exact cosine >= threshold.
    *
    * The assignment (id, vector, cluster) feeds the cluster-size prune AND
-   * both sides of the pairing join, so it is persisted at `storageLevel`
-   * (one kernel pass instead of three; pass `StorageLevel.NONE` to
-   * recompute). Pass an [[UnpersistHandle]] to release the cache after the
-   * result has been materialized.
+   * both sides of the pairing join, so it is persisted (one kernel pass
+   * instead of three). Pass an [[UnpersistHandle]] to release the cache
+   * after the result has been materialized.
    */
   def semanticDupPairs(
       corpus: DataFrame, id: Column, vec: Column,
       index: Ann.IvfIndex, threshold: Double,
       maxClusterSize: Int = DefaultMaxClusterSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     require(threshold >= -1.0 && threshold <= 1.0,
       s"cosine threshold must be in [-1, 1], got $threshold")
     require(maxClusterSize >= 2, s"maxClusterSize must be >= 2, got $maxClusterSize")
-    val assigned0 = corpus.select(
-      id.as("id"), vec.as("__v"),
-      get(vectors.nearest_centroids(vec, index.centroids, 1), lit(0)).as("cid"))
-    val assigned =
-      if (storageLevel == StorageLevel.NONE) assigned0
-      else unpersistHandle.setDataFrame(assigned0.persist(storageLevel))
+    val assigned = UnpersistHandle.persist(
+      corpus.select(
+        id.as("id"), vec.as("__v"),
+        get(vectors.nearest_centroids(vec, index.centroids, 1), lit(0)).as("cid")),
+      unpersistHandle)
 
     // hot-cluster guard: counts first (map-side combined), then a semi-join —
     // a degenerate cluster never reaches the pairing join
@@ -93,11 +89,10 @@ object SemanticDedup {
       corpus: DataFrame, id: Column, vec: Column,
       index: Ann.IvfIndex, threshold: Double,
       maxClusterSize: Int = DefaultMaxClusterSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame =
     Dedup.keepFirst(corpus, id,
       semanticDupPairs(corpus, id, vec, index, threshold, maxClusterSize,
-        storageLevel, unpersistHandle))
+        unpersistHandle))
 
   /**
    * The SemDeDup paper's keep policy: duplicate pairs close transitively
@@ -113,10 +108,9 @@ object SemanticDedup {
       corpus: DataFrame, id: Column, vec: Column,
       index: Ann.IvfIndex, threshold: Double,
       maxClusterSize: Int = DefaultMaxClusterSize,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     val pairs = semanticDupPairs(corpus, id, vec, index, threshold,
-      maxClusterSize, storageLevel, unpersistHandle)
+      maxClusterSize, unpersistHandle)
     // farthest-from-centroid wins: score by NEGATED cosine to the assigned
     // centroid (one more narrow kernel pass; the centroids live in the plan)
     val centroidCos = vectors.nearest_centroid_cosine(vec, index.centroids)

@@ -1813,8 +1813,7 @@ object PyBridge {
                  targetFileBytes: java.lang.Number): Unit =
     graft.streaming.StreamingShards.processBatch(batch, batchId.longValue(),
       ids, order.asScala.toSeq, capacity, sepId, dir, Option(tokenizer),
-      targetFileBytes.longValue(),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      targetFileBytes.longValue())
 
   def shardsLastBatchId(spark: SparkSession, dir: String): Long =
     graft.text.Shards.lastBatchId(spark, dir)

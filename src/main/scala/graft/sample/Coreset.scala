@@ -45,15 +45,14 @@ object Coreset {
    * sequence is non-increasing — the covering-radius curve a curator
    * reads to pick k). Rows with a null embedding are excluded.
    */
-  def kCenterSelect(df: DataFrame, id: Column, vec: Column, k: Int,
-                    storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+  def kCenterSelect(df: DataFrame, id: Column, vec: Column, k: Int): DataFrame = {
     require(k > 0 && k <= 4096, s"k must be in [1, 4096]: $k")
     val spark = df.sparkSession
     val v = graft.functions.vectors
     val prep = df.filter(vec.isNotNull)
       .select(id.cast("long").as("__id"), v.int8_encode(vec).as("__c"))
       .withColumn("__nn", v.int8_dot(col("__c"), col("__c")))
-      .persist(storageLevel)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val seed = prep.orderBy(col("__id").asc).limit(1).collect()
       if (seed.isEmpty) {

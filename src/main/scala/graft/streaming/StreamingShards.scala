@@ -3,7 +3,6 @@ package graft.streaming
 import graft.text.{Shards, TokenizerArtifact}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Streaming twin of the shard artifact lifecycle: ingest an unbounded
@@ -49,14 +48,13 @@ object StreamingShards {
                    capacity: Int, sepId: Int, dir: String,
                    tokenizer: Option[TokenizerArtifact.Tokenizer],
                    checkpointDir: String,
-                   targetFileBytes: Long = 128L * 1024 * 1024,
-                   storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): StreamingQuery =
+                   targetFileBytes: Long = 128L * 1024 * 1024): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, idsCol, order, capacity, sepId, dir,
-          tokenizer, targetFileBytes, storageLevel)
+          tokenizer, targetFileBytes)
       }
       .start()
 
@@ -66,17 +64,16 @@ object StreamingShards {
       batch: DataFrame, batchId: Long, idsCol: Column, order: Seq[Column],
       capacity: Int, sepId: Int, dir: String,
       tokenizer: Option[TokenizerArtifact.Tokenizer],
-      targetFileBytes: Long, storageLevel: StorageLevel): Unit = {
+      targetFileBytes: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val paramsPath = new org.apache.hadoop.fs.Path(s"$dir/params")
     val fs = paramsPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(paramsPath)) {
       Shards.saveShards(batch, idsCol, order, capacity, sepId, dir,
-        tokenizer, targetFileBytes, storageLevel, batchId = Some(batchId))
+        tokenizer, targetFileBytes, batchId = Some(batchId))
     } else if (batchId > Shards.lastBatchId(spark, dir)) {
-      Shards.appendShards(batch, idsCol, order, dir, storageLevel,
-        batchId = Some(batchId))
+      Shards.appendShards(batch, idsCol, order, dir, batchId = Some(batchId))
     }
     // else: a redelivered batch the artifact already carries — skip
   }

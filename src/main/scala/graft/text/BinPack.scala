@@ -3,7 +3,6 @@ package graft.text
 import graft.{RowNumbers, SilentUnpersistHandle}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * No-split sequence packing — the padding-free batch layout for trainers
@@ -115,8 +114,7 @@ object BinPack {
    * order (it fixes class ranks, hence the assignment).
    */
   def packBins(df: DataFrame, tokensCol: Column, order: Seq[Column],
-               capacity: Int,
-               storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+               capacity: Int): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     // the histogram collect is bounded by the number of distinct lengths
     // <= capacity; cap it so the driver bound is a hard contract (2^22
@@ -134,7 +132,7 @@ object BinPack {
       .filter(col(nCol) > 0) // zero-token docs: nothing to place
     val handle = new SilentUnpersistHandle()
     val ranked = RowNumbers.withRowNumbers(sized, rowNumberColumnName = rnCol,
-      storageLevel = storageLevel, unpersistHandle = handle,
+      unpersistHandle = handle,
       order = col(nCol) +: order)
     try {
       // class rank = global rank - the class's min rank (classes are
@@ -189,13 +187,12 @@ object BinPack {
    * verifier certifies exactly-capacity dense packs, which bins are not.
    */
   def packBinSequences(df: DataFrame, idsCol: Column, order: Seq[Column],
-                       capacity: Int,
-                       storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+                       capacity: Int): DataFrame = {
     val withIds = df.select(
       (coalesce(idsCol, array().cast("array<int>")).as("__bp_ids") +:
         order.zipWithIndex.map { case (c, i) => c.as(s"__bo$i") }): _*)
     val assigned = packBins(withIds, size(col("__bp_ids")),
-      order.indices.map(i => col(s"__bo$i")), capacity, storageLevel)
+      order.indices.map(i => col(s"__bo$i")), capacity)
     binSequencesFromAssigned(assigned, col("__bp_ids"), capacity)
   }
 

@@ -4,7 +4,6 @@ import graft.UnpersistHandle
 import graft.agg.PrefixSum
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Sequence packing for training-data prep: assign every document a position
@@ -34,12 +33,11 @@ object Packing {
       tokensCol: Column,
       order: Seq[Column],
       capacity: Long,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     val cum = "__graft_cum_tokens"
     PrefixSum.withRunningTotal(df, tokensCol, order, cum,
-        exclusive = true, storageLevel, unpersistHandle)
+        exclusive = true, unpersistHandle)
       .withColumn("seq_id", floor(col(cum) / capacity).cast("long"))
       .withColumn("seq_offset", (col(cum) % capacity).cast("long"))
       .drop(cum)
@@ -82,7 +80,6 @@ object Packing {
       order: Seq[Column],
       capacity: Int,
       sepId: Int,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       startOffset: Long = 0L): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
@@ -100,7 +97,7 @@ object Packing {
     // running total
     val started = PrefixSum.withRunningTotal(prep, col("__n"),
       order.indices.map(i => col(s"__o$i")), "__start",
-      exclusive = true, storageLevel, unpersistHandle)
+      exclusive = true, unpersistHandle)
       .withColumn("__start", col("__start") + lit(startOffset))
     started
       .select(col("__ids"), col("__start"), col("__n"),
@@ -147,7 +144,6 @@ object Packing {
       order: Seq[Column],
       capacity: Int,
       source: Column,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       startOffset: Long = 0L): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
@@ -157,7 +153,7 @@ object Packing {
         order.zipWithIndex.map { case (c, i) => c.as(s"__o$i") }): _*)
     val started = PrefixSum.withRunningTotal(prep, col("__n"),
       order.indices.map(i => col(s"__o$i")), "__start",
-      exclusive = true, storageLevel, unpersistHandle)
+      exclusive = true, unpersistHandle)
       .withColumn("__start", col("__start") + lit(startOffset))
     started
       .select(col("source"), col("__start"), col("__n"),
@@ -200,7 +196,6 @@ object Packing {
       order: Seq[Column],
       capacity: Int,
       sepId: Int,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       startOffset: Long = 0L): DataFrame = {
     require(sepId >= 0 && sepId < (1 << 30),
@@ -208,7 +203,7 @@ object Packing {
     val fused = zip_with(idsCol, maskCol,
       (i, m) => i * 2 + (m =!= 0).cast("int"))
     packTokenIds(df, fused, order, capacity, sepId * 2,
-        storageLevel, unpersistHandle, startOffset)
+        unpersistHandle, startOffset)
       .select(col("seq_id"),
         transform(col("ids"), v => shiftright(v, 1)).as("ids"),
         transform(col("ids"), v => v.bitwiseAND(1)).as("mask"),

@@ -5,7 +5,6 @@ import graft.write.{Compaction, Manifest, SwapFiles}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Persisted training shards — the pipeline's FINAL on-disk artifact: a
@@ -62,7 +61,6 @@ object Shards {
                  capacity: Int, sepId: Int, dir: String,
                  tokenizer: Option[TokenizerArtifact.Tokenizer] = None,
                  targetFileBytes: Long = 128L * 1024 * 1024,
-                 storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                  batchId: Option[Long] = None): Long = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
     val spark = df.sparkSession
@@ -71,8 +69,7 @@ object Shards {
     // "DataFrame has to be set first" and MASK the real error
     val handle = new graft.SilentUnpersistHandle()
     try {
-      Packing.packTokenIds(df, idsCol, order, capacity, sepId,
-          storageLevel, handle)
+      Packing.packTokenIds(df, idsCol, order, capacity, sepId, handle)
         .write.mode("overwrite").parquet(s"$dir/data")
     } finally handle.unpersist()
     resizeIfOffTarget(spark, s"$dir/data", targetFileBytes)
@@ -114,7 +111,6 @@ object Shards {
    */
   def appendShards(df: DataFrame, idsCol: Column, order: Seq[Column],
                    dir: String,
-                   storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                    batchId: Option[Long] = None): Long = {
     val spark = df.sparkSession
     val dataDir = s"$dir/data"
@@ -140,7 +136,7 @@ object Shards {
     // nothing next to the pack itself.
     val obs = new org.apache.spark.sql.Observation()
     val newPacked = Packing.packTokenIds(df, idsCol, order,
-        exCapacity, exSepId, storageLevel, handle,
+        exCapacity, exSepId, handle,
         startOffset = exTotalIds)
       .observe(obs,
         count(lit(1)).as("n"),

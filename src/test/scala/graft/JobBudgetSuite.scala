@@ -6,7 +6,6 @@ import graft.diff.SnapshotDiff
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -66,6 +65,7 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
   }
 
   test("dedup index: planning an increment against it runs 0 jobs") {
+    spark.catalog.clearCache() // observe only this test's caches
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog by the river bank"),
       (2L, "a completely different sentence about parquet footers and schemas"))
@@ -76,10 +76,13 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
       .toDF("id", "text")
     // buckets/ and shingles/ schemas come from their footers, not from
     // inference jobs
+    val handle = UnpersistHandle()
     val (pairs, planJobs) = jobsIn(DedupIndex.nearDupPairsAgainstIndex(increment,
-      col("id"), col("text"), idx, storageLevel = StorageLevel.NONE))
+      col("id"), col("text"), idx, corpusHandle = handle))
     assert(planJobs == 0)
     assert(pairs.select("idA", "idB").as[(Long, Long)].collect().toSeq == Seq((10L, 1L)))
+    handle.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   private val curationText =

@@ -2090,15 +2090,24 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     best
   }
 
+  /** Run `body` with a fresh handle for the operator's internal cache and
+    * release that cache after `body`'s last action. Clears the cache first,
+    * so a following `cacheManager.isEmpty` sees only this call's caches. */
+  private def releasing[T](body: UnpersistHandle => T): T = {
+    spark.catalog.clearCache()
+    val handle = UnpersistHandle()
+    try body(handle) finally handle.unpersist()
+  }
+
   test("semanticDupPairs equals naive within-cluster brute force") {
     val data = clusteredVectors(5, 8, 16, 0.05f)
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 5, iterations = 3)
     val threshold = 0.9
-    val got = graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, threshold,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .as[(Long, Long)].collect().toSet
+    val got = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, threshold, unpersistHandle = h)
+      .as[(Long, Long)].collect().toSet)
+    assert(spark.sharedState.cacheManager.isEmpty)
     val byCluster = data.groupBy { case (_, v) => assignNaive(v, index.centroids) }
     val expected = (for {
       (_, members) <- byCluster.toSeq
@@ -2113,14 +2122,14 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val data = clusteredVectors(4, 6, 16, 0.03f)
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 4, iterations = 3)
-    val pairs = graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, 0.95,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .as[(Long, Long)].collect()
-    val kept = graft.dedup.SemanticDedup.deduplicateSemantic(
-        df, col("id"), col("vec"), index, 0.95,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .select(col("id")).as[Long].collect().toSet
+    val pairs = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, 0.95, unpersistHandle = h)
+      .as[(Long, Long)].collect())
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val kept = releasing(h => graft.dedup.SemanticDedup.deduplicateSemantic(
+        df, col("id"), col("vec"), index, 0.95, unpersistHandle = h)
+      .select(col("id")).as[Long].collect().toSet)
+    assert(spark.sharedState.cacheManager.isEmpty)
     val dropped = pairs.map(_._2).toSet
     assert(kept == data.map(_._1).toSet -- dropped)
     assert(dropped.nonEmpty)
@@ -2131,14 +2140,14 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 3, iterations = 3)
     val threshold = 0.95
-    val pairs = graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, threshold,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .as[(Long, Long)].collect()
-    val kept = graft.dedup.SemanticDedup.deduplicateSemanticKeepDiverse(
-        df, col("id"), col("vec"), index, threshold,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .select(col("id")).as[Long].collect().toSet
+    val pairs = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, threshold, unpersistHandle = h)
+      .as[(Long, Long)].collect())
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val kept = releasing(h => graft.dedup.SemanticDedup.deduplicateSemanticKeepDiverse(
+        df, col("id"), col("vec"), index, threshold, unpersistHandle = h)
+      .select(col("id")).as[Long].collect().toSet)
+    assert(spark.sharedState.cacheManager.isEmpty)
     // naive model: union-find components over the pair list; per component
     // keep argmin(cosine to nearest centroid), ties to smallest id
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -2163,14 +2172,16 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val data = clusteredVectors(2, 4, 8, 0.01f)
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 2, iterations = 3)
-    val capped = graft.dedup.SemanticDedup.semanticDupPairs(
+    val capped = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
         df, col("id"), col("vec"), index, 0.5, maxClusterSize = 3,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .count()
-    val uncapped = graft.dedup.SemanticDedup.semanticDupPairs(
+        unpersistHandle = h)
+      .count())
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val uncapped = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
         df, col("id"), col("vec"), index, 0.5, maxClusterSize = 4,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .count()
+        unpersistHandle = h)
+      .count())
+    assert(spark.sharedState.cacheManager.isEmpty)
     assert(capped == 0L, "both 4-member clusters should be pruned at cap 3")
     assert(uncapped > 0L)
   }
@@ -2179,10 +2190,10 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val data = clusteredVectors(3, 5, 8, 0.05f)
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 3, iterations = 2)
-    val formatted = graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, 0.5,
-        storageLevel = org.apache.spark.storage.StorageLevel.NONE)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    val formatted = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, 0.5, unpersistHandle = h)
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+    assert(spark.sharedState.cacheManager.isEmpty)
     assert(!formatted.contains("CartesianProduct"), formatted)
     assert(!formatted.contains("BroadcastNestedLoopJoin"), formatted)
   }

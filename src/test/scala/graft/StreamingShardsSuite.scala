@@ -3,7 +3,6 @@ package graft
 import graft.streaming.StreamingShards
 import graft.text.{ByteBpe, Shards, TokenizerArtifact}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming shard sink's micro-batch loop: bootstrap on the first
@@ -28,8 +27,7 @@ class StreamingShardsSuite extends AnyFunSuite with SparkTest {
                       dir: String): Unit =
     StreamingShards.processBatch(df, batchId, enc, Seq(col("doc_id")),
       capacity = 16, sepId = sep, dir = dir, tokenizer = tok,
-      targetFileBytes = 128L * 1024 * 1024,
-      storageLevel = StorageLevel.MEMORY_AND_DISK)
+      targetFileBytes = 128L * 1024 * 1024)
 
   private def rows(dir: String): Seq[(Long, Seq[Int], Long)] =
     Shards.loadShards(spark, dir).data

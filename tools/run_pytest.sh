@@ -7,11 +7,12 @@
 # timestamp + test count are the auditable claim; re-run this script after
 # any python/ change and commit the refreshed report.
 #
-# Usage: tools/run_pytest.sh   (from the repo root; needs the jar built —
-# runs `sbt package` itself if no jar is present)
+# Usage: tools/run_pytest.sh   (from the repo root). The tests load the jar
+# under target/scala-*/, so the script first runs the incremental
+# `sbt package`: after a Scala change pytest never runs against a stale jar.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-ls target/scala-*/[!javadoc]*.jar >/dev/null 2>&1 || sbt -batch package
+sbt -batch package
 mkdir -p target/test-reports python/test/reports
 python3 -m pytest python/test/test_graftspark.py -q \
   --junitxml=target/test-reports/pytest-report.xml
