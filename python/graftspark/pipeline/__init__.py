@@ -2906,20 +2906,13 @@ def link_records(left: DataFrame, right: DataFrame,
                  min_score_fp: int = int(0.92 * (1 << 20)),
                  max_block_pairs: int = 10_000_000,
                  extra_block_left: Optional[Sequence[ColumnOrName]] = None,
-                 extra_block_right: Optional[Sequence[ColumnOrName]] = None,
-                 persist: bool = False) -> DataFrame:
+                 extra_block_right: Optional[Sequence[ColumnOrName]] = None) -> DataFrame:
     """Record linkage: soundex-blocked candidates verified with exact
     fixed-point Jaro-Winkler -> (id_a, id_b, score_fp). Fails fast when
     the largest block would yield more than max_block_pairs candidate
     pairs (an inadequate blocking key, not a compute problem) — compose
     extra_block_left/extra_block_right (positionally paired columns) into
-    the block key to split a degenerate phonetic block.
-
-    persist defaults to FALSE here (unlike the Scala API): this wrapper
-    exposes no unpersist handles, so a cache taken out on its behalf
-    could never be released and would pin two corpora's name columns for
-    the session. The cost is one extra scan + soundex pass per side
-    (the block-size probe and the candidate join each scan once)."""
+    the block key to split a degenerate phonetic block."""
     gw = left.sparkSession._jvm  # type: ignore[union-attr]
     jl, jr = gw.java.util.ArrayList(), gw.java.util.ArrayList()
     for c in (extra_block_left or []):
@@ -2930,7 +2923,7 @@ def link_records(left: DataFrame, right: DataFrame,
     jdf = b.linkRecords(left._jdf, right._jdf, _jcol(id_left), _jcol(name_left),
                         _jcol(id_right), _jcol(name_right),
                         int(min_score_fp), int(max_block_pairs),
-                        jl, jr, bool(persist))
+                        jl, jr)
     return DataFrame(jdf, left.sparkSession)
 
 

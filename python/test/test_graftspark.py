@@ -2780,6 +2780,60 @@ class GraftsparkTest(unittest.TestCase):
         dropped = {r["idB"] for r in pairs}
         self.assertEqual(kept, {i for i in range(24)} - dropped)
 
+    def test_pipeline_pair_operators_hold_no_cache(self):
+        """Each pair operator returns its pairs pinned and leaves the JVM
+        CacheManager as it found it."""
+        from graftspark import pipeline as P
+        from pyspark.sql.types import (ArrayType, FloatType, LongType,
+                                       StructField, StructType)
+        cache = self.spark._jsparkSession.sharedState().cacheManager()
+        a = "the quick brown fox jumps over the lazy dog by the river bank"
+        b = "a completely different sentence about parquet footers and schemas"
+        c = "some other words entirely regarding sourdough bread and oven heat"
+        docs = self.spark.createDataFrame([(1, a), (2, a), (3, b)], ["id", "text"])
+        corpus = self.spark.createDataFrame([(10, a), (11, c)], ["id", "text"])
+        reference = self.spark.createDataFrame([(1, a), (2, b)], ["id", "text"])
+        idx = tempfile.mkdtemp() + "/index"
+        P.save_dedup_index(reference, "id", "text", idx)
+
+        def pairs(df):
+            return sorted((r["idA"], r["idB"]) for r in df.collect())
+
+        def ids(df):
+            return sorted(r["id"] for r in df.collect())
+
+        calls = [
+            ("near_dup_pairs_minhash", lambda: P.near_dup_pairs_minhash(
+                docs, "id", "text"), pairs, [(1, 2)]),
+            ("deduplicate_minhash", lambda: P.deduplicate_minhash(
+                docs, "id", "text"), ids, [1, 3]),
+            ("near_dup_pairs_minhash_against", lambda: P.near_dup_pairs_minhash_against(
+                corpus, reference, "id", "text"), pairs, [(10, 1)]),
+            ("jaccard_join_prefix", lambda: P.jaccard_join_prefix(
+                docs, "id", "text"), pairs, [(1, 2)]),
+            ("near_dup_pairs_against_index", lambda: P.near_dup_pairs_against_index(
+                corpus, "id", "text", idx), pairs, [(10, 1)]),
+        ]
+        for name, call, rows, expected in calls:
+            self.spark.catalog.clearCache()
+            out = call()
+            self.assertTrue(cache.isEmpty(), f"{name} left a cache entry")
+            self.assertEqual(rows(out), expected, name)
+
+        import random
+        rng = random.Random(11)
+        centers = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(3)]
+        vecs = self.spark.createDataFrame(
+            [(i, [float(x + rng.gauss(0, 0.02)) for x in centers[i % 3]])
+             for i in range(24)],
+            StructType([StructField("id", LongType()),
+                        StructField("vec", ArrayType(FloatType()))]))
+        index = P.train_ivf(vecs, col("id"), col("vec"), k=3, iterations=3)
+        self.spark.catalog.clearCache()
+        sem = P.semantic_dup_pairs(vecs, col("id"), col("vec"), index, threshold=0.99)
+        self.assertTrue(cache.isEmpty(), "semantic_dup_pairs left a cache entry")
+        self.assertTrue(len(pairs(sem)) > 0)
+
     def test_pipeline_rrf_fuse(self):
         from graftspark import pipeline as P
         a = self.spark.createDataFrame(

@@ -93,14 +93,11 @@ object ScaleProbe {
       .select((col("doc_id") + col("__rep") * 1000000L).as("doc_id"),
         regexp_replace(col("text"), lit("(\\w+ \\w+ \\w+)"),
           concat(lit("$1 r"), col("__rep").cast("string"))).as("text"))
-    val handle = UnpersistHandle()
     val (pairs, tPairs) = time {
       val p = graft.dedup.Dedup.nearDupPairsMinHash(
-        bigDocs, col("doc_id"), col("text"), threshold = 0.8, unpersistHandle = handle)
-        .localCheckpoint(true)
+        bigDocs, col("doc_id"), col("text"), threshold = 0.8)
       p.count() -> p
     }
-    handle.unpersist()
     report("minhash_pairs", pairs._1, tPairs)
 
     val (nClusters, tClusters) = time {
@@ -460,14 +457,11 @@ object ScaleProbe {
       .orderBy(col("__rep"), col("cidx"))
       .collect().map(_.getSeq[Float](2).toArray)
     val index = graft.ann.Ann.IvfIndex(bigCentroids)
-    val semHandle = UnpersistHandle()
     val (nSem, tSem) = time {
       graft.dedup.SemanticDedup.semanticDupPairs(
-        bigEmb, col("vec_id"), col("embedding"), index, threshold = 0.9,
-        unpersistHandle = semHandle)
+        bigEmb, col("vec_id"), col("embedding"), index, threshold = 0.9)
         .queryExecution.toRdd.count()
     }
-    semHandle.unpersist()
     require(nSem == n * baseCount,
       s"semantic dedup pairs: got $nSem, expected exactly ${n * baseCount}")
     report("semantic_dedup", nSem, tSem)
@@ -914,12 +908,10 @@ object ScaleProbe {
       val excerpts = big.filter(col("doc_id") % 5 === 1)
         .select((col("doc_id") + 500000000L).as("doc_id"),
           concat_ws(" ", slice(toks, 3, 30)).as("text"))
-      val h = UnpersistHandle()
       val (nPairs, t) = time {
         graft.dedup.Containment.containmentPairs(
-          big.unionAll(excerpts), col("doc_id"), col("text"), unpersistHandle = h).count()
+          big.unionAll(excerpts), col("doc_id"), col("text")).count()
       }
-      h.unpersist()
       report("containment", nPairs, t)
     }
 
@@ -1370,16 +1362,12 @@ object ScaleProbe {
         .select(col("id") + 500000000L as "id",
           concat(substring(col("name"), 1, 10),
             substring(col("name"), 12, 1000)).as("name")) // drop char 11
-      val lh = UnpersistHandle()
-      val rh = UnpersistHandle()
       val (pairs, tL) = time {
         graft.join.Linkage.linkRecords(left, right,
           col("id"), col("name"), col("id"), col("name"),
           minScoreFp = (0.90 * (1 << 20)).toLong,
-          maxBlockPairs = 500L * 1000 * 1000,
-          leftHandle = lh, rightHandle = rh).count()
+          maxBlockPairs = 500L * 1000 * 1000).count()
       }
-      lh.unpersist(); rh.unpersist()
       require(pairs > 0, "linkage probe found no pairs — perturbation too strong")
       report("linkage", pairs, tL)
     }
@@ -1467,13 +1455,9 @@ object ScaleProbe {
             regexp_replace(substring(col("text"), 201, 200),
               lit("(\\w+ \\w+ \\w+)"),
               concat(lit("$1 r"), col("__rep").cast("string")))).as("t"))
-      val handle = UnpersistHandle()
       val (cnt, tC) = time {
-        val p = graft.text.Chat.conversationNearDupPairs(
-          convs, col("id"), col("t"), threshold = 0.8,
-          unpersistHandle = handle).count()
-        handle.unpersist()
-        p
+        graft.text.Chat.conversationNearDupPairs(convs, col("id"), col("t"), threshold = 0.8)
+          .count()
       }
       report("chat_neardup", cnt, tC)
     }

@@ -2129,13 +2129,8 @@ object SparkEntry {
       val b = a.filter(col("doc_id") % 7 === 0).select(
         (col("doc_id") + 100000L).as("doc_id"),
         regexp_replace(col("tr"), "(?m)^assistant: ", "user: ").as("tr"))
-      val handle = UnpersistHandle()
-      val out = graft.text.Chat.conversationNearDupPairs(
-        a.unionAll(b), col("doc_id"), col("tr"), threshold = 0.8,
-        unpersistHandle = handle)
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
+      graft.text.Chat.conversationNearDupPairs(
+        a.unionAll(b), col("doc_id"), col("tr"), threshold = 0.8)
     }),
 
     // P124e token-accurate context trimming: the same keep-last algebra,
@@ -2213,15 +2208,9 @@ object SparkEntry {
     // block-join + greedy-Jaro spec (tools/make_golden.py).
     "record_linkage" -> ((s, dir) => {
       val inp = s.read.parquet(s"$goldenDir/linkage_input_sf001.parquet")
-      val lh = UnpersistHandle()
-      val rh = UnpersistHandle()
-      val out = graft.join.Linkage.linkRecords(
+      graft.join.Linkage.linkRecords(
         inp.filter(col("side") === "L"), inp.filter(col("side") === "R"),
-        col("rec_id"), col("name"), col("rec_id"), col("name"),
-        leftHandle = lh, rightHandle = rh)
-        .localCheckpoint(true)
-      lh.unpersist(); rh.unpersist()
-      out
+        col("rec_id"), col("name"), col("rec_id"), col("name"))
     }),
 
     // sequence packing: where each doc lands in the fixed-capacity token
@@ -3504,77 +3493,48 @@ object SparkEntry {
         .select("doc_id")
     }),
 
-    // MinHash-LSH near-dup pairs verified by exact shingle Jaccard
-    // pair list is tiny: materialize it (localCheckpoint), then release the
-    // shingle cache via the handle — the recommended library usage pattern
     // P119 near-dup explanation: the matched token runs behind each
     // verified MinHash pair — k-window hash matches merged along diagonals
     // into maximal spans (the evidence a reviewer/takedown queue needs).
     // Oracle replays pair generation, windows, diagonal islands exactly.
     "neardup_spans" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val handle = UnpersistHandle()
       val pairs = graft.dedup.Dedup.nearDupPairsMinHash(
-        docs, col("doc_id"), col("text"), threshold = 0.8,
-        unpersistHandle = handle)
-        .localCheckpoint(true)
-      handle.unpersist()
+        docs, col("doc_id"), col("text"), threshold = 0.8)
       graft.dedup.Explain.explainPairs(docs, col("doc_id"), col("text"),
         pairs, col("idA"), col("idB"), k = 3)
     }),
 
-    "dedup_minhash_pairs" -> ((s, dir) => {
-      val handle = UnpersistHandle()
-      val out = graft.dedup.Dedup.nearDupPairsMinHash(
-        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8,
-        unpersistHandle = handle)
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
-    }),
+    // MinHash-LSH near-dup pairs verified by exact shingle Jaccard
+    "dedup_minhash_pairs" -> ((s, dir) =>
+      graft.dedup.Dedup.nearDupPairsMinHash(
+        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8)),
 
     // EXACT similarity self-join via prefix filtering (AllPairs/PPJoin):
     // the same (idA, idB, jaccard) contract as dedup_minhash_pairs but
     // GUARANTEED complete — the oracle match here is a theorem, not a
     // property of the datagen's collision luck
-    "dedup_jaccard_prefix" -> ((s, dir) => {
-      val handle = UnpersistHandle()
-      val out = graft.dedup.PrefixJoin.jaccardJoinPrefix(
-        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8,
-        unpersistHandle = handle)
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
-    }),
+    "dedup_jaccard_prefix" -> ((s, dir) =>
+      graft.dedup.PrefixJoin.jaccardJoinPrefix(
+        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8)),
 
     // keep-first near-dup dedup (drop larger id of each verified pair)
-    "dedup_minhash" -> ((s, dir) => {
-      val handle = UnpersistHandle()
-      val out = graft.dedup.Dedup.deduplicateMinHash(
-        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8,
-        unpersistHandle = handle)
-        .select("doc_id")
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
-    }),
+    "dedup_minhash" -> ((s, dir) =>
+      graft.dedup.Dedup.deduplicateMinHash(
+        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8)
+        .select("doc_id")),
 
     // cross-corpus dedup (batch ingest vs an already-clean reference):
     // src10+ is "today's crawl", src0-9 the reference; candidates from an
     // equi-join of the two sides' band buckets, exact-Jaccard verified,
-    // survivors anti-joined. Both shingle caches released via handles.
+    // survivors anti-joined.
     "dedup_cross_corpus" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val isNew = expr("CAST(substring(source, 4) AS INT) >= 10")
-      val ch = UnpersistHandle()
-      val rh = UnpersistHandle()
-      val out = graft.dedup.Dedup.deduplicateAgainst(
+      graft.dedup.Dedup.deduplicateAgainst(
         docs.filter(isNew), docs.filter(!isNew), col("doc_id"), col("text"),
-        threshold = 0.8, corpusHandle = ch, referenceHandle = rh)
+        threshold = 0.8)
         .select("doc_id")
-        .localCheckpoint(true)
-      ch.unpersist(); rh.unpersist()
-      out
     }),
 
     // incremental ingest: the reference corpus's shingle sets + pruned band
@@ -3588,14 +3548,9 @@ object SparkEntry {
       val idx = graft.createTemporaryDir("dedup-index")
       graft.dedup.DedupIndex.saveDedupIndex(
         docs.filter(!isNew), col("doc_id"), col("text"), idx)
-      val ch = UnpersistHandle()
-      val out = graft.dedup.DedupIndex.deduplicateAgainstIndex(
-        docs.filter(isNew), col("doc_id"), col("text"), idx,
-        threshold = 0.8, corpusHandle = ch)
+      graft.dedup.DedupIndex.deduplicateAgainstIndex(
+        docs.filter(isNew), col("doc_id"), col("text"), idx, threshold = 0.8)
         .select("doc_id")
-        .localCheckpoint(true)
-      ch.unpersist()
-      out
     }),
 
     // P112 deletion propagation into the persisted dedup index: the same
@@ -3613,14 +3568,9 @@ object SparkEntry {
       graft.privacy.Deletion.scrubDedupIndex(s, idx,
         docs.filter(!isNew && col("doc_id") % 7 === 3).select(col("doc_id")),
         col("doc_id"))
-      val ch = UnpersistHandle()
-      val out = graft.dedup.DedupIndex.deduplicateAgainstIndex(
-        docs.filter(isNew), col("doc_id"), col("text"), idx,
-        threshold = 0.8, corpusHandle = ch)
+      graft.dedup.DedupIndex.deduplicateAgainstIndex(
+        docs.filter(isNew), col("doc_id"), col("text"), idx, threshold = 0.8)
         .select("doc_id")
-        .localCheckpoint(true)
-      ch.unpersist()
-      out
     }),
 
     // P120 per-source overlap matrix: ONE grouped KMV pass, then pairwise
@@ -3669,13 +3619,8 @@ object SparkEntry {
         .filter(col("doc_id") % 5 === 1)
         .select((col("doc_id") + 100000L).as("doc_id"),
           concat_ws(" ", slice(toks, 3, 30)).as("text"))
-      val handle = UnpersistHandle()
-      val out = graft.dedup.Containment.containmentPairs(
-          docs.unionAll(excerpts), col("doc_id"), col("text"),
-          unpersistHandle = handle)
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
+      graft.dedup.Containment.containmentPairs(
+        docs.unionAll(excerpts), col("doc_id"), col("text"))
     }),
 
     // transitive near-dup clustering: alternating large-star/small-star
@@ -3683,15 +3628,11 @@ object SparkEntry {
     // document gets its component-minimum cluster id (own id if unique).
     "dedup_clusters" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val handle = UnpersistHandle()
       val pairs = graft.dedup.Dedup.nearDupPairsMinHash(
-        docs, col("doc_id"), col("text"), threshold = 0.8, unpersistHandle = handle)
-      // assignClusters materializes the component map eagerly (localCheckpoint),
-      // so the shingle cache can be released before the final corpus join runs
-      val out = graft.dedup.Clustering.assignClusters(
+        docs, col("doc_id"), col("text"), threshold = 0.8)
+      graft.dedup.Clustering.assignClusters(
         docs.select(col("doc_id")), col("doc_id"), pairs)
-      handle.unpersist()
-      out.select(col("doc_id"), col("cluster_id"))
+        .select(col("doc_id"), col("cluster_id"))
     }),
 
     // quality-prior canonical selection: one survivor per near-dup cluster,
@@ -3699,14 +3640,12 @@ object SparkEntry {
     // as a map-side WindowGroupLimit rank-1 filter, O(clusters) shuffle rows
     "dedup_keep_best" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val handle = UnpersistHandle()
       val pairs = graft.dedup.Dedup.nearDupPairsMinHash(
-        docs, col("doc_id"), col("text"), threshold = 0.8, unpersistHandle = handle)
-      val out = graft.dedup.Clustering.keepBestByClusters(
+        docs, col("doc_id"), col("text"), threshold = 0.8)
+      graft.dedup.Clustering.keepBestByClusters(
         docs.select(col("doc_id"), length(col("text")).as("n_chars")),
         col("doc_id"), col("n_chars"), pairs)
-      handle.unpersist()
-      out.select(col("doc_id"), col("n_chars"))
+        .select(col("doc_id"), col("n_chars"))
     }),
 
     // leakage-safe split: the split hash is computed on the near-dup
@@ -3714,39 +3653,29 @@ object SparkEntry {
     // split — a doc-hash split would put copy A in train and copy B in test
     "split_leakage_safe" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val handle = UnpersistHandle()
       val pairs = graft.dedup.Dedup.nearDupPairsMinHash(
-        docs, col("doc_id"), col("text"), threshold = 0.8, unpersistHandle = handle)
-      val out = graft.dedup.Clustering.splitByClusters(
+        docs, col("doc_id"), col("text"), threshold = 0.8)
+      graft.dedup.Clustering.splitByClusters(
         docs.select(col("doc_id")), col("doc_id"), pairs,
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      handle.unpersist()
-      out.select(col("doc_id"), col("cluster_id"), col("split"))
+        .select(col("doc_id"), col("cluster_id"), col("split"))
     }),
 
     // soft dedup: near-duplicates get weight 1/cluster_size instead of
     // being dropped — every cluster contributes one unit of total weight
     "soft_dedup_weights" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val handle = UnpersistHandle()
       val pairs = graft.dedup.Dedup.nearDupPairsMinHash(
-        docs, col("doc_id"), col("text"), threshold = 0.8, unpersistHandle = handle)
-      val out = graft.dedup.Clustering.softDedupWeights(
+        docs, col("doc_id"), col("text"), threshold = 0.8)
+      graft.dedup.Clustering.softDedupWeights(
         docs.select(col("doc_id")), col("doc_id"), pairs)
-      handle.unpersist()
-      out.select(col("doc_id"), col("cluster_id"), col("dedup_weight"))
+        .select(col("doc_id"), col("cluster_id"), col("dedup_weight"))
     }),
 
     // SimHash bit-band candidates verified by exact shingle Jaccard
-    "dedup_simhash_pairs" -> ((s, dir) => {
-      val handle = UnpersistHandle()
-      val out = graft.dedup.Dedup.nearDupPairsSimHash(
-        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8,
-        unpersistHandle = handle)
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
-    }),
+    "dedup_simhash_pairs" -> ((s, dir) =>
+      graft.dedup.Dedup.nearDupPairsSimHash(
+        t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.8)),
 
     // embedding near-dup pairs — exact O(n²) baseline, retained as the
     // correctness referee for the LSH path below (DuckDB does the same O(n²))
@@ -3976,27 +3905,17 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val index = graft.ann.Ann.trainIvf(emb, col("vec_id"), col("embedding"),
         k = 16, iterations = 3)
-      val handle = UnpersistHandle()
-      val out = graft.dedup.SemanticDedup.semanticDupPairs(
-        emb, col("vec_id"), col("embedding"), index, threshold = 0.35,
-        unpersistHandle = handle)
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
+      graft.dedup.SemanticDedup.semanticDupPairs(
+        emb, col("vec_id"), col("embedding"), index, threshold = 0.35)
     }),
 
     "semantic_dedup_keep" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val index = graft.ann.Ann.trainIvf(emb, col("vec_id"), col("embedding"),
         k = 16, iterations = 3)
-      val handle = UnpersistHandle()
-      val out = graft.dedup.SemanticDedup.deduplicateSemantic(
-        emb, col("vec_id"), col("embedding"), index, threshold = 0.35,
-        unpersistHandle = handle)
+      graft.dedup.SemanticDedup.deduplicateSemantic(
+        emb, col("vec_id"), col("embedding"), index, threshold = 0.35)
         .select(col("vec_id"))
-        .localCheckpoint(true)
-      handle.unpersist()
-      out
     }),
 
     // product-quantization approximate top-k: deterministic per-subspace

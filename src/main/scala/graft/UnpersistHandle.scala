@@ -5,8 +5,12 @@ import org.apache.spark.storage.StorageLevel
 
 /**
  * Handle to unpersist a DataFrame that an operator caches internally and the
- * caller cannot reach (e.g. the persisted intermediate inside
- * [[RowNumbers.withRowNumbers]] or `writePartitionedBy`).
+ * caller cannot reach: the persisted intermediate inside
+ * [[RowNumbers.withRowNumbers]] and `writePartitionedBy` (the reference
+ * contract), and likewise inside `PrefixSum`, `Packing`, `Sampling`,
+ * `Lateness`, `Ann` and the curation result. The similarity-pair operators
+ * take no handle: they return pinned pairs and hold no cache
+ * ([[UnpersistHandle.pinned]]).
  *
  * Semantics match the reference
  * (/root/reference/src/main/scala/uk/co/gresearch/spark/UnpersistHandle.scala:27-72):
@@ -59,4 +63,21 @@ object UnpersistHandle {
     * caller can release it once the result is materialized. */
   private[graft] def persist(df: DataFrame, handle: UnpersistHandle): DataFrame =
     handle.setDataFrame(df.persist(StorageLevel.MEMORY_AND_DISK))
+
+  /** A pair operator's result, pinned: `plan` builds the pairs over the
+    * intermediates it caches through the handle it is given (any number of
+    * them), the pairs are materialized by an eager local checkpoint, and
+    * every intermediate is released before returning, so the caller gets
+    * lineage-free pairs and the CacheManager is left as it was. */
+  private[graft] def pinned(plan: UnpersistHandle => DataFrame): DataFrame = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val handle = new UnpersistHandle {
+      override private[graft] def setDataFrame(dataframe: DataFrame): DataFrame = {
+        cached += dataframe
+        dataframe
+      }
+    }
+    try plan(handle).localCheckpoint(true)
+    finally cached.foreach(_.unpersist(false))
+  }
 }

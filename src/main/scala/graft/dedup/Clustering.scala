@@ -198,30 +198,18 @@ object Clustering {
       df: DataFrame, id: Column, text: Column, score: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
-    val handle = graft.UnpersistHandle()
-    val pairs = Dedup.nearDupPairsMinHash(df, id, text, shingleSize, bands, rowsPerBand,
-      threshold, maxBucketSize, unpersistHandle = handle)
-    val out = keepBestByClusters(df, id, score, pairs)
-    handle.unpersist()
-    out
-  }
+      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
+    keepBestByClusters(df, id, score, Dedup.nearDupPairsMinHash(df, id, text,
+      shingleSize, bands, rowsPerBand, threshold, maxBucketSize))
 
   /** End-to-end: MinHash near-dup pairs -> components -> keep-min-per-component. */
   def deduplicateMinHashClusters(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
-    val handle = graft.UnpersistHandle()
-    val pairs = Dedup.nearDupPairsMinHash(df, id, text, shingleSize, bands, rowsPerBand,
-      threshold, maxBucketSize, unpersistHandle = handle)
-    // the component map is computed eagerly (localCheckpoint), so the shingle
-    // cache can be dropped before the final corpus join runs
-    val out = deduplicateByClusters(df, id, pairs)
-    handle.unpersist()
-    out
-  }
+      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
+    deduplicateByClusters(df, id, Dedup.nearDupPairsMinHash(df, id, text,
+      shingleSize, bands, rowsPerBand, threshold, maxBucketSize))
 
   /**
    * Leakage-safe train/val/test split: the split hash is computed on the

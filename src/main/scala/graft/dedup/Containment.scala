@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.UnpersistHandle
 import graft.functions.{vectors, winnow}
 
 /**
@@ -43,44 +44,45 @@ object Containment {
    * containment by one accidental shared gram — too short to mean
    * anything). `maxPrintBucket` drops prints shared by more documents than
    * that (boilerplate runs — cap, count, and move on, the MinHash
-   * hot-bucket discipline).
+   * hot-bucket discipline). The call returns pinned pairs and holds no
+   * cache.
    */
   def containmentPairs(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, window: Int = 4,
       threshold: Double = 0.5, minShingles: Int = 10,
-      maxPrintBucket: Int = 64,
-      unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame = {
+      maxPrintBucket: Int = 64): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold in (0, 1]: $threshold")
-    // persisted: the kernel pass (word shingles + winnowed prints over the
-    // full text — the expensive narrow work) feeds FIVE plan branches (hot
-    // census, the self-join's two candidate sides, the verify's two array
-    // sides); uncached, each branch re-runs the scan and both kernels
-    // (released via the handle)
-    val docs = graft.UnpersistHandle.persist(df.select(
-      id.cast("long").as("__cid"),
-      vectors.hashed_word_shingles(text, shingleSize).as("__sh"),
-      winnow.winnowed_shingles(text, shingleSize, window).as("__wp"))
-      .filter(size(col("__sh")) >= minShingles),
-      unpersistHandle)
-    val prints = docs.select(col("__cid"), explode(col("__wp")).as("__print"))
-    val hot = prints.groupBy(col("__print"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxPrintBucket)
-      .select(col("__print"))
-    val cold = prints.join(hot, Seq("__print"), "left_anti")
-    val cand = cold.select(col("__print"), col("__cid").as("ia"))
-      .join(cold.select(col("__print"), col("__cid").as("ib")), Seq("__print"))
-      .filter(col("ia") < col("ib"))
-      .select(col("ia"), col("ib"))
-      .distinct()
-    cand
-      .join(docs.select(col("__cid").as("ia"), col("__sh").as("__sa")), Seq("ia"))
-      .join(docs.select(col("__cid").as("ib"), col("__sh").as("__sb")), Seq("ib"))
-      .select(col("ia").as("idA"), col("ib").as("idB"),
-        (size(array_intersect(col("__sa"), col("__sb"))).cast("double") /
-          least(size(col("__sa")), size(col("__sb"))).cast("double"))
-          .as("containment"))
-      .filter(col("containment") >= lit(threshold))
+    UnpersistHandle.pinned { handle =>
+      // persisted: the kernel pass (word shingles + winnowed prints over the
+      // full text — the expensive narrow work) feeds FIVE plan branches (hot
+      // census, the self-join's two candidate sides, the verify's two array
+      // sides); uncached, each branch re-runs the scan and both kernels
+      val docs = UnpersistHandle.persist(df.select(
+        id.cast("long").as("__cid"),
+        vectors.hashed_word_shingles(text, shingleSize).as("__sh"),
+        winnow.winnowed_shingles(text, shingleSize, window).as("__wp"))
+        .filter(size(col("__sh")) >= minShingles),
+        handle)
+      val prints = docs.select(col("__cid"), explode(col("__wp")).as("__print"))
+      val hot = prints.groupBy(col("__print"))
+        .agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > maxPrintBucket)
+        .select(col("__print"))
+      val cold = prints.join(hot, Seq("__print"), "left_anti")
+      val cand = cold.select(col("__print"), col("__cid").as("ia"))
+        .join(cold.select(col("__print"), col("__cid").as("ib")), Seq("__print"))
+        .filter(col("ia") < col("ib"))
+        .select(col("ia"), col("ib"))
+        .distinct()
+      cand
+        .join(docs.select(col("__cid").as("ia"), col("__sh").as("__sa")), Seq("ia"))
+        .join(docs.select(col("__cid").as("ib"), col("__sh").as("__sb")), Seq("ib"))
+        .select(col("ia").as("idA"), col("ib").as("idB"),
+          (size(array_intersect(col("__sa"), col("__sb"))).cast("double") /
+            least(size(col("__sa")), size(col("__sb"))).cast("double"))
+            .as("containment"))
+        .filter(col("containment") >= lit(threshold))
+    }
   }
 }

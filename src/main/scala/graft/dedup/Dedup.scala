@@ -343,17 +343,25 @@ object Dedup {
    * `jaccard >= threshold`. Output: (idA, idB, jaccard), idA < idB.
    *
    * The shingle set feeds candidate generation AND both sides of the verify
-   * join, so it is persisted (one tokenize+shingle+hash pass over the corpus
-   * instead of three). Pass an [[UnpersistHandle]] to release the cache
-   * after the result has been materialized.
+   * join, so it is cached for the call (one tokenize+shingle+hash pass over
+   * the corpus instead of three). The call returns pinned pairs and holds
+   * no cache.
    */
   def nearDupPairsMinHash(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val shingled = persistShingles(df, id, text, shingleSize, unpersistHandle)
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    UnpersistHandle.pinned(minHashPairs(df, id, text, shingleSize, bands, rowsPerBand,
+      threshold, maxBucketSize, _))
+
+  /** The lazy plan of [[nearDupPairsMinHash]], its shingle cache given to
+    * `handle`: the body curation runs under its own stage handle. */
+  private[graft] def minHashPairs(
+      df: DataFrame, id: Column, text: Column,
+      shingleSize: Int, bands: Int, rowsPerBand: Int, threshold: Double,
+      maxBucketSize: Int, handle: UnpersistHandle): DataFrame = {
+    val shingled = UnpersistHandle.persist(shingles(df, id, text, shingleSize), handle)
     val candidates = minHashCandidates(
       shingled, col("id"), col("shingles"), bands, rowsPerBand, maxBucketSize)
     verifyJaccard(candidates, shingled, shingled, threshold)
@@ -383,18 +391,19 @@ object Dedup {
   }
 
   /** SimHash-candidate near-dup pairs verified by exact shingle Jaccard.
-    * Shingles are persisted as in [[nearDupPairsMinHash]]. */
+    * Shingles are cached for the call, and the pairs returned pinned, as in
+    * [[nearDupPairsMinHash]]. */
   def nearDupPairsSimHash(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 8, maxHamming: Int = 12,
       threshold: Double = 0.8,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val shingled = persistShingles(df, id, text, shingleSize, unpersistHandle)
-    val candidates = simHashCandidates(
-      shingled, col("id"), col("shingles"), bands, maxHamming, maxBucketSize)
-    verifyJaccard(candidates, shingled, shingled, threshold)
-  }
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    UnpersistHandle.pinned { handle =>
+      val shingled = UnpersistHandle.persist(shingles(df, id, text, shingleSize), handle)
+      val candidates = simHashCandidates(
+        shingled, col("id"), col("shingles"), bands, maxHamming, maxBucketSize)
+      verifyJaccard(candidates, shingled, shingled, threshold)
+    }
 
   /**
    * CROSS-CORPUS near-dup pairs: each corpus document against a reference
@@ -404,7 +413,8 @@ object Dedup {
    * work). Output: `(idA, idB, jaccard)` with idA from `corpus`, idB from
    * `reference`, word-shingle Jaccard >= `threshold`.
    *
-   * Scale shape: both sides shingle once (persisted, handles releasable);
+   * Scale shape: both sides shingle once (cached for the call, which
+   * returns pinned pairs and holds no cache);
    * candidates come from an EQUI-join of the two sides' (band, bucket)
    * explosions — never a within-bucket pair blow-up across the union. Hot
    * buckets are counted and capped per side BEFORE the join (same
@@ -416,15 +426,14 @@ object Dedup {
       corpus: DataFrame, reference: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      corpusHandle: UnpersistHandle = UnpersistHandle.Noop,
-      referenceHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val corpusShingled = persistShingles(corpus, id, text, shingleSize, corpusHandle)
-    val refShingled = persistShingles(reference, id, text, shingleSize, referenceHandle)
-    pairsAgainst(corpusShingled, bands, rowsPerBand, maxBucketSize,
-      pruneHotBuckets(bandRows(refShingled, bands, rowsPerBand), maxBucketSize),
-      refShingled, threshold)
-  }
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    UnpersistHandle.pinned { handle =>
+      val corpusShingled = UnpersistHandle.persist(shingles(corpus, id, text, shingleSize), handle)
+      val refShingled = UnpersistHandle.persist(shingles(reference, id, text, shingleSize), handle)
+      pairsAgainst(corpusShingled, bands, rowsPerBand, maxBucketSize,
+        pruneHotBuckets(bandRows(refShingled, bands, rowsPerBand), maxBucketSize),
+        refShingled, threshold)
+    }
 
   /** Drop every corpus document near-duplicating a reference document —
     * [[nearDupPairsMinHashAgainst]] applied as an anti-join on the corpus
@@ -433,15 +442,9 @@ object Dedup {
       corpus: DataFrame, reference: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      corpusHandle: UnpersistHandle = UnpersistHandle.Noop,
-      referenceHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val matched = nearDupPairsMinHashAgainst(corpus, reference, id, text,
-      shingleSize, bands, rowsPerBand, threshold, maxBucketSize,
-      corpusHandle, referenceHandle)
-      .select(col("idA").as("__drop_id")).distinct()
-    corpus.join(matched, id === col("__drop_id"), "left_anti")
-  }
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    dropMatched(corpus, id, nearDupPairsMinHashAgainst(corpus, reference, id, text,
+      shingleSize, bands, rowsPerBand, threshold, maxBucketSize))
 
   // --------------------------------------------------------------------------
   // Embedding near-dup
@@ -529,28 +532,31 @@ object Dedup {
     df.join(drops, id === col("__drop_id"), "left_anti")
   }
 
+  /** Drop every corpus row whose id appears as the corpus member (idA) of
+    * a pair against a reference — the against-reference anti-join. */
+  private[graft] def dropMatched(corpus: DataFrame, id: Column, pairs: DataFrame): DataFrame = {
+    val matched = pairs.select(col("idA").as("__drop_id")).distinct()
+    corpus.join(matched, id === col("__drop_id"), "left_anti")
+  }
+
   /** End-to-end MinHash near-dup dedup: keep first of every duplicate set. */
   def deduplicateMinHash(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame =
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
     keepFirst(df, id, nearDupPairsMinHash(df, id, text, shingleSize, bands, rowsPerBand,
-      threshold, maxBucketSize, unpersistHandle))
+      threshold, maxBucketSize))
 
   // --------------------------------------------------------------------------
   // internals
   // --------------------------------------------------------------------------
 
-  /** `(id, shingles)` rows of `df`, persisted and registered with the
-    * caller's handle so the cache can be released. */
-  private[dedup] def persistShingles(
-      df: DataFrame, id: Column, text: Column, shingleSize: Int,
-      unpersistHandle: UnpersistHandle): DataFrame =
-    UnpersistHandle.persist(
-      df.select(id.as("id"), TextFunctions.hashedTextShingles(text, shingleSize).as("shingles")),
-      unpersistHandle)
+  /** `(id, shingles)` rows of `df`: the hashed word-shingle sets every
+    * MinHash path caches. */
+  private[dedup] def shingles(
+      df: DataFrame, id: Column, text: Column, shingleSize: Int): DataFrame =
+    df.select(id.as("id"), TextFunctions.hashedTextShingles(text, shingleSize).as("shingles"))
 
   /** One `(id, band, bucket)` row per MinHash band of each shingle set. */
   private[dedup] def bandRows(shingled: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =

@@ -4,6 +4,7 @@ import graft.UnpersistHandle
 import graft.parquet.FooterStats
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Persisted MinHash dedup index for INCREMENTAL cross-corpus dedup: the
@@ -46,7 +47,7 @@ object DedupIndex {
     require(shingleSize >= 1, s"shingleSize must be >= 1: $shingleSize")
     require(bands >= 1 && rowsPerBand >= 1, s"bad banding: $bands x $rowsPerBand")
     // two outputs read it once each
-    val shingled = Dedup.persistShingles(df, id, text, shingleSize, UnpersistHandle.Noop)
+    val shingled = Dedup.shingles(df, id, text, shingleSize).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // materialize the cache with one narrow pass, then OVERLAP the two
       // independent output writes: the plain shingles dump rides inside the
@@ -91,7 +92,7 @@ object DedupIndex {
   def appendToDedupIndex(df: DataFrame, id: Column, text: Column,
                          path: String): Unit = {
     val p = readIndexParams(df.sparkSession, path)
-    val shingled = Dedup.persistShingles(df, id, text, p.shingleSize, UnpersistHandle.Noop)
+    val shingled = Dedup.shingles(df, id, text, p.shingleSize).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // the append has NO completeness marker (unlike the save's
       // params-last), so write ORDER is the crash contract: shingles land
@@ -134,15 +135,27 @@ object DedupIndex {
    * equi-join of its pruned `(band, bucket)` rows against the saved bucket
    * table; candidate dedup shuffles bare id pairs; the exact verify joins
    * the saved shingle arrays by id — reference text is never read at all.
+   * The increment's shingles are cached for the call, which returns pinned
+   * pairs and holds no cache.
    */
   def nearDupPairsAgainstIndex(
       corpus: DataFrame, id: Column, text: Column, path: String,
       threshold: Double = 0.8,
-      maxBucketSize: Int = Dedup.DefaultMaxBucketSize,
-      corpusHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
+    UnpersistHandle.pinned(pairsAgainstIndex(corpus, id, text, path, threshold,
+      maxBucketSize, _))
+
+  /** The lazy plan of [[nearDupPairsAgainstIndex]], its shingle cache given
+    * to `handle`: the body curation runs under its own stage handle.
+    * Planning it runs no Spark job (the saved tables' schemas come from
+    * their footers). */
+  private[graft] def pairsAgainstIndex(
+      corpus: DataFrame, id: Column, text: Column, path: String,
+      threshold: Double, maxBucketSize: Int, handle: UnpersistHandle): DataFrame = {
     val spark = corpus.sparkSession
     val p = readIndexParams(spark, path)
-    val corpusShingled = Dedup.persistShingles(corpus, id, text, p.shingleSize, corpusHandle)
+    val corpusShingled = UnpersistHandle.persist(
+      Dedup.shingles(corpus, id, text, p.shingleSize), handle)
     // re-prune the loaded buckets: idempotent for a single-save index (the
     // save already applied this cap), and REQUIRED after appends, where a
     // bucket can become hot only across batches
@@ -157,11 +170,7 @@ object DedupIndex {
   def deduplicateAgainstIndex(
       corpus: DataFrame, id: Column, text: Column, path: String,
       threshold: Double = 0.8,
-      maxBucketSize: Int = Dedup.DefaultMaxBucketSize,
-      corpusHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val matched = nearDupPairsAgainstIndex(corpus, id, text, path, threshold,
-      maxBucketSize, corpusHandle)
-      .select(col("idA").as("__drop_id")).distinct()
-    corpus.join(matched, id === col("__drop_id"), "left_anti")
-  }
+      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
+    Dedup.dropMatched(corpus, id,
+      nearDupPairsAgainstIndex(corpus, id, text, path, threshold, maxBucketSize))
 }

@@ -1,6 +1,5 @@
 package graft.dedup
 
-import graft.text.TextFunctions
 import graft.UnpersistHandle
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,45 +42,43 @@ object PrefixJoin {
   /**
    * All pairs of documents with word-shingle Jaccard >= `threshold`,
    * exactly. Output: `(idA, idB, jaccard)` with idA < idB. The shingle set
-   * feeds ranking AND verification, so it is persisted; pass an
-   * [[UnpersistHandle]] to release the cache once the result is
-   * materialized.
+   * feeds ranking AND verification, so it is cached for the call, which
+   * returns pinned pairs and holds no cache.
    */
   def jaccardJoinPrefix(
       df: DataFrame, id: Column, text: Column,
-      shingleSize: Int = 3, threshold: Double = 0.8,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+      shingleSize: Int = 3, threshold: Double = 0.8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val shingled = UnpersistHandle.persist(
-      df.select(id.as("id"), TextFunctions.hashedTextShingles(text, shingleSize).as("shingles"))
-        .filter(size(col("shingles")) >= 1),
-      unpersistHandle)
+    UnpersistHandle.pinned { handle =>
+      val shingled = UnpersistHandle.persist(
+        Dedup.shingles(df, id, text, shingleSize).filter(size(col("shingles")) >= 1), handle)
 
-    val tok = shingled.select(
-      col("id"), size(col("shingles")).as("len"),
-      explode(col("shingles")).as("t"))
-    // global document frequency of every shingle — partial aggregation
-    // combines map-side, so the exchange carries one (t, count) per task
-    val freq = tok.groupBy(col("t")).agg(count(lit(1)).as("df"))
-    // rank each document's shingles rarest-first; keep the prefix
-    // |x| - ceil(t·|x|) + 1. The window partitions by id (hash exchange +
-    // in-partition sort — document size bounds the sort, never the corpus).
-    val prefix = tok.join(freq, "t")
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("df"), col("t"))))
-      .filter(col("__r") <= col("len") - ceil(lit(threshold) * col("len")) + lit(1))
-      .select(col("t"), col("id"), col("len"))
+      val tok = shingled.select(
+        col("id"), size(col("shingles")).as("len"),
+        explode(col("shingles")).as("t"))
+      // global document frequency of every shingle — partial aggregation
+      // combines map-side, so the exchange carries one (t, count) per task
+      val freq = tok.groupBy(col("t")).agg(count(lit(1)).as("df"))
+      // rank each document's shingles rarest-first; keep the prefix
+      // |x| - ceil(t·|x|) + 1. The window partitions by id (hash exchange +
+      // in-partition sort — document size bounds the sort, never the corpus).
+      val prefix = tok.join(freq, "t")
+        .withColumn("__r", row_number().over(
+          Window.partitionBy(col("id")).orderBy(col("df"), col("t"))))
+        .filter(col("__r") <= col("len") - ceil(lit(threshold) * col("len")) + lit(1))
+        .select(col("t"), col("id"), col("len"))
 
-    // candidates: prefix-token collisions, pre-pruned by the length bound
-    // |y| >= t·|x| (and symmetrically) that J >= t implies
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.t") === col("b.t") && col("a.id") < col("b.id") &&
-          col("b.len").cast("double") >= lit(threshold) * col("a.len").cast("double") &&
-          col("a.len").cast("double") >= lit(threshold) * col("b.len").cast("double"))
-      .select(col("a.id").as("idA"), col("b.id").as("idB"))
-      .distinct()
-    Dedup.verifyJaccard(cand, shingled, shingled, threshold)
+      // candidates: prefix-token collisions, pre-pruned by the length bound
+      // |y| >= t·|x| (and symmetrically) that J >= t implies
+      val cand = prefix.as("a").join(prefix.as("b"),
+          col("a.t") === col("b.t") && col("a.id") < col("b.id") &&
+            col("b.len").cast("double") >= lit(threshold) * col("a.len").cast("double") &&
+            col("a.len").cast("double") >= lit(threshold) * col("b.len").cast("double"))
+        .select(col("a.id").as("idA"), col("b.id").as("idB"))
+        .distinct()
+      Dedup.verifyJaccard(cand, shingled, shingled, threshold)
+    }
   }
 
   /** Keep-first dedup on top of the exact join: drop every document with a
@@ -89,9 +86,6 @@ object PrefixJoin {
     * the lossless variant of [[Dedup.deduplicateMinHash]]. */
   def deduplicateExactJaccard(
       df: DataFrame, id: Column, text: Column,
-      shingleSize: Int = 3, threshold: Double = 0.8,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val pairs = jaccardJoinPrefix(df, id, text, shingleSize, threshold, unpersistHandle)
-    Dedup.keepFirst(df, id, pairs)
-  }
+      shingleSize: Int = 3, threshold: Double = 0.8): DataFrame =
+    Dedup.keepFirst(df, id, jaccardJoinPrefix(df, id, text, shingleSize, threshold))
 }

@@ -48,39 +48,40 @@ object SemanticDedup {
    * both members of the same quantizer cluster, exact cosine >= threshold.
    *
    * The assignment (id, vector, cluster) feeds the cluster-size prune AND
-   * both sides of the pairing join, so it is persisted (one kernel pass
-   * instead of three). Pass an [[UnpersistHandle]] to release the cache
-   * after the result has been materialized.
+   * both sides of the pairing join, so it is cached for the call (one
+   * kernel pass instead of three). The call returns pinned pairs and holds
+   * no cache.
    */
   def semanticDupPairs(
       corpus: DataFrame, id: Column, vec: Column,
       index: Ann.IvfIndex, threshold: Double,
-      maxClusterSize: Int = DefaultMaxClusterSize,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+      maxClusterSize: Int = DefaultMaxClusterSize): DataFrame = {
     require(threshold >= -1.0 && threshold <= 1.0,
       s"cosine threshold must be in [-1, 1], got $threshold")
     require(maxClusterSize >= 2, s"maxClusterSize must be >= 2, got $maxClusterSize")
-    val assigned = UnpersistHandle.persist(
-      corpus.select(
-        id.as("id"), vec.as("__v"),
-        get(vectors.nearest_centroids(vec, index.centroids, 1), lit(0)).as("cid")),
-      unpersistHandle)
+    UnpersistHandle.pinned { handle =>
+      val assigned = UnpersistHandle.persist(
+        corpus.select(
+          id.as("id"), vec.as("__v"),
+          get(vectors.nearest_centroids(vec, index.centroids, 1), lit(0)).as("cid")),
+        handle)
 
-    // hot-cluster guard: counts first (map-side combined), then a semi-join —
-    // a degenerate cluster never reaches the pairing join
-    val inRange = assigned
-      .groupBy(col("cid"))
-      .agg(count(lit(1)).as("__cluster_count"))
-      .filter(col("__cluster_count").between(2, maxClusterSize))
-      .select(col("cid"))
-    val pruned = assigned.join(inRange, Seq("cid"), "left_semi")
+      // hot-cluster guard: counts first (map-side combined), then a semi-join —
+      // a degenerate cluster never reaches the pairing join
+      val inRange = assigned
+        .groupBy(col("cid"))
+        .agg(count(lit(1)).as("__cluster_count"))
+        .filter(col("__cluster_count").between(2, maxClusterSize))
+        .select(col("cid"))
+      val pruned = assigned.join(inRange, Seq("cid"), "left_semi")
 
-    val a = pruned.select(col("cid"), col("id").as("idA"), col("__v").as("__va"))
-    val b = pruned.select(col("cid"), col("id").as("idB"), col("__v").as("__vb"))
-    a.join(b, Seq("cid"))
-      .filter(col("idA") < col("idB"))
-      .filter(vectors.cosine_similarity(col("__va"), col("__vb")) >= threshold)
-      .select(col("idA"), col("idB"))
+      val a = pruned.select(col("cid"), col("id").as("idA"), col("__v").as("__va"))
+      val b = pruned.select(col("cid"), col("id").as("idB"), col("__v").as("__vb"))
+      a.join(b, Seq("cid"))
+        .filter(col("idA") < col("idB"))
+        .filter(vectors.cosine_similarity(col("__va"), col("__vb")) >= threshold)
+        .select(col("idA"), col("idB"))
+    }
   }
 
   /** End-to-end semantic dedup: keep the smallest id of every duplicated
@@ -88,11 +89,9 @@ object SemanticDedup {
   def deduplicateSemantic(
       corpus: DataFrame, id: Column, vec: Column,
       index: Ann.IvfIndex, threshold: Double,
-      maxClusterSize: Int = DefaultMaxClusterSize,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame =
+      maxClusterSize: Int = DefaultMaxClusterSize): DataFrame =
     Dedup.keepFirst(corpus, id,
-      semanticDupPairs(corpus, id, vec, index, threshold, maxClusterSize,
-        unpersistHandle))
+      semanticDupPairs(corpus, id, vec, index, threshold, maxClusterSize))
 
   /**
    * The SemDeDup paper's keep policy: duplicate pairs close transitively
@@ -107,10 +106,8 @@ object SemanticDedup {
   def deduplicateSemanticKeepDiverse(
       corpus: DataFrame, id: Column, vec: Column,
       index: Ann.IvfIndex, threshold: Double,
-      maxClusterSize: Int = DefaultMaxClusterSize,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
-    val pairs = semanticDupPairs(corpus, id, vec, index, threshold,
-      maxClusterSize, unpersistHandle)
+      maxClusterSize: Int = DefaultMaxClusterSize): DataFrame = {
+    val pairs = semanticDupPairs(corpus, id, vec, index, threshold, maxClusterSize)
     // farthest-from-centroid wins: score by NEGATED cosine to the assigned
     // centroid (one more narrow kernel pass; the centroids live in the plan)
     val centroidCos = vectors.nearest_centroid_cosine(vec, index.centroids)

@@ -48,25 +48,16 @@ object Linkage {
    * sentinel, never aliasing ''), and length-prefixed segments make any
    * in-value bytes harmless.
    *
-   * `persist = true` caches both keyed projections so the block-size probe
-   * and the candidate join share one scan + soundex pass per side (release
-   * via the two handles — the Dedup convention). At very large inputs the
-   * cache is a real memory reservation sized at two corpora's name
-   * columns: pass `persist = false` to trade one extra scan+code pass per
-   * side for zero cache footprint. The handles are bound either way, so a
-   * caller's `handle.unpersist()` stays safe under both settings (on the
-   * non-persisted projection it is a harmless no-op).
+   * The call holds no cache: the block-size probe and the candidate join
+   * each scan the inputs and run the soundex projection once per side.
    */
   def linkRecords(left: DataFrame, right: DataFrame,
                   idLeft: Column, nameLeft: Column,
                   idRight: Column, nameRight: Column,
                   minScoreFp: Long = DefaultMinScoreFp,
                   maxBlockPairs: Long = 10L * 1000 * 1000,
-                  leftHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop,
-                  rightHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop,
                   extraBlockLeft: Seq[Column] = Nil,
-                  extraBlockRight: Seq[Column] = Nil,
-                  persist: Boolean = true): DataFrame = {
+                  extraBlockRight: Seq[Column] = Nil): DataFrame = {
     require(extraBlockLeft.size == extraBlockRight.size,
       s"extra blocking columns must pair up: ${extraBlockLeft.size} left " +
         s"vs ${extraBlockRight.size} right")
@@ -86,27 +77,15 @@ object Linkage {
       if (extras.isEmpty) base else concat((seg(base) +: extras.map(seg)): _*)
     }
     def side(df: DataFrame, idc: Column, namec: Column, idName: String,
-             nameName: String, extras: Seq[Column],
-             handle: graft.UnpersistHandle): DataFrame = {
-      val keyed = df
-        .select((idc.cast("long").as(idName) +: namec.as(nameName) +:
+             nameName: String, extras: Seq[Column]): DataFrame =
+      df.select((idc.cast("long").as(idName) +: namec.as(nameName) +:
           extras.zipWithIndex.map { case (c, i) => c.as(s"__xb$i") }): _*)
         .filter(col(nameName).isNotNull)
         .withColumn("__blk", blockKey(vectors.soundex4(col(nameName)),
           extras.indices.map(i => col(s"__xb$i"))))
         .select(col(idName), col(nameName), col("__blk"))
-      val p =
-        if (persist) keyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else keyed
-      // bind regardless of persist: a default UnpersistHandle throws if
-      // released before being set, so callers mixing real handles with
-      // persist=false must not crash at release time (unpersist on a
-      // non-persisted frame is a no-op)
-      handle.setDataFrame(p)
-      p
-    }
-    val l = side(left, idLeft, nameLeft, "id_a", "__name_a", extraBlockLeft, leftHandle)
-    val r = side(right, idRight, nameRight, "id_b", "__name_b", extraBlockRight, rightHandle)
+    val l = side(left, idLeft, nameLeft, "id_a", "__name_a", extraBlockLeft)
+    val r = side(right, idRight, nameRight, "id_b", "__name_b", extraBlockRight)
     val worst = l.groupBy(col("__blk")).count().withColumnRenamed("count", "nl")
       .join(r.groupBy(col("__blk")).count().withColumnRenamed("count", "nr"), "__blk")
       .select(max(col("nl") * col("nr")).as("pairs"))

@@ -84,9 +84,9 @@ object Curation {
       text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
-    val nearDup: Step = "4_neardup" -> ((cur, handle) => Dedup.deduplicateMinHash(
-      cur, id, text, shingleSize, bands, rowsPerBand, minHashThreshold,
-      unpersistHandle = handle))
+    val nearDup: Step = "4_neardup" -> ((cur, handle) => Dedup.keepFirst(cur, id,
+      Dedup.minHashPairs(cur, id, text, shingleSize, bands, rowsPerBand, minHashThreshold,
+        Dedup.DefaultMaxBucketSize, handle)))
     val decontaminate: Option[Step] = blocklist.map { case (bdf, btext) =>
       "5_decontaminate" -> ((cur, _) => Dedup.decontaminate(
         cur, id, text, bdf, btext, blocklistShingleSize, minOverlap))
@@ -138,12 +138,12 @@ object Curation {
       text, keepLangs, minTokens, maxTokens, minAvgTokenLen, maxAvgTokenLen,
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
-    val nearDup: Step = "4_neardup_batch" -> ((cur, handle) => Dedup.deduplicateMinHash(
-      cur, id, text, p.shingleSize, p.bands, p.rowsPerBand, minHashThreshold,
-      unpersistHandle = handle))
-    val nearDupIndex: Step = "5_neardup_index" -> ((cur, handle) =>
-      DedupIndex.deduplicateAgainstIndex(cur, id, text, indexPath, minHashThreshold,
-        p.maxBucketSize, corpusHandle = handle))
+    val nearDup: Step = "4_neardup_batch" -> ((cur, handle) => Dedup.keepFirst(cur, id,
+      Dedup.minHashPairs(cur, id, text, p.shingleSize, p.bands, p.rowsPerBand,
+        minHashThreshold, Dedup.DefaultMaxBucketSize, handle)))
+    val nearDupIndex: Step = "5_neardup_index" -> ((cur, handle) => Dedup.dropMatched(cur, id,
+      DedupIndex.pairsAgainstIndex(cur, id, text, indexPath, minHashThreshold,
+        p.maxBucketSize, handle)))
     val append = Option.when(appendSurvivors)(
       (pinned: DataFrame) => DedupIndex.appendToDedupIndex(pinned, id, text, indexPath))
     runStages(batch, id, text, leading, Seq(nearDup, nearDupIndex),
@@ -153,7 +153,8 @@ object Curation {
   /** A shuffling stage after `3_exact`: its report name, and its body over
     * the previous survivors. The body may give an internal cache to the
     * handle; [[runStages]] releases it once the stage's survivors are
-    * counted. */
+    * counted. The dedup bodies are the operators' lazy plans, so a stage's
+    * pairs are computed once, by the stage count, not pinned first. */
   private type Step = (String, (DataFrame, UnpersistHandle) => DataFrame)
 
   /**

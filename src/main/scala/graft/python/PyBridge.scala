@@ -814,14 +814,12 @@ object PyBridge {
                   minScoreFp: java.lang.Number,
                   maxBlockPairs: java.lang.Number,
                   extraBlockLeft: java.util.List[Column],
-                  extraBlockRight: java.util.List[Column],
-                  persist: java.lang.Boolean): DataFrame = {
+                  extraBlockRight: java.util.List[Column]): DataFrame = {
     import scala.jdk.CollectionConverters._
     graft.join.Linkage.linkRecords(left, right, idLeft, nameLeft,
       idRight, nameRight, minScoreFp.longValue(), maxBlockPairs.longValue(),
       extraBlockLeft = extraBlockLeft.asScala.toSeq,
-      extraBlockRight = extraBlockRight.asScala.toSeq,
-      persist = persist.booleanValue())
+      extraBlockRight = extraBlockRight.asScala.toSeq)
   }
 
   def foreignKeyCheck(df: DataFrame, column: String,
@@ -1030,15 +1028,9 @@ object PyBridge {
 
   def containmentPairs(df: DataFrame, id: Column, text: Column,
                        shingleSize: Int, window: Int, threshold: Double,
-                       minShingles: Int, maxPrintBucket: Int): DataFrame = {
-    val handle = UnpersistHandle()
-    val pairs = graft.dedup.Containment.containmentPairs(df, id, text, shingleSize, window,
-      threshold, minShingles, maxPrintBucket, unpersistHandle = handle)
-    // pin the pairs past the unpersist of the shingle pass
-    val pinned = pairs.localCheckpoint(true)
-    handle.unpersist()
-    pinned
-  }
+                       minShingles: Int, maxPrintBucket: Int): DataFrame =
+    graft.dedup.Containment.containmentPairs(df, id, text, shingleSize, window,
+      threshold, minShingles, maxPrintBucket)
 
   def mergeKmvSketches(sketches: DataFrame, sketchCol: Column, k: Int): DataFrame =
     graft.dedup.CorpusOverlap.mergeKmvSketches(sketches, sketchCol, k)

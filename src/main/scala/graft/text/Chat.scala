@@ -447,32 +447,30 @@ object Chat {
    * machinery over it ([[graft.dedup.Dedup.nearDupPairsMinHash]]: fused
    * signature+band kernel → banded equi-join → capped in-bucket candidate
    * pairs → exact Jaccard verification at `threshold`). Output:
-   * `(idA, idB, jaccard)`, `idA < idB`. Same 100 TB shape as document
-   * near-dup — never an all-pairs join; the only new work is one narrow
-   * parse column.
+   * `(idA, idB, jaccard)`, `idA < idB`, pinned, with no cache held. Same
+   * 100 TB shape as document near-dup — never an all-pairs join; the only
+   * new work is one narrow parse column.
    */
   def conversationNearDupPairs(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = graft.dedup.Dedup.DefaultMaxBucketSize,
-      unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame =
+      maxBucketSize: Int = graft.dedup.Dedup.DefaultMaxBucketSize): DataFrame =
     graft.dedup.Dedup.nearDupPairsMinHash(
       df.select(id.as("id"), conversationContent(text).as("__content")),
       col("id"), col("__content"), shingleSize, bands, rowsPerBand,
-      threshold, maxBucketSize, unpersistHandle = unpersistHandle)
+      threshold, maxBucketSize)
 
   /** [[conversationNearDupPairs]] over the MESSAGES wire format. */
   def conversationNearDupPairsMessages(
       df: DataFrame, id: Column, json: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = graft.dedup.Dedup.DefaultMaxBucketSize,
-      unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame =
+      maxBucketSize: Int = graft.dedup.Dedup.DefaultMaxBucketSize): DataFrame =
     graft.dedup.Dedup.nearDupPairsMinHash(
       df.select(id.as("id"), conversationContentMessages(json).as("__content")),
       col("id"), col("__content"), shingleSize, bands, rowsPerBand,
-      threshold, maxBucketSize, unpersistHandle = unpersistHandle)
+      threshold, maxBucketSize)
 
   private def assembleKept(kept: DataFrame, line: Boolean): DataFrame = {
     val ordered = kept.filter(col("kept"))

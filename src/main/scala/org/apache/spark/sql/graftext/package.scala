@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /**
@@ -19,6 +20,11 @@ package object graftext {
 
   /** Extract the Catalyst expression backing a Column. */
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until every queued listener event has been delivered (the
+    * listener-bus drain is private[spark]): what a `QueryExecutionListener`
+    * has recorded is complete only after this. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Type equality ignoring nullability (DataType.sameType is private[sql]). */
   def sameType(a: types.DataType, b: types.DataType): Boolean = a.sameType(b)

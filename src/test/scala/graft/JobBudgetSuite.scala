@@ -1,11 +1,11 @@
 package graft
 
 import graft.ann.{Ann, Pq}
-import graft.dedup.DedupIndex
+import graft.dedup.{Dedup, DedupIndex}
 import graft.diff.SnapshotDiff
-import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftext.drainListeners
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -19,7 +19,7 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
   /** `body`'s result and the number of Spark jobs it submitted. */
   private def jobsIn[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
-    ListenerDrain(sc)
+    drainListeners(sc)
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -27,7 +27,7 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
     sc.addSparkListener(listener)
     try {
       val result = body
-      ListenerDrain(sc)
+      drainListeners(sc)
       (result, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
@@ -75,13 +75,16 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
     val increment = Seq((10L, "the quick brown fox jumps over the lazy dog by the river bank"))
       .toDF("id", "text")
     // buckets/ and shingles/ schemas come from their footers, not from
-    // inference jobs
+    // inference jobs: the lazy pair body (what curation runs) plans with none
     val handle = UnpersistHandle()
-    val (pairs, planJobs) = jobsIn(DedupIndex.nearDupPairsAgainstIndex(increment,
-      col("id"), col("text"), idx, corpusHandle = handle))
+    val (pairs, planJobs) = jobsIn(DedupIndex.pairsAgainstIndex(increment,
+      col("id"), col("text"), idx, 0.8, Dedup.DefaultMaxBucketSize, handle))
     assert(planJobs == 0)
     assert(pairs.select("idA", "idB").as[(Long, Long)].collect().toSeq == Seq((10L, 1L)))
     handle.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the public call returns pinned pairs and holds no cache
+    DedupIndex.nearDupPairsAgainstIndex(increment, col("id"), col("text"), idx)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftext.drainListeners
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicBoolean
@@ -28,7 +28,7 @@ class ParallelJobsSuite extends AnyFunSuite with SparkTest {
       override def onJobStart(e: SparkListenerJobStart): Unit = slowJobStarted.countDown()
     }
     val siblingSettled = new AtomicBoolean(false)
-    ListenerDrain(sc)
+    drainListeners(sc)
     sc.addSparkListener(listener)
     val t0 = System.nanoTime()
     try {
@@ -45,7 +45,7 @@ class ParallelJobsSuite extends AnyFunSuite with SparkTest {
       }
       assert(thrown.getMessage == "first failure")
       assert((System.nanoTime() - t0) / 1e9 < 20, "the sibling job was not cancelled")
-      ListenerDrain(sc)
+      drainListeners(sc)
       assert(sc.statusTracker.getActiveJobIds().isEmpty)
     } finally sc.removeSparkListener(listener)
   }

@@ -293,9 +293,8 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
 
   test("prefix join plans equi-joins only — no cartesian anywhere") {
     val df = nearDupCorpus.toDF("id", "text")
-    val formatted = graft.dedup.PrefixJoin.jaccardJoinPrefix(
-      df, col("id"), col("text"), threshold = 0.7)
-      .queryExecution.executedPlan.toString
+    val formatted = PinnedPlan(spark)(graft.dedup.PrefixJoin.jaccardJoinPrefix(
+      df, col("id"), col("text"), threshold = 0.7))._2.toString
     assert(!formatted.contains("CartesianProduct") &&
       !formatted.contains("BroadcastNestedLoop"), formatted.take(2000))
   }
@@ -321,11 +320,11 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
   test("cross-corpus candidate dedup shuffles bare id pairs, not shingle arrays") {
     val reference = nearDupCorpus.filter(_._1 < 100).toDF("id", "text")
     val batch = nearDupCorpus.filter(_._1 >= 100).toDF("id", "text")
-    val pairs = Dedup.nearDupPairsMinHashAgainst(
-      batch, reference, col("id"), col("text"), threshold = 0.7)
+    val (_, pinned) = PinnedPlan(spark)(Dedup.nearDupPairsMinHashAgainst(
+      batch, reference, col("id"), col("text"), threshold = 0.7))
     // the distinct on candidates must run BEFORE shingles re-attach: no
     // HashAggregate (the distinct) may list a shingles attribute in its keys
-    val plan = pairs.queryExecution.executedPlan.toString
+    val plan = pinned.toString
     val aggLines = plan.linesIterator.filter(_.contains("HashAggregate")).toSeq
     assert(aggLines.nonEmpty)
     assert(!aggLines.exists(_.contains("shingles")),
@@ -566,10 +565,10 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
         (200002L, "a genuinely unique document about salt marshes coastal tides sediment " +
           "transport estuarine ecology and migratory shorebird habitats today"))
         .toDF("id", "text"))
-    val pairs = Dedup.nearDupPairsMinHash(big, col("id"), col("text"),
-      threshold = 0.7, maxBucketSize = 1000)
+    val (pairs, pinned) = PinnedPlan(spark)(Dedup.nearDupPairsMinHash(big, col("id"),
+      col("text"), threshold = 0.7, maxBucketSize = 1000))
     // plan shape: the semi-join prune must sit below the collect_list agg
-    val plan = pairs.queryExecution.executedPlan.toString
+    val plan = pinned.toString
     assert(plan.contains("LeftSemi"), s"expected a LeftSemi bucket prune in:\n$plan")
     val found = pairs.select("idA", "idB").as[(Long, Long)].collect().toSet
     assert(found == Set((200001L, 200002L)))
@@ -2090,13 +2089,13 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     best
   }
 
-  /** Run `body` with a fresh handle for the operator's internal cache and
-    * release that cache after `body`'s last action. Clears the cache first,
-    * so a following `cacheManager.isEmpty` sees only this call's caches. */
-  private def releasing[T](body: UnpersistHandle => T): T = {
+  /** Clear the cache, run `body`, and check that it left no cache entry
+    * behind: the semantic dedup operators hold no cache past their call. */
+  private def leavesNoCache[T](body: => T): T = {
     spark.catalog.clearCache()
-    val handle = UnpersistHandle()
-    try body(handle) finally handle.unpersist()
+    val out = body
+    assert(spark.sharedState.cacheManager.isEmpty)
+    out
   }
 
   test("semanticDupPairs equals naive within-cluster brute force") {
@@ -2104,10 +2103,9 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 5, iterations = 3)
     val threshold = 0.9
-    val got = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, threshold, unpersistHandle = h)
+    val got = leavesNoCache(graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, threshold)
       .as[(Long, Long)].collect().toSet)
-    assert(spark.sharedState.cacheManager.isEmpty)
     val byCluster = data.groupBy { case (_, v) => assignNaive(v, index.centroids) }
     val expected = (for {
       (_, members) <- byCluster.toSeq
@@ -2122,14 +2120,12 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val data = clusteredVectors(4, 6, 16, 0.03f)
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 4, iterations = 3)
-    val pairs = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, 0.95, unpersistHandle = h)
+    val pairs = leavesNoCache(graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, 0.95)
       .as[(Long, Long)].collect())
-    assert(spark.sharedState.cacheManager.isEmpty)
-    val kept = releasing(h => graft.dedup.SemanticDedup.deduplicateSemantic(
-        df, col("id"), col("vec"), index, 0.95, unpersistHandle = h)
+    val kept = leavesNoCache(graft.dedup.SemanticDedup.deduplicateSemantic(
+        df, col("id"), col("vec"), index, 0.95)
       .select(col("id")).as[Long].collect().toSet)
-    assert(spark.sharedState.cacheManager.isEmpty)
     val dropped = pairs.map(_._2).toSet
     assert(kept == data.map(_._1).toSet -- dropped)
     assert(dropped.nonEmpty)
@@ -2140,14 +2136,12 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 3, iterations = 3)
     val threshold = 0.95
-    val pairs = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, threshold, unpersistHandle = h)
+    val pairs = leavesNoCache(graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, threshold)
       .as[(Long, Long)].collect())
-    assert(spark.sharedState.cacheManager.isEmpty)
-    val kept = releasing(h => graft.dedup.SemanticDedup.deduplicateSemanticKeepDiverse(
-        df, col("id"), col("vec"), index, threshold, unpersistHandle = h)
+    val kept = leavesNoCache(graft.dedup.SemanticDedup.deduplicateSemanticKeepDiverse(
+        df, col("id"), col("vec"), index, threshold)
       .select(col("id")).as[Long].collect().toSet)
-    assert(spark.sharedState.cacheManager.isEmpty)
     // naive model: union-find components over the pair list; per component
     // keep argmin(cosine to nearest centroid), ties to smallest id
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -2172,16 +2166,12 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val data = clusteredVectors(2, 4, 8, 0.01f)
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 2, iterations = 3)
-    val capped = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, 0.5, maxClusterSize = 3,
-        unpersistHandle = h)
+    val capped = leavesNoCache(graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, 0.5, maxClusterSize = 3)
       .count())
-    assert(spark.sharedState.cacheManager.isEmpty)
-    val uncapped = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, 0.5, maxClusterSize = 4,
-        unpersistHandle = h)
+    val uncapped = leavesNoCache(graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, 0.5, maxClusterSize = 4)
       .count())
-    assert(spark.sharedState.cacheManager.isEmpty)
     assert(capped == 0L, "both 4-member clusters should be pruned at cap 3")
     assert(uncapped > 0L)
   }
@@ -2190,10 +2180,8 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     val data = clusteredVectors(3, 5, 8, 0.05f)
     val df = data.toDF("id", "vec")
     val index = Ann.trainIvf(df, col("id"), col("vec"), k = 3, iterations = 2)
-    val formatted = releasing(h => graft.dedup.SemanticDedup.semanticDupPairs(
-        df, col("id"), col("vec"), index, 0.5, unpersistHandle = h)
-      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
-    assert(spark.sharedState.cacheManager.isEmpty)
+    val formatted = leavesNoCache(PinnedPlan(spark)(graft.dedup.SemanticDedup.semanticDupPairs(
+        df, col("id"), col("vec"), index, 0.5))._2.toString)
     assert(!formatted.contains("CartesianProduct"), formatted)
     assert(!formatted.contains("BroadcastNestedLoopJoin"), formatted)
   }
