@@ -2095,10 +2095,8 @@ object SparkEntry {
         .localCheckpoint(true)
       val unpacked = graft.text.Packing.unpackTokenIdsWithMask(
         packed, 512, sep)
-      val mapping = graft.RowNumbers.withRowNumbers(
-        docs.select(col("doc_id")), rowNumberColumnName = "__rn",
-        order = Seq(col("doc_id")))
-        .select(col("doc_id"), (col("__rn") - 1).as("doc_idx"))
+      val mapping = graft.agg.PrefixSum.withRunningTotal(
+        docs.select(col("doc_id")), lit(1L), Seq(col("doc_id")), "doc_idx")
       val trained = filter(
         zip_with(col("ids"), col("mask"), (i, m) => when(m === 1, i)),
         x => x.isNotNull)
@@ -2330,9 +2328,8 @@ object SparkEntry {
       // Encode-once discipline: the BPE encode is checkpointed before the
       // solve, and the assignment itself is checkpointed because TWO
       // consumers read it (the sequence assembly and the (bin, slot)
-      // identity join) — packBins releases its internal row-number cache
-      // on return, so an unpinned assignment would re-run the sort per
-      // consumer
+      // identity join) — unpinned, each consumer would re-run the rank
+      // window and the event join
       val encDocs = docs.select(col("doc_id"), enc.as("__ids"))
         .localCheckpoint(true)
       val assigned = graft.text.BinPack.packBins(
@@ -2391,10 +2388,8 @@ object SparkEntry {
         Seq(col("doc_id")), capacity = 512, sepId = sep)
         .localCheckpoint(true)
       val unpacked = graft.text.Packing.unpackTokenIds(packed, 512, sep)
-      val mapping = graft.RowNumbers.withRowNumbers(
-        docs.select(col("doc_id")), rowNumberColumnName = "__rn",
-        order = Seq(col("doc_id")))
-        .select(col("doc_id"), (col("__rn") - 1).as("doc_idx"))
+      val mapping = graft.agg.PrefixSum.withRunningTotal(
+        docs.select(col("doc_id")), lit(1L), Seq(col("doc_id")), "doc_idx")
       // empty documents pack as a bare separator and unpack to nothing —
       // they must still round-trip to '' (left join + typed empty array)
       mapping.join(unpacked, Seq("doc_idx"), "left_outer")
@@ -2431,10 +2426,8 @@ object SparkEntry {
       val loaded = graft.text.Shards.loadShards(s, shardDir)
       val verify = graft.text.Shards.verifyShards(s, shardDir, loaded)
       val unpacked = graft.text.Shards.unpackShards(loaded, 1L << 22)
-      val mapping = graft.RowNumbers.withRowNumbers(
-        docs.select(col("doc_id")), rowNumberColumnName = "__rn",
-        order = Seq(col("doc_id")))
-        .select(col("doc_id"), (col("__rn") - 1).as("doc_idx"))
+      val mapping = graft.agg.PrefixSum.withRunningTotal(
+        docs.select(col("doc_id")), lit(1L), Seq(col("doc_id")), "doc_idx")
       mapping.join(unpacked, Seq("doc_idx"), "left_outer")
         .select(col("doc_id"),
           loaded.tokenizer.get.decodeIds(
@@ -2480,10 +2473,8 @@ object SparkEntry {
         .crossJoin(contentHash(oneShot).withColumnRenamed("h", "h2"))
         .select((col("h") <=> col("h2")).as("append_equals_oneshot"))
       val unpacked = graft.text.Shards.unpackShards(loaded, 1L << 22)
-      val mapping = graft.RowNumbers.withRowNumbers(
-        docs.select(col("doc_id")), rowNumberColumnName = "__rn",
-        order = Seq(col("doc_id")))
-        .select(col("doc_id"), (col("__rn") - 1).as("doc_idx"))
+      val mapping = graft.agg.PrefixSum.withRunningTotal(
+        docs.select(col("doc_id")), lit(1L), Seq(col("doc_id")), "doc_idx")
       mapping.join(unpacked, Seq("doc_idx"), "left_outer")
         .select(col("doc_id"),
           loaded.tokenizer.get.decodeIds(
@@ -2537,10 +2528,8 @@ object SparkEntry {
         .crossJoin(contentHash(oneShot).withColumnRenamed("h", "h2"))
         .select((col("h") <=> col("h2")).as("stream_equals_oneshot"))
       val unpacked = graft.text.Shards.unpackShards(loaded, 1L << 22)
-      val mapping = graft.RowNumbers.withRowNumbers(
-        docs.select(col("doc_id")), rowNumberColumnName = "__rn",
-        order = Seq(col("doc_id")))
-        .select(col("doc_id"), (col("__rn") - 1).as("doc_idx"))
+      val mapping = graft.agg.PrefixSum.withRunningTotal(
+        docs.select(col("doc_id")), lit(1L), Seq(col("doc_id")), "doc_idx")
       mapping.join(unpacked, Seq("doc_idx"), "left_outer")
         .select(col("doc_id"),
           loaded.tokenizer.get.decodeIds(

@@ -5,12 +5,13 @@ import org.apache.spark.storage.StorageLevel
 
 /**
  * Handle to unpersist a DataFrame that an operator caches internally and the
- * caller cannot reach: the persisted intermediate inside
- * [[RowNumbers.withRowNumbers]] and `writePartitionedBy` (the reference
- * contract), and likewise inside `PrefixSum`, `Packing`, `Sampling`,
- * `Lateness`, `Ann` and the curation result. The similarity-pair operators
- * take no handle: they return pinned pairs and hold no cache
- * ([[UnpersistHandle.pinned]]).
+ * caller cannot reach. Only the reference entry points take one, for the
+ * persisted intermediate inside [[RowNumbers.withRowNumbers]] and
+ * `writePartitionedBy`, and curation, for its cached survivors. Every other
+ * operator leaves no cache behind: the similarity-pair operators return
+ * pinned pairs ([[UnpersistHandle.pinned]]), and `PrefixSum` and the
+ * operators built on it pin their partition ids with an eager local
+ * checkpoint.
  *
  * Semantics match the reference
  * (/root/reference/src/main/scala/uk/co/gresearch/spark/UnpersistHandle.scala:27-72):

@@ -1,7 +1,6 @@
 package graft.agg
 
 import graft.functions.distinctPrefixFor
-import graft.UnpersistHandle
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -15,13 +14,15 @@ import org.apache.spark.sql.{Column, DataFrame}
  * counting rows to summing an arbitrary numeric column):
  *
  *  1. global range order;
- *  2. pin partition ids (`spark_partition_id` + load-bearing persist) and
+ *  2. pin partition ids (`spark_partition_id`, stored by an eager local
+ *     checkpoint, so the sort runs when the operator is called) and
  *     compute partition-local running sums;
  *  3. per-partition totals (one tiny row each) -> cumulative offsets over a
  *     #partitions-row window -> broadcast-join the offset back and add.
  *
  * The only full-data exchange is the range sort; coordination traffic is
- * ~16 bytes per partition.
+ * ~16 bytes per partition. The pinned frame is checkpoint data, not a
+ * cache, so a call leaves nothing to release.
  */
 object PrefixSum {
 
@@ -44,7 +45,7 @@ object PrefixSum {
     // empty partitions beyond the max observed pid carry no rows, so
     // nothing needs an offset there; gap partitions in the middle stay
     // covered, which is all the pid+1-shifted join needs. The extra
-    // subplan is one cache-backed max over #partition rows.
+    // subplan is one max over the pinned frame.
     withPid.agg(max(col(pidCol)).as("__mx"))
       .select(explode(when(col("__mx").isNull, array().cast("array<int>"))
         .otherwise(sequence(lit(0), col("__mx")))).as(pidCol))
@@ -64,11 +65,10 @@ object PrefixSum {
       valueCol: Column,
       order: Seq[Column],
       outputColumn: String = "running_total",
-      exclusive: Boolean = true,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+      exclusive: Boolean = true): DataFrame = {
     require(order.nonEmpty, "withRunningTotal needs at least one order column")
     withRunning(df, valueCol, order, outputColumn, exclusive,
-      unpersistHandle, "local_sum", "partition_total", sum(_: Column),
+      "local_sum", "partition_total", sum(_: Column),
       local => coalesce(local, lit(0)),
       (local, offset) => local + coalesce(offset, lit(0)))
   }
@@ -90,12 +90,11 @@ object PrefixSum {
       valueCol: Column,
       order: Seq[Column],
       outputColumn: String = "running_max",
-      exclusive: Boolean = true,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+      exclusive: Boolean = true): DataFrame = {
     require(order.nonEmpty, "withRunningMax needs at least one order column")
     // greatest ignores nulls; both-null (first row, first partition) stays null
     withRunning(df, valueCol, order, outputColumn, exclusive,
-      unpersistHandle, "local_max", "partition_max", max(_: Column),
+      "local_max", "partition_max", max(_: Column),
       identity, greatest(_, _))
   }
 
@@ -114,7 +113,6 @@ object PrefixSum {
       order: Seq[Column],
       outputColumn: String,
       exclusive: Boolean,
-      unpersistHandle: UnpersistHandle,
       localName: String,
       totalName: String,
       aggregate: Column => Column,
@@ -127,11 +125,13 @@ object PrefixSum {
     val totalCol = prefix + totalName
     val offsetCol = prefix + "offset"
 
-    // phase 1+2: order, pin pids, persist; partition-local running values
-    val withPid = UnpersistHandle.persist(df
+    // phase 1+2: order and pin pids as stored values, which both the
+    // local window and the offsets read; partition-local running values
+    val withPid = df
       .withColumn(valCol, valueCol)
       .orderBy(order: _*)
-      .withColumn(pidCol, spark_partition_id()), unpersistHandle)
+      .withColumn(pidCol, spark_partition_id())
+      .localCheckpoint(eager = true)
 
     val bounds =
       if (exclusive) (Window.unboundedPreceding, -1L) else (Window.unboundedPreceding, Window.currentRow)

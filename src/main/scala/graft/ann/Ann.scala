@@ -371,7 +371,7 @@ object Ann {
    * multiply of exact integers — every engine flags identical rows.
    *
    * Scale shape: centroids broadcast (k rows); ONE range exchange for the
-   * global (cid, cos_fp, id) order through the 3-phase row-number plan —
+   * global (cid, cos_fp, id) order through the 3-phase running count —
    * cluster counts are k ~ sqrt(corpus), so a per-cluster window would
    * funnel the corpus through k tasks; per-cluster ranks are recovered
    * from a k-row min/count aggregate broadcast back.
@@ -381,8 +381,7 @@ object Ann {
    * ascending (0 = farthest from its centroid).
    */
   def embeddingOutliers(corpus: DataFrame, id: Column, vec: Column,
-                        index: IvfIndex, quantile: Double,
-                        unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame = {
+                        index: IvfIndex, quantile: Double): DataFrame = {
     require(quantile >= 0.0 && quantile <= 1.0, s"quantile in [0,1]: $quantile")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -398,9 +397,8 @@ object Ann {
         floor(vectors.cosine_similarity(col("__vec"), col("__cen"))
           * (1L << 20)).cast("long"))
       .select(col("id"), col("cid"), col("cos_fp"))
-    val numbered = graft.RowNumbers.withRowNumbers(scored, "__rn",
-      order = Seq(col("cid").asc, col("cos_fp").asc, col("id").asc),
-      unpersistHandle = unpersistHandle)
+    val numbered = graft.agg.PrefixSum.withRunningTotal(scored, lit(1L),
+      Seq(col("cid").asc, col("cos_fp").asc, col("id").asc), "__rn", exclusive = false)
     val perCluster = numbered.groupBy(col("cid"))
       .agg(min(col("__rn")).as("__rn0"), count(lit(1)).as("__n"))
     numbered

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.SilentUnpersistHandle
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -193,23 +194,30 @@ object Clustering {
   }
 
   /** End-to-end: MinHash near-dup pairs -> components -> keep-best-scoring
-    * row per component (see [[keepBestByClusters]]). */
+    * row per component (see [[keepBestByClusters]]). The pairs stay lazy:
+    * the component pass checkpoints its edge set, the one pin they need,
+    * and their shingle cache is released once it has. */
   def deduplicateMinHashKeepBest(
       df: DataFrame, id: Column, text: Column, score: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
-    keepBestByClusters(df, id, score, Dedup.nearDupPairsMinHash(df, id, text,
-      shingleSize, bands, rowsPerBand, threshold, maxBucketSize))
+      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
+    val handle = new SilentUnpersistHandle()
+    handle.withUnpersist()(keepBestByClusters(df, id, score, Dedup.minHashPairs(df, id,
+      text, shingleSize, bands, rowsPerBand, threshold, maxBucketSize, handle)))
+  }
 
-  /** End-to-end: MinHash near-dup pairs -> components -> keep-min-per-component. */
+  /** End-to-end: MinHash near-dup pairs -> components -> keep-min-per-component
+    * (pairs and cache as in [[deduplicateMinHashKeepBest]]). */
   def deduplicateMinHashClusters(
       df: DataFrame, id: Column, text: Column,
       shingleSize: Int = 3, bands: Int = 16, rowsPerBand: Int = 8,
       threshold: Double = 0.8,
-      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame =
-    deduplicateByClusters(df, id, Dedup.nearDupPairsMinHash(df, id, text,
-      shingleSize, bands, rowsPerBand, threshold, maxBucketSize))
+      maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
+    val handle = new SilentUnpersistHandle()
+    handle.withUnpersist()(deduplicateByClusters(df, id, Dedup.minHashPairs(df, id,
+      text, shingleSize, bands, rowsPerBand, threshold, maxBucketSize, handle)))
+  }
 
   /**
    * Leakage-safe train/val/test split: the split hash is computed on the

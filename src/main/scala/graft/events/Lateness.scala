@@ -1,7 +1,6 @@
 package graft.events
 
 import graft.agg.PrefixSum
-import graft.UnpersistHandle
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -33,8 +32,7 @@ object Lateness {
    * (ties make "before" ambiguous — use an ingest sequence or offset).
    */
   def withLateness(df: DataFrame, arrival: Column, eventTime: Column,
-                   outputColumn: String = "lateness_us",
-                   unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+                   outputColumn: String = "lateness_us"): DataFrame = {
     // collision-safe temp names (a same-named input column must not be
     // silently overwritten and dropped) — the RowNumbers discipline
     val prefix = graft.functions.distinctPrefixFor(df.columns.toSeq :+ outputColumn)
@@ -42,8 +40,7 @@ object Lateness {
     val wmCol = prefix + "wm"
     PrefixSum.withRunningMax(
       df.withColumn(tusCol, unix_micros(eventTime)),
-      col(tusCol), Seq(arrival), wmCol,
-      unpersistHandle = unpersistHandle)
+      col(tusCol), Seq(arrival), wmCol)
       .withColumn(outputColumn,
         greatest(coalesce(col(wmCol) - col(tusCol), lit(0L)), lit(0L)))
       .drop(tusCol, wmCol)
@@ -57,13 +54,11 @@ object Lateness {
    * acceptable; `max_lateness_us` is the delay that would drop nothing.
    */
   def watermarkPlan(df: DataFrame, arrival: Column, eventTime: Column,
-                    delaysSeconds: Seq[Long],
-                    unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+                    delaysSeconds: Seq[Long]): DataFrame = {
     require(delaysSeconds.nonEmpty, "need at least one candidate delay")
     require(delaysSeconds.forall(_ >= 0), s"delays must be >= 0: $delaysSeconds")
     val lateCol = graft.functions.distinctPrefixFor(df.columns.toSeq) + "late"
-    withLateness(df, arrival, eventTime, lateCol,
-      unpersistHandle = unpersistHandle)
+    withLateness(df, arrival, eventTime, lateCol)
       .select(col(lateCol), explode(lit(delaysSeconds.toArray)).as("delay_s"))
       .groupBy(col("delay_s"))
       .agg(

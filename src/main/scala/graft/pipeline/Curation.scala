@@ -77,7 +77,7 @@ object Curation {
       blocklist: Option[(DataFrame, Column)] = None,
       blocklistShingleSize: Int = 5, minOverlap: Int = 1,
       sampleRate: Double = 1.0, sampleSalt: String = "graft",
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
+      unpersistHandle: UnpersistHandle,
       dsirPortableHash: Boolean = true): (DataFrame, DataFrame) = {
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
     val leading = leadingStages(
@@ -130,7 +130,7 @@ object Curation {
       minHashThreshold: Double = 0.8,
       sampleRate: Double = 1.0, sampleSalt: String = "graft",
       appendSurvivors: Boolean = true,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
+      unpersistHandle: UnpersistHandle,
       dsirPortableHash: Boolean = true): (DataFrame, DataFrame) = {
     require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate must be in (0, 1]: $sampleRate")
     val p = DedupIndex.readIndexParams(batch.sparkSession, indexPath)

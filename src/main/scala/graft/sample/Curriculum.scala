@@ -1,6 +1,6 @@
 package graft.sample
 
-import graft.RowNumbers
+import graft.agg.PrefixSum
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -20,8 +20,8 @@ import org.apache.spark.sql.{Column, DataFrame}
  *     deterministic draw), ties by id;
  *   - `order_id` = position under (band, shuffle key, id).
  *
- * Scale shape: the two global positions come from
- * [[RowNumbers.withRowNumbers]] — the 3-phase distributed row number
+ * Scale shape: the two global positions are running counts from
+ * [[PrefixSum.withRunningTotal]] — the 3-phase distributed prefix sum
  * (range-partitioned sort + per-partition offsets), NEVER a
  * single-partition window; `n` rides a broadcast one-row aggregate. The
  * shuffle-within-band matters: without it a band replays the score order
@@ -48,18 +48,16 @@ object Curriculum {
     val keyCol = p + "key"
     val nCol = p + "n"
 
-    val ranked = RowNumbers.withRowNumbers(
+    val ranked = PrefixSum.withRunningTotal(
       df.withColumn(keyCol, md5(concat(lit(salt), id.cast("string")))),
-      rowNumberColumnName = rankCol,
-      order = Seq(score.asc, id.asc))
+      lit(1L), Seq(score.asc, id.asc), rankCol, exclusive = false)
     val withN = ranked.crossJoin(
       broadcast(ranked.agg(count(lit(1)).as(nCol))))
     val banded = withN
       .withColumn(bandCol, expr(s"(($rankCol - 1L) * $bands) div $nCol"))
       .drop(rankCol, nCol)
-    RowNumbers.withRowNumbers(banded,
-      rowNumberColumnName = orderCol,
-      order = Seq(col(bandCol).asc, col(keyCol).asc, id.asc))
+    PrefixSum.withRunningTotal(banded, lit(1L),
+      Seq(col(bandCol).asc, col(keyCol).asc, id.asc), orderCol, exclusive = false)
       .drop(keyCol)
   }
 }

@@ -235,21 +235,20 @@ object Sampling {
    * `repartition(numShards, col(shardColumn))` then sort within partitions
    * by position — no further shuffle is needed.
    *
-   * Scale shape: one range exchange (the sort) plus
-   * [[graft.RowNumbers.withRowNumbers]]'s 3-phase position assignment —
-   * the offsets side is #partitions rows, always broadcastable; no global
-   * single-partition window anywhere. The position join persists an
-   * intermediate: pass an [[graft.UnpersistHandle]] to release it.
+   * Scale shape: one range exchange (the sort) plus the 3-phase position
+   * assignment of [[graft.agg.PrefixSum.withRunningTotal]] (a running
+   * count, which over a total order is the row number) — the offsets side
+   * is #partitions rows, always broadcastable; no global single-partition
+   * window anywhere. The call leaves no cache behind.
    */
   def shuffleByHash(
       df: DataFrame, key: Column, salt: String = "graft",
       positionColumn: String = "shuffle_pos",
-      numShards: Int = 0, shardColumn: String = "shard",
-      unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame = {
+      numShards: Int = 0, shardColumn: String = "shard"): DataFrame = {
     require(numShards >= 0, s"numShards must be non-negative: $numShards")
     val h = md5(concat(lit(salt), key.cast("string")))
-    val positioned = graft.RowNumbers.withRowNumbers(
-      df, positionColumn, order = Seq(h.asc, key.asc), unpersistHandle = unpersistHandle)
+    val positioned = graft.agg.PrefixSum.withRunningTotal(
+      df, lit(1L), Seq(h.asc, key.asc), positionColumn, exclusive = false)
     if (numShards > 0)
       positioned.withColumn(shardColumn, (col(positionColumn) - 1) % numShards)
     else positioned
@@ -266,10 +265,8 @@ object Sampling {
    * recomputed partition would re-draw and corrupt the permutation).
    */
   def epochShuffle(df: DataFrame, id: Column, seed: Long, epoch: Long,
-                   positionColumn: String = "shuffle_pos",
-                   unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame =
-    shuffleByHash(df, id, salt = s"$seed:$epoch:",
-      positionColumn = positionColumn, unpersistHandle = unpersistHandle)
+                   positionColumn: String = "shuffle_pos"): DataFrame =
+    shuffleByHash(df, id, salt = s"$seed:$epoch:", positionColumn = positionColumn)
 
   /**
    * Deterministic weighted interleave — the data-mixture SCHEDULE: one
@@ -295,8 +292,7 @@ object Sampling {
    */
   def mixtureInterleave(df: DataFrame, id: Column, source: Column,
                         weights: Map[String, Long], seed: Long, epoch: Long,
-                        posColumn: String = "mix_pos",
-                        unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame = {
+                        posColumn: String = "mix_pos"): DataFrame = {
     require(weights.nonEmpty, "weights must be non-empty")
     weights.foreach { case (s, w) => require(w > 0, s"weight for '$s' must be positive: $w") }
     def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
@@ -320,9 +316,9 @@ object Sampling {
       .withColumn("__mix_key", key)
       .withColumn("__mix_r", row_number().over(perSource).cast("long"))
       .withColumn("__mix_v", (lit(2L) * col("__mix_r") - 1L) * kCol)
-    graft.RowNumbers.withRowNumbers(
-      ranked, posColumn, unpersistHandle = unpersistHandle,
-      order = Seq(col("__mix_v").asc, col("__mix_src").asc, col("__mix_r").asc))
+    graft.agg.PrefixSum.withRunningTotal(ranked, lit(1L),
+      Seq(col("__mix_v").asc, col("__mix_src").asc, col("__mix_r").asc), posColumn,
+      exclusive = false)
       .drop("__mix_src", "__mix_key", "__mix_r", "__mix_v")
   }
 
@@ -332,7 +328,7 @@ object Sampling {
    * `numShards` independent streams (one per data-loader worker), each
    * internally shuffled by the seeded hash. ONE hash-partition exchange +
    * local sort (the per-shard window), no global range exchange, no
-   * row-numbers phase, no persist: strictly cheaper than [[epochShuffle]]
+   * row-numbers phase, no checkpoint: strictly cheaper than [[epochShuffle]]
    * and the shape to prefer at 100 TB when shards are consumed in
    * parallel anyway.
    *
@@ -599,8 +595,7 @@ object Sampling {
    * batch of a bucket may be partial).
    */
   def lengthBucketBatches(df: DataFrame, id: Column, nTokens: Column,
-                          batchSize: Int, seed: Long = 0L,
-                          unpersistHandle: graft.UnpersistHandle = graft.UnpersistHandle.Noop): DataFrame = {
+                          batchSize: Int, seed: Long = 0L): DataFrame = {
     require(batchSize >= 1, s"batchSize must be >= 1: $batchSize")
     val base = df.select(id.as("id"),
         coalesce(nTokens.cast("long"), lit(0L)).as("n_tokens"))
@@ -609,9 +604,8 @@ object Sampling {
           .otherwise(length(bin(col("n_tokens") - 1))).cast("int"))
       .withColumn("padded_to", expr("shiftleft(CAST(1 AS BIGINT), bucket)"))
       .withColumn("__h", md5(concat(lit(s"$seed:"), col("id").cast("string"))))
-    val numbered = graft.RowNumbers.withRowNumbers(base, "__rn",
-      order = Seq(col("bucket").asc, col("__h").asc, col("id").asc),
-      unpersistHandle = unpersistHandle)
+    val numbered = graft.agg.PrefixSum.withRunningTotal(base, lit(1L),
+      Seq(col("bucket").asc, col("__h").asc, col("id").asc), "__rn", exclusive = false)
     val bucketBase = numbered.groupBy(col("bucket"))
       .agg(min(col("__rn")).as("__rn0"))
     numbered

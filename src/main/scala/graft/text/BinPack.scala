@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.{RowNumbers, SilentUnpersistHandle}
+import graft.agg.PrefixSum
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -130,37 +130,34 @@ object BinPack {
     val rnCol = "__graft_bp_rn"
     val sized = df.withColumn(nCol, tokensCol.cast("int"))
       .filter(col(nCol) > 0) // zero-token docs: nothing to place
-    val handle = new SilentUnpersistHandle()
-    val ranked = RowNumbers.withRowNumbers(sized, rowNumberColumnName = rnCol,
-      unpersistHandle = handle,
-      order = col(nCol) +: order)
-    try {
-      // class rank = global rank - the class's min rank (classes are
-      // contiguous under the (length, order) sort); both sides of the
-      // join after this are broadcast-sized
-      val minRanks = ranked.groupBy(col(nCol))
-        .agg(min(col(rnCol)).as("__minRn"))
-      val hist = minRanks.join(
-        ranked.groupBy(col(nCol)).count(), Seq(nCol))
-        .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(1)))
-      val (events, _) = solve(hist.map(h => (h._1, h._2)).toSeq, capacity)
-      val minRankOf = hist.map(h => h._1 -> h._3).toMap
-      // absolute row-number interval: class ranks are 0-based offsets
-      // from the class's own min row number, so the base (1-based or
-      // otherwise) cancels
-      val eventRows = events.map(e =>
-        (e.len, e.rankStart + minRankOf(e.len), e.n, e.binStart, e.slot))
-      import spark.implicits._
-      val eventDf = eventRows.toDF(nCol, "__rankStart", "__n", "__binStart", "__slot")
-      ranked.join(broadcast(eventDf),
-          ranked(nCol) === eventDf(nCol) &&
-            col(rnCol) >= col("__rankStart") &&
-            col(rnCol) < col("__rankStart") + col("__n"))
-        .select((df.columns.map(col) :+
-          ranked(nCol).as("n_tokens") :+
-          (col("__binStart") + (col(rnCol) - col("__rankStart"))).as("bin_id") :+
-          col("__slot").as("slot")): _*)
-    } finally handle.unpersist()
+    // the running count over a total order is its row number
+    val ranked = PrefixSum.withRunningTotal(sized, lit(1L), col(nCol) +: order, rnCol,
+      exclusive = false)
+    // class rank = global rank - the class's min rank (classes are
+    // contiguous under the (length, order) sort); both sides of the
+    // join after this are broadcast-sized
+    val minRanks = ranked.groupBy(col(nCol))
+      .agg(min(col(rnCol)).as("__minRn"))
+    val hist = minRanks.join(
+      ranked.groupBy(col(nCol)).count(), Seq(nCol))
+      .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(1)))
+    val (events, _) = solve(hist.map(h => (h._1, h._2)).toSeq, capacity)
+    val minRankOf = hist.map(h => h._1 -> h._3).toMap
+    // absolute row-number interval: class ranks are 0-based offsets
+    // from the class's own min row number, so the base (1-based or
+    // otherwise) cancels
+    val eventRows = events.map(e =>
+      (e.len, e.rankStart + minRankOf(e.len), e.n, e.binStart, e.slot))
+    import spark.implicits._
+    val eventDf = eventRows.toDF(nCol, "__rankStart", "__n", "__binStart", "__slot")
+    ranked.join(broadcast(eventDf),
+        ranked(nCol) === eventDf(nCol) &&
+          col(rnCol) >= col("__rankStart") &&
+          col(rnCol) < col("__rankStart") + col("__n"))
+      .select((df.columns.map(col) :+
+        ranked(nCol).as("n_tokens") :+
+        (col("__binStart") + (col(rnCol) - col("__rankStart"))).as("bin_id") :+
+        col("__slot").as("slot")): _*)
   }
 
   /**

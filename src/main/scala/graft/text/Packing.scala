@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.UnpersistHandle
 import graft.agg.PrefixSum
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -32,12 +31,10 @@ object Packing {
       df: DataFrame,
       tokensCol: Column,
       order: Seq[Column],
-      capacity: Long,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop): DataFrame = {
+      capacity: Long): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     val cum = "__graft_cum_tokens"
-    PrefixSum.withRunningTotal(df, tokensCol, order, cum,
-        exclusive = true, unpersistHandle)
+    PrefixSum.withRunningTotal(df, tokensCol, order, cum)
       .withColumn("seq_id", floor(col(cum) / capacity).cast("long"))
       .withColumn("seq_offset", (col(cum) % capacity).cast("long"))
       .drop(cum)
@@ -80,7 +77,6 @@ object Packing {
       order: Seq[Column],
       capacity: Int,
       sepId: Int,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       startOffset: Long = 0L): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     require(sepId >= 0, s"sepId must be >= 0: $sepId")
@@ -96,8 +92,7 @@ object Packing {
     // to B's pieces, because positions are a pure function of the global
     // running total
     val started = PrefixSum.withRunningTotal(prep, col("__n"),
-      order.indices.map(i => col(s"__o$i")), "__start",
-      exclusive = true, unpersistHandle)
+      order.indices.map(i => col(s"__o$i")), "__start")
       .withColumn("__start", col("__start") + lit(startOffset))
     started
       .select(col("__ids"), col("__start"), col("__n"),
@@ -144,7 +139,6 @@ object Packing {
       order: Seq[Column],
       capacity: Int,
       source: Column,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       startOffset: Long = 0L): DataFrame = {
     require(capacity > 0, s"capacity must be positive: $capacity")
     require(startOffset >= 0, s"startOffset must be >= 0: $startOffset")
@@ -152,8 +146,7 @@ object Packing {
       (source.as("source") +: (tokensCol + 1).cast("long").as("__n") +:
         order.zipWithIndex.map { case (c, i) => c.as(s"__o$i") }): _*)
     val started = PrefixSum.withRunningTotal(prep, col("__n"),
-      order.indices.map(i => col(s"__o$i")), "__start",
-      exclusive = true, unpersistHandle)
+      order.indices.map(i => col(s"__o$i")), "__start")
       .withColumn("__start", col("__start") + lit(startOffset))
     started
       .select(col("source"), col("__start"), col("__n"),
@@ -196,14 +189,12 @@ object Packing {
       order: Seq[Column],
       capacity: Int,
       sepId: Int,
-      unpersistHandle: UnpersistHandle = UnpersistHandle.Noop,
       startOffset: Long = 0L): DataFrame = {
     require(sepId >= 0 && sepId < (1 << 30),
       s"sepId must be in [0, 2^30): $sepId")
     val fused = zip_with(idsCol, maskCol,
       (i, m) => i * 2 + (m =!= 0).cast("int"))
-    packTokenIds(df, fused, order, capacity, sepId * 2,
-        unpersistHandle, startOffset)
+    packTokenIds(df, fused, order, capacity, sepId * 2, startOffset)
       .select(col("seq_id"),
         transform(col("ids"), v => shiftright(v, 1)).as("ids"),
         transform(col("ids"), v => v.bitwiseAND(1)).as("mask"),
@@ -317,18 +308,10 @@ object Packing {
 
   /** The unpack family's global separator census: `(seq_id,
     * __sepsBefore)`, the separators in all earlier sequences, from
-    * [[separatorsPerSequence]] rows. It has one row per sequence and is
-    * pinned by an eager local checkpoint, so the prefix sum's internal
-    * cache is released before the census is returned. */
-  private def separatorCensus(perSeq: DataFrame): DataFrame = {
-    val handle = UnpersistHandle()
-    val census = PrefixSum.withRunningTotal(perSeq, col("__nsep"),
-      Seq(col("seq_id")), "__sepsBefore", exclusive = true, unpersistHandle = handle)
+    * [[separatorsPerSequence]] rows, one row per sequence. */
+  private def separatorCensus(perSeq: DataFrame): DataFrame =
+    PrefixSum.withRunningTotal(perSeq, col("__nsep"), Seq(col("seq_id")), "__sepsBefore")
       .select(col("seq_id"), col("__sepsBefore"))
-      .localCheckpoint(eager = true)
-    handle.unpersist()
-    census
-  }
 
   /** Shared segment explode of the unpack family: from `(seq_id, ids,
     * __sepsBefore)` rows, emit one row per NON-EMPTY separator-delimited

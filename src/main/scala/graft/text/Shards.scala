@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.UnpersistHandle
 import graft.write.{Compaction, Manifest, SwapFiles}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -64,14 +63,8 @@ object Shards {
                  batchId: Option[Long] = None): Long = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
     val spark = df.sparkSession
-    // Silent handle: if the pack throws BEFORE its prefix sum registers the
-    // cached frame, a strict handle's unpersist-in-finally would throw
-    // "DataFrame has to be set first" and MASK the real error
-    val handle = new graft.SilentUnpersistHandle()
-    try {
-      Packing.packTokenIds(df, idsCol, order, capacity, sepId, handle)
-        .write.mode("overwrite").parquet(s"$dir/data")
-    } finally handle.unpersist()
+    Packing.packTokenIds(df, idsCol, order, capacity, sepId)
+      .write.mode("overwrite").parquet(s"$dir/data")
     resizeIfOffTarget(spark, s"$dir/data", targetFileBytes)
     // ONE certification scan of the landed data: Manifest's own per-file
     // summary pass (the single place the fingerprint is defined) extended
@@ -126,7 +119,6 @@ object Shards {
     val exSepId = prev.getAs[Int]("sep_id")
     val exNSequences = prev.getAs[Long]("n_sequences")
     val exTotalIds = prev.getAs[Long]("total_ids")
-    val handle = new graft.SilentUnpersistHandle() // see saveShards note
     // the batch stats (row count, appended ids, max seq_id) ride the tmp
     // batch write as observe metrics — the write is the pack's ONLY
     // consumer, so the dedicated stats action AND the outer persist that
@@ -136,98 +128,95 @@ object Shards {
     // nothing next to the pack itself.
     val obs = new org.apache.spark.sql.Observation()
     val newPacked = Packing.packTokenIds(df, idsCol, order,
-        exCapacity, exSepId, handle,
-        startOffset = exTotalIds)
+        exCapacity, exSepId, startOffset = exTotalIds)
       .observe(obs,
         count(lit(1)).as("n"),
         coalesce(sum(size(col("ids")).cast("long")), lit(0L)).as("ids"),
         coalesce(max(col("seq_id")), lit(-1L)).as("max_seq"))
-    try {
-      val lastSeqId = exNSequences - 1
-      val tailPartial = exNSequences > 0 &&
-        exTotalIds < exNSequences * exCapacity
-      val (tmpRows, oldFiles, oldFileNames) = if (tailPartial) {
-        // the first new id lands INSIDE the old last sequence — merge it
-        // and rewrite (only) the file that holds it. That file is found
-        // from parquet FOOTER stats alone (driver-side, no Spark job): the
-        // tail sequence is the artifact's global max seq_id, so the file
-        // whose footer max equals it IS the tail file — the same min/max
-        // metadata the old probe scan's row-group pruning consulted, read
-        // directly. Every subsequent read targets THE ONE FILE, never the
-        // artifact (an input_file_name row-filter over the whole directory
-        // would be an O(artifact) scan at 100 TB).
-        val hadoopConf = spark.sessionState.newHadoopConf()
-        val ranges = fs.listStatus(dirPath)
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .flatMap { s =>
-            graft.parquet.FooterStats
-              .longColumnRange(hadoopConf, s.getPath, "seq_id")
-              .map(r => (s.getPath.toString, r._1, r._2))
-          }
-        val tailFiles = ranges.filter(_._3 == lastSeqId).map(_._1)
-        require(tailFiles.length == 1,
-          s"expected the tail sequence in exactly one file, found " +
-            s"${tailFiles.length}: ${tailFiles.mkString(", ")} " +
-            s"(footer seq_id ranges: ${ranges.map(r => s"[${r._2},${r._3}]").mkString(", ")})")
-        val tailFileDf = spark.read.parquet(tailFiles.head)
-        val keptFromFile = tailFileDf
-          .filter(col("seq_id") =!= lastSeqId)
-          .select(col("seq_id"), col("ids"), col("n_docs"))
-        val oldTail = tailFileDf.filter(col("seq_id") === lastSeqId)
-          .select(col("seq_id"), col("ids").as("__old_ids"),
-            col("n_docs").as("__old_docs"))
-        val merged = newPacked
-          .join(broadcast(oldTail), Seq("seq_id"), "left_outer")
-          .select(col("seq_id"),
-            when(col("__old_ids").isNotNull,
-              concat(col("__old_ids"), col("ids"))).otherwise(col("ids"))
-              .as("ids"),
-            (col("n_docs") + coalesce(col("__old_docs"), lit(0L)))
-              .as("n_docs"))
-        (keptFromFile.unionAll(merged), Seq(new Path(tailFiles.head)),
-          Seq(tailFiles.head))
-      } else
-        (newPacked.select(col("seq_id"), col("ids"), col("n_docs")),
-          Seq.empty[Path], Seq.empty[String])
-      val uuid = java.util.UUID.randomUUID().toString
-      val tmp = new Path(dirPath, s"_append_tmp_$uuid")
-      tmpRows.write.parquet(tmp.toString)
-      // stats arrive with the write; an EMPTY observation means AQE
-      // replaced the (empty) pack subtree with EmptyRelation and pruned
-      // the CollectMetrics node — which can only happen when the batch
-      // contributed zero rows, so both paths agree: drop the unpublished
-      // tmp and leave the artifact untouched (the pre-observe code
-      // early-returned before writing anything).
-      val m = obs.get
-      val nRows = m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (nRows == 0L) {
-        fs.delete(tmp, true)
-        return exNSequences
-      }
-      val appendedIds = m("ids").asInstanceOf[Long]
-      val maxSeq = m("max_seq").asInstanceOf[Long]
-      // size the batch's files BEFORE publishing: the pack's natural
-      // partitioning lands one tiny file per shuffle partition, and every
-      // later scan of the artifact (verify, unpack, load, the next append's
-      // tail probe) pays the per-file open cost — the §6 small-files
-      // problem applied to the append path. Same footer-computed target as
-      // saveShards; fires only when >1.5x off.
-      resizeIfOffTarget(spark, tmp.toString,
-        prev.getAs[Long]("target_file_bytes"))
-      val published =
-        SwapFiles.publishAndDelete(fs, dirPath, tmp, "append", uuid, oldFiles)
-      // incremental certification: fingerprint ONLY the published files —
-      // the untouched artifact's manifest rows stand, keeping the append
-      // O(batch + tail) instead of O(artifact)
-      Manifest.updateManifestFor(spark, dataDir, published, oldFileNames)
-      writeParams(spark, dir, exCapacity, exSepId,
-        maxSeq + 1, exTotalIds + appendedIds,
-        prev.getAs[Boolean]("has_tokenizer"),
-        prev.getAs[Long]("target_file_bytes"),
-        batchId.getOrElse(prev.getAs[Long]("last_batch_id")))
-      maxSeq + 1
-    } finally handle.unpersist()
+    val lastSeqId = exNSequences - 1
+    val tailPartial = exNSequences > 0 &&
+      exTotalIds < exNSequences * exCapacity
+    val (tmpRows, oldFiles, oldFileNames) = if (tailPartial) {
+      // the first new id lands INSIDE the old last sequence — merge it
+      // and rewrite (only) the file that holds it. That file is found
+      // from parquet FOOTER stats alone (driver-side, no Spark job): the
+      // tail sequence is the artifact's global max seq_id, so the file
+      // whose footer max equals it IS the tail file — the same min/max
+      // metadata the old probe scan's row-group pruning consulted, read
+      // directly. Every subsequent read targets THE ONE FILE, never the
+      // artifact (an input_file_name row-filter over the whole directory
+      // would be an O(artifact) scan at 100 TB).
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val ranges = fs.listStatus(dirPath)
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .flatMap { s =>
+          graft.parquet.FooterStats
+            .longColumnRange(hadoopConf, s.getPath, "seq_id")
+            .map(r => (s.getPath.toString, r._1, r._2))
+        }
+      val tailFiles = ranges.filter(_._3 == lastSeqId).map(_._1)
+      require(tailFiles.length == 1,
+        s"expected the tail sequence in exactly one file, found " +
+          s"${tailFiles.length}: ${tailFiles.mkString(", ")} " +
+          s"(footer seq_id ranges: ${ranges.map(r => s"[${r._2},${r._3}]").mkString(", ")})")
+      val tailFileDf = spark.read.parquet(tailFiles.head)
+      val keptFromFile = tailFileDf
+        .filter(col("seq_id") =!= lastSeqId)
+        .select(col("seq_id"), col("ids"), col("n_docs"))
+      val oldTail = tailFileDf.filter(col("seq_id") === lastSeqId)
+        .select(col("seq_id"), col("ids").as("__old_ids"),
+          col("n_docs").as("__old_docs"))
+      val merged = newPacked
+        .join(broadcast(oldTail), Seq("seq_id"), "left_outer")
+        .select(col("seq_id"),
+          when(col("__old_ids").isNotNull,
+            concat(col("__old_ids"), col("ids"))).otherwise(col("ids"))
+            .as("ids"),
+          (col("n_docs") + coalesce(col("__old_docs"), lit(0L)))
+            .as("n_docs"))
+      (keptFromFile.unionAll(merged), Seq(new Path(tailFiles.head)),
+        Seq(tailFiles.head))
+    } else
+      (newPacked.select(col("seq_id"), col("ids"), col("n_docs")),
+        Seq.empty[Path], Seq.empty[String])
+    val uuid = java.util.UUID.randomUUID().toString
+    val tmp = new Path(dirPath, s"_append_tmp_$uuid")
+    tmpRows.write.parquet(tmp.toString)
+    // stats arrive with the write; an EMPTY observation means AQE
+    // replaced the (empty) pack subtree with EmptyRelation and pruned
+    // the CollectMetrics node — which can only happen when the batch
+    // contributed zero rows, so both paths agree: drop the unpublished
+    // tmp and leave the artifact untouched (the pre-observe code
+    // early-returned before writing anything).
+    val m = obs.get
+    val nRows = m.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
+    if (nRows == 0L) {
+      fs.delete(tmp, true)
+      return exNSequences
+    }
+    val appendedIds = m("ids").asInstanceOf[Long]
+    val maxSeq = m("max_seq").asInstanceOf[Long]
+    // size the batch's files BEFORE publishing: the pack's natural
+    // partitioning lands one tiny file per shuffle partition, and every
+    // later scan of the artifact (verify, unpack, load, the next append's
+    // tail probe) pays the per-file open cost — the §6 small-files
+    // problem applied to the append path. Same footer-computed target as
+    // saveShards; fires only when >1.5x off.
+    resizeIfOffTarget(spark, tmp.toString,
+      prev.getAs[Long]("target_file_bytes"))
+    val published =
+      SwapFiles.publishAndDelete(fs, dirPath, tmp, "append", uuid, oldFiles)
+    // incremental certification: fingerprint ONLY the published files —
+    // the untouched artifact's manifest rows stand, keeping the append
+    // O(batch + tail) instead of O(artifact)
+    Manifest.updateManifestFor(spark, dataDir, published, oldFileNames)
+    writeParams(spark, dir, exCapacity, exSepId,
+      maxSeq + 1, exTotalIds + appendedIds,
+      prev.getAs[Boolean]("has_tokenizer"),
+      prev.getAs[Long]("target_file_bytes"),
+      batchId.getOrElse(prev.getAs[Long]("last_batch_id")))
+    maxSeq + 1
   }
 
   private def writeParams(spark: SparkSession, dir: String, capacity: Int,

@@ -396,32 +396,24 @@ class AggOpsSuite extends AnyFunSuite with SparkTest {
     val df = spark.range(10000).toDF("id")
       .withColumn("w", (col("id") % 7) + 1)
       .repartition(8) // scatter, so the three-phase plan has real work
-    val h1 = UnpersistHandle()
-    val got = graft.agg.PrefixSum.withRunningTotal(df, $"w", Seq($"id"), "rt",
-      unpersistHandle = h1)
+    val got = graft.agg.PrefixSum.withRunningTotal(df, $"w", Seq($"id"), "rt")
       .select("id", "rt").as[(Long, Long)].collect().toMap
-    h1.unpersist(blocking = true)
     // exclusive prefix sum of (id % 7) + 1 in id order, computed directly
     var acc = 0L
     (0L until 10000L).foreach { i =>
       assert(got(i) === acc, s"row $i")
       acc += (i % 7) + 1
     }
-    val h2 = UnpersistHandle()
     val inclusive = graft.agg.PrefixSum.withRunningTotal(
-      df, $"w", Seq($"id"), "rt", exclusive = false, unpersistHandle = h2)
+      df, $"w", Seq($"id"), "rt", exclusive = false)
       .select("id", "rt").as[(Long, Long)].collect().toMap
-    h2.unpersist(blocking = true)
     assert(inclusive(0L) === 1L && inclusive(9999L) === acc)
   }
 
   test("withRunningTotal broadcasts the per-partition offsets") {
     val df = spark.range(1000).toDF("id").withColumn("w", lit(1L)).repartition(4)
-    val h = UnpersistHandle()
-    val plan = graft.agg.PrefixSum.withRunningTotal(df, $"w", Seq($"id"), "rt",
-      unpersistHandle = h)
+    val plan = graft.agg.PrefixSum.withRunningTotal(df, $"w", Seq($"id"), "rt")
       .queryExecution.executedPlan.toString
-    h.unpersist(blocking = true)
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       s"offsets join should broadcast:\n$plan")
   }
@@ -431,11 +423,9 @@ class AggOpsSuite extends AnyFunSuite with SparkTest {
     val df = spark.range(8).toDF("id")
       .withColumn("w", when(col("id") % 2 === 0, lit(0.5)).otherwise(lit(0.25)))
       .repartition(3)
-    val h = UnpersistHandle()
     val got = graft.agg.PrefixSum.withRunningTotal(df, $"w", Seq($"id"), "rt",
-      exclusive = false, unpersistHandle = h)
+      exclusive = false)
       .select("id", "rt").as[(Long, Double)].collect().toMap
-    h.unpersist(blocking = true)
     assert(got(0L) === 0.5)
     assert(got(1L) === 0.75)
     assert(got(7L) === 3.0) // 4 * 0.5 + 4 * 0.25
@@ -444,12 +434,9 @@ class AggOpsSuite extends AnyFunSuite with SparkTest {
   test("packSequences assigns sequence ids and offsets by contiguous fill") {
     val docs = Seq((1L, 100L), (2L, 100L), (3L, 100L), (4L, 30L), (5L, 300L), (6L, 1L))
       .toDF("doc_id", "n")
-    val h = UnpersistHandle()
-    val got = graft.text.Packing.packSequences(docs, $"n", Seq($"doc_id"), capacity = 256,
-      unpersistHandle = h)
+    val got = graft.text.Packing.packSequences(docs, $"n", Seq($"doc_id"), capacity = 256)
       .select("doc_id", "seq_id", "seq_offset").as[(Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
-    h.unpersist(blocking = true)
     // cumulative-before: 0, 100, 200, 300, 330, 630
     assert(got === Map(
       1L -> ((0L, 0L)), 2L -> ((0L, 100L)), 3L -> ((0L, 200L)),

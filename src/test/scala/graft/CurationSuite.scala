@@ -199,11 +199,9 @@ class CurationSuite extends AnyFunSuite with SparkTest {
 
   test("shuffleByHash assigns a 1..N permutation in hash order, stable across partitionings") {
     val keys = (0L until 3000L).toDF("k")
-    val handle = graft.UnpersistHandle()
-    val out = Sampling.shuffleByHash(keys, col("k"), numShards = 7, unpersistHandle = handle)
+    val out = Sampling.shuffleByHash(keys, col("k"), numShards = 7)
       .select(col("k"), col("shuffle_pos"), col("shard"))
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    handle.unpersist()
     // positions are a contiguous permutation 1..N
     assert(out.map(_._2).sorted.toSeq == (1L to 3000L))
     // order follows (md5(salt||key), key): spot-check against a local sort
@@ -218,23 +216,17 @@ class CurationSuite extends AnyFunSuite with SparkTest {
     assert(sizes.max - sizes.min <= 1 && out.map(_._3).distinct.length == 7)
     assert(out.forall { case (_, pos, shard) => shard == (pos - 1) % 7 })
     // the permutation is a pure function of the keys — partitioning-independent
-    val h2 = graft.UnpersistHandle()
-    val again = Sampling.shuffleByHash(keys.repartition(13), col("k"),
-        numShards = 7, unpersistHandle = h2)
+    val again = Sampling.shuffleByHash(keys.repartition(13), col("k"), numShards = 7)
       .select(col("k"), col("shuffle_pos"), col("shard"))
       .as[(Long, Long, Long)].collect().sortBy(_._1)
-    h2.unpersist()
     assert(again.toSeq == out.toSeq)
   }
 
   test("epochShuffle: reproducible per (seed, epoch), independent across epochs") {
     val keys = (0L until 2000L).toDF("k")
-    def run(seed: Long, epoch: Long): Map[Long, Long] = {
-      val h = graft.UnpersistHandle()
-      val m = Sampling.epochShuffle(keys, col("k"), seed, epoch, unpersistHandle = h)
+    def run(seed: Long, epoch: Long): Map[Long, Long] =
+      Sampling.epochShuffle(keys, col("k"), seed, epoch)
         .select(col("k"), col("shuffle_pos")).as[(Long, Long)].collect().toMap
-      h.unpersist(); m
-    }
     val e1 = run(7, 1)
     // a contiguous permutation, identical on re-run
     assert(e1.values.toSeq.sorted == (1L to 2000L))
@@ -245,10 +237,8 @@ class CurationSuite extends AnyFunSuite with SparkTest {
     assert(e1 != e2)
     assert(run(8, 1) != e1)
     // equals shuffleByHash under the documented salt convention
-    val h = graft.UnpersistHandle()
-    val viaSalt = Sampling.shuffleByHash(keys, col("k"), salt = "7:1:", unpersistHandle = h)
+    val viaSalt = Sampling.shuffleByHash(keys, col("k"), salt = "7:1:")
       .select(col("k"), col("shuffle_pos")).as[(Long, Long)].collect().toMap
-    h.unpersist()
     assert(viaSalt == e1)
   }
 
@@ -256,12 +246,10 @@ class CurationSuite extends AnyFunSuite with SparkTest {
     // 3:1 weights over two sources of 400 rows each
     val docs = (0L until 800L).map(i => (i, if (i % 2 == 0) "a" else "b"))
       .toDF("id", "src")
-    val h = graft.UnpersistHandle()
     val out = Sampling.mixtureInterleave(docs, col("id"), col("src"),
-      Map("a" -> 3L, "b" -> 1L), seed = 7, epoch = 1, unpersistHandle = h)
+      Map("a" -> 3L, "b" -> 1L), seed = 7, epoch = 1)
       .select(col("id"), col("src"), col("mix_pos"))
       .as[(Long, String, Long)].collect().sortBy(_._3)
-    h.unpersist()
     // a contiguous permutation over all rows
     assert(out.map(_._3).toSeq == (1L to 800L))
     // WFQ bound: in every prefix, source counts track weights within 1 item
@@ -275,11 +263,9 @@ class CurationSuite extends AnyFunSuite with SparkTest {
         s"prefix $n unbalanced: a=$na b=$nb")
     }
     // deterministic: same seed reproduces; different epoch differs
-    val h2 = graft.UnpersistHandle()
     val again = Sampling.mixtureInterleave(docs.repartition(7), col("id"), col("src"),
-      Map("a" -> 3L, "b" -> 1L), seed = 7, epoch = 1, unpersistHandle = h2)
+      Map("a" -> 3L, "b" -> 1L), seed = 7, epoch = 1)
       .select(col("id"), col("mix_pos")).as[(Long, Long)].collect().toMap
-    h2.unpersist()
     assert(again == out.map(r => r._1 -> r._3).toMap)
     // unknown source fails fast rather than silently mis-weighting
     val e = intercept[Exception] {
@@ -519,22 +505,26 @@ class CurationSuite extends AnyFunSuite with SparkTest {
     h2.unpersist()
     // audit mode leaves the index untouched: re-running batch 2 with
     // appendSurvivors = false yields the same result twice
+    val h3 = UnpersistHandle()
     val (s3, _) = graft.pipeline.Curation.curateIncrement(
       batch2, col("id"), col("text"), idx,
       keepLangs = Set("en"),
       minTokens = 5, maxTokens = 1000, minAvgTokenLen = 1.0, maxAvgTokenLen = 10.0,
       minStopwordRatio = 0.01, maxTopBigramFraction = 0.9,
-      appendSurvivors = false)
+      appendSurvivors = false, unpersistHandle = h3)
     // 11 was appended by the batch-2 run above, so it now dedups away;
     // running audit mode twice is idempotent
     assert(s3.select("id").as[Long].collect().isEmpty)
+    h3.unpersist()
+    val h4 = UnpersistHandle()
     val (s4, _) = graft.pipeline.Curation.curateIncrement(
       batch2, col("id"), col("text"), idx,
       keepLangs = Set("en"),
       minTokens = 5, maxTokens = 1000, minAvgTokenLen = 1.0, maxAvgTokenLen = 10.0,
       minStopwordRatio = 0.01, maxTopBigramFraction = 0.9,
-      appendSurvivors = false)
+      appendSurvivors = false, unpersistHandle = h4)
     assert(s4.select("id").as[Long].collect().isEmpty)
+    h4.unpersist()
   }
 
   test("curate survives a stage that goes empty mid-pipeline") {

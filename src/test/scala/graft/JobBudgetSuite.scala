@@ -1,10 +1,11 @@
 package graft
 
 import graft.ann.{Ann, Pq}
-import graft.dedup.{Dedup, DedupIndex}
+import graft.dedup.{Clustering, Dedup, DedupIndex}
 import graft.diff.SnapshotDiff
+import graft.text.Shards
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, length}
 import org.apache.spark.sql.graftext.drainListeners
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -157,5 +158,38 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
     assert(diff.select("diff", "id").as[(String, Long)].collect().toSet ==
       Set(("N", 1L), ("C", 2L)))
     info(s"jobs: write ${writeJobs.mkString(", ")}, diffSnapshots $planJobs")
+  }
+
+  test("shards: save <= 16 jobs, unpack <= 12, append <= 22") {
+    // a local table of 300 rows scans as 4 partitions under local[4]
+    val docs = (1 to 300).map(i => (i.toLong, Seq.tabulate(i % 37 + 1)(j => (i * 7 + j) % 250)))
+      .toDF("doc_id", "ids")
+    val dir = graft.createTemporaryDir("shards-job-budget")
+    val (_, saveJobs) = jobsIn(Shards.saveShards(docs, col("ids"), Seq(col("doc_id")),
+      capacity = 64, sepId = 999, dir = dir))
+    val (_, unpackJobs) = jobsIn(Shards.unpackShards(spark, dir).localCheckpoint(true))
+    val batch = (301 to 340).map(i => (i.toLong, Seq(1, 2, 3))).toDF("doc_id", "ids")
+    val (_, appendJobs) = jobsIn(Shards.appendShards(batch, col("ids"), Seq(col("doc_id")), dir))
+    info(s"jobs: save $saveJobs, unpack $unpackJobs, append $appendJobs")
+    assert(saveJobs <= 16, s"saveShards ran $saveJobs jobs")
+    assert(unpackJobs <= 12, s"unpackShards ran $unpackJobs jobs")
+    assert(appendJobs <= 22, s"appendShards ran $appendJobs jobs")
+  }
+
+  test("MinHash cluster dedup: the component pass is the pairs' only checkpoint") {
+    val docs = Seq(
+      (1L, curationText), (2L, curationText), (3L, s"$curationText in the sun"),
+      (4L, "a bird sang on the wall of the old house and the children ran to see it fly away"))
+      .toDF("id", "text")
+    val (kept, clusterJobs) = jobsIn(Clustering.deduplicateMinHashClusters(docs, col("id"),
+      col("text")).select("id").as[Long].collect())
+    val (best, keepBestJobs) = jobsIn(Clustering.deduplicateMinHashKeepBest(docs, col("id"),
+      col("text"), length(col("text"))).select("id").as[Long].collect())
+    info(s"jobs: deduplicateMinHashClusters $clusterJobs, deduplicateMinHashKeepBest $keepBestJobs")
+    assert(kept.toSet == Set(1L, 4L) && best.toSet == Set(3L, 4L))
+    // exact pins: a pair checkpoint ahead of the component pass's own
+    // costs 2 more jobs per call
+    assert(clusterJobs == 16, s"deduplicateMinHashClusters ran $clusterJobs jobs")
+    assert(keepBestJobs == 17, s"deduplicateMinHashKeepBest ran $keepBestJobs jobs")
   }
 }
