@@ -51,6 +51,25 @@ class CachePolicySuite extends AnyFunSuite with SparkTest {
       m.toString))
   }
 
+  /** The lazy pair bodies curation runs under its own stage handles. */
+  private val lazyPairBodies = Set("minHashPairs", "pairsAgainstIndex")
+
+  test("no pair operator takes or defaults an UnpersistHandle") {
+    val owners = Set("graft.dedup.Dedup", "graft.dedup.DedupIndex", "graft.dedup.PrefixJoin",
+      "graft.dedup.SemanticDedup", "graft.dedup.Containment", "graft.dedup.Clustering",
+      "graft.text.Chat", "graft.join.Linkage")
+    val handled = for {
+      c <- LibraryClasses.all if owners.contains(c.getName.takeWhile(_ != '$'))
+      m <- c.getDeclaredMethods.toList
+      // lambda bodies (`$anonfun$…`) are compiler output, not signatures
+      if !m.getName.contains("$anonfun$")
+      if m.getParameterTypes.contains(classOf[UnpersistHandle]) ||
+        m.getReturnType == classOf[UnpersistHandle]
+    } yield m.getName
+    assert(handled.filterNot(lazyPairBodies).isEmpty, handled)
+    assert(handled.toSet == lazyPairBodies, s"the lazy pair bodies moved: $handled")
+  }
+
   /** The methods allowed to take or default an `UnpersistHandle`, by
     * owner (class name up to its first `$`): the reference entry points,
     * curation (its stage runner included) and the lazy pair bodies
