@@ -30,7 +30,7 @@ __all__ = [
     "bit_sign_pack", "hamming_words", "hamming_brute_force_top_k", "hamming_top_k",
     "mrl_top_k", "truncate_vec",
     "near_dup_pairs_minhash", "near_dup_pairs_simhash", "deduplicate_minhash",
-    "deduplicate_lines", "decontaminate", "decontaminate_bloom", "brute_force_top_k",
+    "deduplicate_lines", "decontaminate", "brute_force_top_k",
     "build_blocklist_artifact", "decontaminate_with_artifact",
     "curate", "curate_increment", "register_sql_functions",
     "connected_components", "assign_clusters", "deduplicate_by_clusters",
@@ -411,56 +411,19 @@ def deduplicate_lines(df: DataFrame, id_col: ColumnOrName, text: ColumnOrName,
     return DataFrame(jdf, df.sparkSession)
 
 
-def decontaminate(corpus: DataFrame, id_col: ColumnOrName, text: ColumnOrName,
+def decontaminate(corpus: DataFrame, text: ColumnOrName,
                   blocklist: DataFrame, blocklist_text: ColumnOrName,
                   shingle_size: int = 8, min_overlap: int = 1) -> DataFrame:
     """Drop corpus docs sharing >= min_overlap hashed word shingles with any
-    blocklist document (benchmark/test-set decontamination)."""
+    blocklist document (benchmark/test-set decontamination). One narrow
+    filter: the blocklist's sorted shingle-hash set is broadcast and each row
+    probed by a codegen'd binary search, so a streaming corpus works too
+    (static blocklist). The decision is per row; a blocklist over 32M
+    distinct shingles is refused."""
     jdf = _bridge(corpus).decontaminate(
-        corpus._jdf, _jcol(id_col), _jcol(text),
+        corpus._jdf, _jcol(text),
         blocklist._jdf, _jcol(blocklist_text), int(shingle_size), int(min_overlap))
     return DataFrame(jdf, corpus.sparkSession)
-
-
-def decontaminate_bloom(corpus: DataFrame, id_col: ColumnOrName, text: ColumnOrName,
-                        blocklist: DataFrame, blocklist_text: ColumnOrName,
-                        shingle_size: int = 8, min_overlap: int = 1,
-                        expected_shingles: int = 10 * 1000 * 1000,
-                        fpp: float = 0.01) -> DataFrame:
-    """decontaminate with a Bloom-filter prefilter: same exact result, corpus
-    shingles probe a broadcast bitset before the exact verification join."""
-    jdf = _bridge(corpus).decontaminateBloom(
-        corpus._jdf, _jcol(id_col), _jcol(text),
-        blocklist._jdf, _jcol(blocklist_text), int(shingle_size), int(min_overlap),
-        int(expected_shingles), float(fpp))
-    return DataFrame(jdf, corpus.sparkSession)
-
-
-def decontaminate_broadcast(corpus: DataFrame, id_col: ColumnOrName,
-                            text: ColumnOrName, blocklist: DataFrame,
-                            blocklist_text: ColumnOrName,
-                            shingle_size: int = 8, min_overlap: int = 1,
-                            max_blocklist_shingles: int = 32 * 1024 * 1024) -> DataFrame:
-    """Exact decontamination as a pure narrow filter: sorted broadcast
-    blocklist-shingle set + codegen'd binary-search overlap count — zero
-    shuffles/joins; the streaming-legal shape."""
-    jdf = _bridge(corpus).decontaminateBroadcast(
-        corpus._jdf, _jcol(id_col), _jcol(text), blocklist._jdf,
-        _jcol(blocklist_text), int(shingle_size), int(min_overlap),
-        int(max_blocklist_shingles))
-    return DataFrame(jdf, corpus.sparkSession)
-
-
-def decontaminate_stream(stream: DataFrame, text: ColumnOrName,
-                         blocklist: DataFrame, blocklist_text: ColumnOrName,
-                         shingle_size: int = 8, min_overlap: int = 1,
-                         max_blocklist_shingles: int = 32 * 1024 * 1024) -> DataFrame:
-    """decontaminate_broadcast for a STREAMING document frame (stateless
-    per-batch filter, any output mode; blocklist must be static)."""
-    jdf = _bridge(stream).decontaminateStream(
-        stream._jdf, _jcol(text), blocklist._jdf, _jcol(blocklist_text),
-        int(shingle_size), int(min_overlap), int(max_blocklist_shingles))
-    return DataFrame(jdf, stream.sparkSession)
 
 
 def canonicalize_url(url: ColumnOrName) -> Column:
@@ -1810,25 +1773,21 @@ def merge_hll_sketches(sketches: DataFrame, group: ColumnOrName,
 
 
 def build_blocklist_artifact(blocklist: DataFrame, text: ColumnOrName,
-                             path: str, shingle_size: int = 8,
-                             expected_shingles: int = 10 * 1000 * 1000,
-                             fpp: float = 0.01) -> None:
-    """Freeze a decontamination blocklist as a parquet artifact (distinct
-    hashed shingles + serialized Bloom prefilter) — build once, enforce
-    everywhere with decontaminate_with_artifact."""
+                             path: str, shingle_size: int = 8) -> None:
+    """Freeze a decontamination blocklist as a parquet artifact (its distinct
+    hashed shingles under <path>/shingles) — build once, enforce everywhere
+    with decontaminate_with_artifact."""
     _bridge(blocklist).buildBlocklistArtifact(
-        blocklist._jdf, _jcol(text), str(path), int(shingle_size),
-        int(expected_shingles), float(fpp))
+        blocklist._jdf, _jcol(text), str(path), int(shingle_size))
 
 
-def decontaminate_with_artifact(corpus: DataFrame, id: ColumnOrName,
-                                text: ColumnOrName, path: str,
-                                shingle_size: int = 8,
+def decontaminate_with_artifact(corpus: DataFrame, text: ColumnOrName,
+                                path: str, shingle_size: int = 8,
                                 min_overlap: int = 1) -> DataFrame:
     """Drop contaminated docs using a persisted blocklist artifact —
-    identical decisions to decontaminate_bloom over the original table."""
+    identical per-row decisions to decontaminate over the original table."""
     jdf = _bridge(corpus).decontaminateWithArtifact(
-        corpus._jdf, _jcol(id), _jcol(text), str(path), int(shingle_size),
+        corpus._jdf, _jcol(text), str(path), int(shingle_size),
         int(min_overlap))
     return DataFrame(jdf, corpus.sparkSession)
 
@@ -2566,14 +2525,16 @@ def snapshot_changed_partitions(spark, left_dir: str, right_dir: str,
 
 
 def diff_snapshots(spark, left_dir: str, right_dir: str, id_columns,
-                   partition_cols, use_manifests: bool = True,
+                   partition_cols,
                    max_changed_partitions: int = 10000) -> DataFrame:
     """Row-level diff of two partitioned snapshots reading ONLY changed
-    partitions (manifest-driven detection + static partition pruning)."""
+    partitions (manifest-driven detection when both sides carry a
+    _manifest, else one fingerprint scan per side; static partition
+    pruning)."""
     jdf = _bridge(spark.range(1)).diffSnapshots(
         spark._jsparkSession, str(left_dir), str(right_dir),
         _jstrlist(spark, id_columns), _jstrlist(spark, partition_cols),
-        bool(use_manifests), int(max_changed_partitions))
+        int(max_changed_partitions))
     return DataFrame(jdf, spark)
 
 

@@ -315,14 +315,15 @@ class GraftsparkTest(unittest.TestCase):
         # decontamination: doc 3 as the blocklist knocks out only doc 3
         block = df.filter(col("id") == 3).select("text")
         kept3 = sorted(r["id"] for r in P.decontaminate(
-            df, col("id"), col("text"), block, col("text"),
+            df, col("text"), block, col("text"),
             shingle_size=2, min_overlap=1).collect())
         self.assertEqual(kept3, [1, 2])
-        # bloom-prefiltered variant gives the identical exact answer
-        kept4 = sorted(r["id"] for r in P.decontaminate_bloom(
-            df, col("id"), col("text"), block, col("text"),
-            shingle_size=2, min_overlap=1, expected_shingles=64, fpp=0.05).collect())
-        self.assertEqual(kept4, [1, 2])
+        # doc 3 shares 3 bigram shingles with the blocklist: a threshold
+        # above that keeps every doc
+        kept4 = sorted(r["id"] for r in P.decontaminate(
+            df, col("text"), block, col("text"),
+            shingle_size=2, min_overlap=4).collect())
+        self.assertEqual(kept4, [1, 2, 3])
 
     def test_pipeline_epoch_order(self):
         from graftspark import pipeline as P
@@ -664,15 +665,15 @@ class GraftsparkTest(unittest.TestCase):
             ["id", "g", "t"]), "g", "t", 1)
         top = {(r["group_key"], r["term"]) for r in tf.collect()}
         self.assertEqual(top, {("x", "alpha"), ("y", "beta")})
-        # broadcast decontamination: contaminated doc dropped, clean kept
+        # decontamination: contaminated doc dropped, clean kept
         ref_block = self.spark.createDataFrame(
             [("the quick brown fox jumps over the lazy dog",)], ["t"])
         corpus = self.spark.createDataFrame(
             [(1, "intro then the quick brown fox jumps over the lazy dog"),
              (2, "a clean document about gardening and soil quality today")],
             ["id", "t"])
-        clean = sorted(r["id"] for r in P.decontaminate_broadcast(
-            corpus, "id", "t", ref_block, "t", shingle_size=5).collect())
+        clean = sorted(r["id"] for r in P.decontaminate(
+            corpus, "t", ref_block, "t", shingle_size=5).collect())
         self.assertEqual(clean, [2])
         # cross-corpus dedup: the near-copy is dropped, the fresh doc survives
         ref = self.spark.createDataFrame(
@@ -1154,10 +1155,9 @@ class GraftsparkTest(unittest.TestCase):
             [(1, "one two three four five six seven eight nine ten leaked"),
              (2, "totally unrelated clean content here")], ["id", "text"])
         d = tempfile.mkdtemp()
-        P.build_blocklist_artifact(block, col("text"), d, shingle_size=5,
-                                   expected_shingles=1000)
+        P.build_blocklist_artifact(block, col("text"), d, shingle_size=5)
         kept = sorted(r["id"] for r in P.decontaminate_with_artifact(
-            corpus, col("id"), col("text"), d, shingle_size=5).collect())
+            corpus, col("text"), d, shingle_size=5).collect())
         self.assertEqual(kept, [2])
 
     def test_pipeline_index_persistence(self):

@@ -1302,7 +1302,7 @@ object SparkEntry {
 
     // contamination severity REPORT: per-doc shingle/overlap counts and
     // fraction from the same broadcast sorted-array binary-search probe as
-    // decontaminate_broadcast (zero shuffles) — the score survives instead
+    // decontaminate (zero shuffles) — the score survives instead
     // of becoming a drop decision
     "contamination_report" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
@@ -2565,39 +2565,15 @@ object SparkEntry {
     }),
 
     // benchmark decontamination: drop documents sharing any 5-word shingle
-    // with the synthetic blocklist (doc_id % 97 == 0); the blocklist shingle
-    // set is broadcast, so the corpus side stays narrow.
+    // with the synthetic blocklist (doc_id % 97 == 0); the blocklist's sorted
+    // shingle set is broadcast and probed by a codegen'd binary search, so
+    // the corpus side is one narrow filter (zero shuffles/joins).
     "decontaminate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val blocklist = docs.filter(col("doc_id") % 97 === 0)
       graft.dedup.Dedup.decontaminate(
-        docs, col("doc_id"), col("text"), blocklist, col("text"),
+        docs, col("text"), blocklist, col("text"),
         shingleSize = 5, minOverlap = 1)
-        .select(col("doc_id"))
-    }),
-
-    // same decontamination as a pure narrow filter: sorted broadcast set +
-    // codegen'd binary-search overlap count — zero shuffles/joins, the
-    // streaming-legal shape (same oracle as decontaminate)
-    "decontaminate_broadcast" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val blocklist = docs.filter(col("doc_id") % 97 === 0)
-      graft.dedup.Dedup.decontaminateBroadcast(
-        docs, col("doc_id"), col("text"), blocklist, col("text"),
-        shingleSize = 5, minOverlap = 1)
-        .select(col("doc_id"))
-    }),
-
-    // same decontamination, bloom-prefiltered: the filter eliminates ~all
-    // clean shingles before the exact join; exact join on survivors keeps
-    // the result identical (same oracle as decontaminate)
-    "decontaminate_bloom" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val blocklist = docs.filter(col("doc_id") % 97 === 0)
-      graft.dedup.Dedup.decontaminateBloom(
-        docs, col("doc_id"), col("text"), blocklist, col("text"),
-        shingleSize = 5, minOverlap = 1,
-        expectedShingles = 200000L, fpp = 0.01)
         .select(col("doc_id"))
     }),
 
@@ -5747,16 +5723,6 @@ object SparkEntry {
           "cont AS (SELECT DISTINCT ex.doc_id FROM ex JOIN bl USING (g)) " +
           "SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM cont)"),
 
-      // broadcast sorted-set filter is exact: identical oracle to decontaminate
-      "decontaminate_broadcast" ->
-        (s"WITH $docTokCte, sh5 AS (SELECT doc_id, " +
-          "CASE WHEN len(toks) < 5 THEN [] ELSE list_distinct([array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks) - 3)]) END AS s " +
-          "FROM tok), " +
-          "ex AS (SELECT doc_id, u.g FROM sh5, unnest(sh5.s) AS u(g)), " +
-          "bl AS (SELECT DISTINCT g FROM ex WHERE doc_id % 97 = 0), " +
-          "cont AS (SELECT DISTINCT ex.doc_id FROM ex JOIN bl USING (g)) " +
-          "SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM cont)"),
-
       // same shingle identity as the decontamination gates, but counts
       // survive: distinct 5-gram shingles per doc, overlap vs the blocklist
       // set, one ratio division
@@ -5771,16 +5737,6 @@ object SparkEntry {
           "CAST(COALESCE(ovc.n_ov, 0) AS BIGINT) AS n_overlap, " +
           "CASE WHEN len(s.s) = 0 THEN 0.0 ELSE CAST(COALESCE(ovc.n_ov, 0) AS DOUBLE) / CAST(len(s.s) AS DOUBLE) END AS contamination " +
           "FROM sh5 s LEFT JOIN ovc USING (doc_id)"),
-
-      // bloom prefilter + exact verify = exact: identical oracle to decontaminate
-      "decontaminate_bloom" ->
-        (s"WITH $docTokCte, sh5 AS (SELECT doc_id, " +
-          "CASE WHEN len(toks) < 5 THEN [] ELSE list_distinct([array_to_string(toks[i:i+4], ' ') for i in range(1, len(toks) - 3)]) END AS s " +
-          "FROM tok), " +
-          "ex AS (SELECT doc_id, u.g FROM sh5, unnest(sh5.s) AS u(g)), " +
-          "bl AS (SELECT DISTINCT g FROM ex WHERE doc_id % 97 = 0), " +
-          "cont AS (SELECT DISTINCT ex.doc_id FROM ex JOIN bl USING (g)) " +
-          "SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM cont)"),
 
       // thresholds = round(rate * 2^32) as 8 lowercase hex chars; fixed-width
       // lowercase hex compares lexicographically in numeric order

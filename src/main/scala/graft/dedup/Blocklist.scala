@@ -1,79 +1,35 @@
 package graft.dedup
 
-import graft.text.TextFunctions
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.util.sketch.BloomFilter
+import org.apache.spark.sql.{Column, DataFrame}
 
 /**
  * Persistable decontamination blocklist — the "build once, enforce
  * everywhere" artifact: a benchmark blocklist is shared infrastructure, and
  * every pipeline probing it must agree on the exact shingle set. The
- * artifact freezes both probe structures as parquet:
- *
- *  - `<path>/shingles`: the distinct hashed shingles (8 B rows) — the exact
- *    verify set;
- *  - `<path>/bloom`: the serialized Bloom prefilter (1 binary row).
+ * artifact freezes that set as parquet under `<path>/shingles`: the
+ * distinct hashed shingles, 8 B rows in one `bigint` column `h`.
  *
  * Rebuilding per run would re-scan the blocklist AND risk drift if the
  * blocklist table changes mid-campaign; the artifact pins the decision.
- * Enforcement replays [[Dedup.decontaminateBloom]]'s exact shape — Bloom
- * prefilter next to the scan, exact join on survivors — from the loaded
- * structures, so the result is exact at any fpp.
+ * Enforcement is [[Dedup.decontaminate]]'s filter over the frozen set.
+ * Only `shingles/` is read, so artifacts that also carry the `bloom/`
+ * directory older builds wrote still load.
  */
 object Blocklist {
 
   /** Build and persist the artifact from a blocklist table. */
   def buildArtifact(
       blocklist: DataFrame, blocklistText: Column, path: String,
-      shingleSize: Int = 8,
-      expectedShingles: Long = 10L * 1000 * 1000, fpp: Double = 0.01): Unit = {
-    val spark = blocklist.sparkSession
-    val shingles = blocklist
-      .select(explode(TextFunctions.hashedTextShingles(blocklistText, shingleSize)).as("h"))
-      .distinct()
-    shingles.write.mode("overwrite").parquet(s"$path/shingles")
-    // build the Bloom from the WRITTEN set so the two structures can never
-    // disagree about membership
-    val bf = spark.read.parquet(s"$path/shingles")
-      .stat.bloomFilter("h", expectedShingles, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    import spark.implicits._
-    Seq(Tuple1(bos.toByteArray)).toDF("bloom")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/bloom")
-  }
-
-  /** Load the serialized Bloom prefilter (1-row bounded collect). */
-  def loadBloom(spark: SparkSession, path: String): BloomFilter = {
-    val bytes = spark.read.parquet(s"$path/bloom")
-      .select("bloom").head().getAs[Array[Byte]](0)
-    BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-  }
+      shingleSize: Int = 8): Unit =
+    Dedup.blocklistShingles(blocklist, blocklistText, shingleSize)
+      .write.mode("overwrite").parquet(s"$path/shingles")
 
   /** Drop contaminated corpus docs using a persisted artifact — identical
-    * decisions to [[Dedup.decontaminateBloom]] over the original blocklist
-    * (exact: Bloom only prefilters; the survivor join is against the frozen
-    * exact shingle set). */
+    * per-row decisions to [[Dedup.decontaminate]] over the original
+    * blocklist, under the same 32M-shingle cap. */
   def decontaminateWithArtifact(
-      corpus: DataFrame, id: Column, text: Column, path: String,
-      shingleSize: Int = 8, minOverlap: Int = 1): DataFrame = {
-    require(minOverlap >= 1, s"minOverlap must be >= 1: $minOverlap")
-    val spark = corpus.sparkSession
-    val blockShingles = spark.read.parquet(s"$path/shingles")
-      .select(col("h").as("__h"))
-    val bcast = spark.sparkContext.broadcast(loadBloom(spark, path))
-    import org.apache.spark.sql.graftext._
-    val probe = graft.functions.BloomMightContainLong(
-      col("__h").asExpression, bcast).asColumn
-    val docShingles = corpus
-      .select(id.as("__did"),
-        explode(TextFunctions.hashedTextShingles(text, shingleSize)).as("__h"))
-      .filter(probe)
-    val contaminated = docShingles.join(broadcast(blockShingles), Seq("__h"))
-      .groupBy(col("__did")).agg(count(lit(1)).as("__k"))
-      .filter(col("__k") >= minOverlap)
-      .select(col("__did"))
-    corpus.join(contaminated, id === col("__did"), "left_anti")
-  }
+      corpus: DataFrame, text: Column, path: String,
+      shingleSize: Int = 8, minOverlap: Int = 1): DataFrame =
+    corpus.filter(Dedup.belowOverlap(
+      corpus.sparkSession.read.parquet(s"$path/shingles"), text, shingleSize, minOverlap))
 }

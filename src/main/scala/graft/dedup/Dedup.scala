@@ -29,8 +29,8 @@ object Dedup {
     * (a degenerate bucket means the feature, not the pair set, is degenerate). */
   val DefaultMaxBucketSize = 1000
 
-  /** Default cap on the distinct blocklist shingles the broadcast
-    * decontamination shapes collect to the driver: 32M shingles, 256 MB. */
+  /** Cap on the distinct blocklist shingles decontamination collects to
+    * the driver: 32M shingles, 256 MB. */
   val DefaultMaxBlocklistShingles: Long = 32L * 1024 * 1024
 
   // --------------------------------------------------------------------------
@@ -159,124 +159,47 @@ object Dedup {
    * n-gram decontamination step that removes evaluation/benchmark text from a
    * training corpus.
    *
-   * Scale shape: the blocklist (benchmark suites) is tiny next to a 100 TB
-   * corpus, so its distinct shingle set is broadcast — the corpus-side
-   * explode+join is then narrow (no shuffle of corpus data); only the
-   * matched (doc, shingle) rows — a small set — are
-   * shuffled for the per-doc overlap count, and the final anti-join is
-   * against that small contaminated-id set. Shingles are hashed 64-bit
-   * (collision odds 2^-64 — the same representation the dedup pipeline uses),
-   * so the broadcast set is 8 bytes per shingle.
+   * One narrow filter: the blocklist's distinct hashed shingles (64-bit,
+   * collision odds 2^-64, the dedup pipeline's representation) are collected
+   * to a SORTED long array, broadcast once per executor, and each document's
+   * shingle array is counted against it by binary search inside whole-stage
+   * codegen ([[graft.functions.SortedSetOverlapCount]]). Exact, zero shuffles
+   * and zero joins on the corpus side, so a STREAMING `corpus` works as well
+   * as a batch one: the returned frame is a stateless per-batch filter, legal
+   * in any output mode (the blocklist must be static).
+   *
+   * The decision is per row: a document is dropped for its own shingles
+   * only, so rows sharing an id are decided independently. Null and
+   * shingle-less texts are kept.
+   *
+   * Cost model: the blocklist build is one batch job at call time, before
+   * the corpus is scanned; then 8 bytes per distinct blocklist shingle of
+   * executor memory and log2(set) probes per corpus shingle. A blocklist
+   * with more than [[DefaultMaxBlocklistShingles]] (32M, 256 MB) distinct
+   * shingles is refused before the set reaches the driver.
    */
   def decontaminate(
-      corpus: DataFrame, id: Column, text: Column,
+      corpus: DataFrame, text: Column,
       blocklist: DataFrame, blocklistText: Column,
-      shingleSize: Int = 8, minOverlap: Int = 1): DataFrame = {
-    require(minOverlap >= 1, s"minOverlap must be >= 1: $minOverlap")
-    val bl = broadcast(blocklist
-      .select(explode(TextFunctions.hashedTextShingles(blocklistText, shingleSize)).as("__h"))
-      .distinct())
-    // per-doc shingles are distinct (hashedTextShingles dedups), so the join
-    // match count IS the distinct-overlap count
-    val docShingles = corpus.select(
-      id.as("__did"), explode(TextFunctions.hashedTextShingles(text, shingleSize)).as("__h"))
-    val contaminated = docShingles.join(bl, Seq("__h"))
-      .groupBy(col("__did")).agg(count(lit(1)).as("__k"))
-      .filter(col("__k") >= minOverlap)
-      .select(col("__did"))
-    corpus.join(contaminated, id === col("__did"), "left_anti")
-  }
-
-  /**
-   * [[decontaminate]] with a Bloom-filter prefilter — same exact result,
-   * built for the corpus:blocklist size ratio of a real pipeline (100 TB of
-   * training text vs megabytes of benchmark suites).
-   *
-   * Where plain `decontaminate` hash-joins EVERY corpus shingle against the
-   * broadcast blocklist set, this variant first aggregates the blocklist
-   * shingle hashes into a Bloom filter (a distributed `stat.bloomFilter`
-   * build — executors fold their partitions, the driver only merges bitsets)
-   * and probes it with a codegen'd expression right next to the corpus scan.
-   * A corpus shingle that probes negative is DEFINITELY not in the blocklist
-   * (no false negatives), so only probe-positives — true overlaps plus an
-   * `fpp` fraction of noise — reach the exact verification join, and the
-   * per-shingle cost for the ~all-clean corpus drops to two hash probes
-   * against a broadcast bitset: no join-side hash table of the full shingle
-   * set, and the filter ships once per executor, not per task.
-   *
-   * The exact join on the survivors makes the composition exact — `fpp` only
-   * tunes how much noise pays for the second check, never the answer.
-   */
-  def decontaminateBloom(
-      corpus: DataFrame, id: Column, text: Column,
-      blocklist: DataFrame, blocklistText: Column,
-      shingleSize: Int = 8, minOverlap: Int = 1,
-      expectedShingles: Long = 10L * 1000 * 1000, fpp: Double = 0.01): DataFrame = {
-    require(minOverlap >= 1, s"minOverlap must be >= 1: $minOverlap")
-    val blockShingles = blocklist
-      .select(explode(TextFunctions.hashedTextShingles(blocklistText, shingleSize)).as("__h"))
-      .distinct()
-    val bf = blockShingles.stat.bloomFilter("__h", expectedShingles, fpp)
-    val bcast = corpus.sparkSession.sparkContext.broadcast(bf)
-    import org.apache.spark.sql.graftext._
-    val probe = graft.functions.BloomMightContainLong(col("__h").asExpression, bcast).asColumn
-    val docShingles = corpus
-      .select(id.as("__did"), explode(TextFunctions.hashedTextShingles(text, shingleSize)).as("__h"))
-      .filter(probe)
-    val contaminated = docShingles.join(broadcast(blockShingles), Seq("__h"))
-      .groupBy(col("__did")).agg(count(lit(1)).as("__k"))
-      .filter(col("__k") >= minOverlap)
-      .select(col("__did"))
-    corpus.join(contaminated, id === col("__did"), "left_anti")
-  }
-
-  /**
-   * Decontamination as a pure narrow filter: the blocklist's distinct hashed
-   * shingles are collected to a SORTED long array, broadcast once per
-   * executor, and each document's shingle array is counted against it by
-   * binary search inside whole-stage codegen
-   * ([[graft.functions.SortedSetOverlapCount]]). Exact (no Bloom false
-   * positives to verify away), zero shuffles, zero joins — the per-document
-   * decision depends on nothing but the row.
-   *
-   * This is the STREAMING-LEGAL shape: the aggregate + anti-join of
-   * [[decontaminate]] cannot run in a Structured Streaming micro-batch, but
-   * a stateless filter can — pass a streaming `corpus` and the returned
-   * frame streams (see [[graft.streaming.StreamingDecontaminate]]).
-   *
-   * Cost model: 8 bytes per distinct blocklist shingle of executor memory
-   * (`maxBlocklistShingles` guards the driver collect — benchmark suites
-   * are typically millions of shingles, far under the default 32M = 256 MB
-   * bound) and log2(set) probes per corpus shingle. For a blocklist too
-   * large to hold exactly, use [[decontaminateBloom]] instead.
-   */
-  def decontaminateBroadcast(
-      corpus: DataFrame, id: Column, text: Column,
-      blocklist: DataFrame, blocklistText: Column,
-      shingleSize: Int = 8, minOverlap: Int = 1,
-      maxBlocklistShingles: Long = DefaultMaxBlocklistShingles): DataFrame = {
-    require(minOverlap >= 1, s"minOverlap must be >= 1: $minOverlap")
-    val probe = broadcastShingleProbe(
-      corpus, text, blocklist, blocklistText, shingleSize, maxBlocklistShingles)
-    corpus.filter(probe < minOverlap || probe.isNull)
-  }
+      shingleSize: Int = 8, minOverlap: Int = 1): DataFrame =
+    corpus.filter(belowOverlap(
+      blocklistShingles(blocklist, blocklistText, shingleSize), text, shingleSize, minOverlap))
 
   /**
    * Per-document contamination REPORT instead of a filter: every corpus row
    * with its shingle count, blocklist-overlap count, and overlap fraction
    * (`n_overlap / n_shingles`, 0.0 for shingle-less docs). Same broadcast
-   * sorted-long-array + codegen binary-search probe as
-   * [[decontaminateBroadcast]] — zero shuffles, streaming-legal — but the
-   * score survives, so a pipeline can grade contamination severity
-   * (near-miss auditing, threshold sweeps) rather than only dropping docs.
+   * sorted-long-array probe as [[decontaminate]] — zero shuffles,
+   * streaming-legal — but the score survives, so a pipeline can grade
+   * contamination severity (near-miss auditing, threshold sweeps) rather
+   * than only dropping docs.
    */
   def contaminationReport(
       corpus: DataFrame, id: Column, text: Column,
       blocklist: DataFrame, blocklistText: Column,
-      shingleSize: Int = 8,
-      maxBlocklistShingles: Long = DefaultMaxBlocklistShingles): DataFrame = {
-    val probe = broadcastShingleProbe(
-      corpus, text, blocklist, blocklistText, shingleSize, maxBlocklistShingles)
+      shingleSize: Int = 8): DataFrame = {
+    val probe = shingleOverlap(
+      blocklistShingles(blocklist, blocklistText, shingleSize), text, shingleSize)
     val nShingles = size(TextFunctions.hashedTextShingles(text, shingleSize))
     corpus.select(
       id.as("id"),
@@ -287,31 +210,41 @@ object Dedup {
           .otherwise(col("n_overlap").cast("double") / col("n_shingles").cast("double")))
   }
 
-  /** The overlap-count Column for [[decontaminateBroadcast]] — exposed so
-    * callers (and the streaming wrapper) can keep the count as a column
-    * instead of filtering. Runs one batch job over the STATIC blocklist to
-    * build the broadcast set; the returned expression is stateless. */
-  private[graft] def broadcastShingleProbe(
-      corpus: DataFrame, text: Column,
-      blocklist: DataFrame, blocklistText: Column,
-      shingleSize: Int, maxBlocklistShingles: Long): Column = {
+  /** The blocklist's distinct hashed shingles: one `bigint` column `h`, the
+    * frame [[shingleOverlap]] takes and the blocklist artifact stores. */
+  private[graft] def blocklistShingles(
+      blocklist: DataFrame, blocklistText: Column, shingleSize: Int): DataFrame =
+    blocklist.select(explode(TextFunctions.hashedTextShingles(blocklistText, shingleSize)).as("h"))
+      .distinct()
+
+  /** How many of `text`'s distinct shingles are in `hashes`, a one-column
+    * frame of distinct shingle hashes: the one probe every decontamination
+    * entry builds. Runs one batch job over the STATIC `hashes` to collect
+    * them into a sorted array broadcast once per executor; the returned
+    * expression is stateless. */
+  private[graft] def shingleOverlap(
+      hashes: DataFrame, text: Column, shingleSize: Int,
+      maxShingles: Long = DefaultMaxBlocklistShingles): Column = {
     import org.apache.spark.sql.graftext._
     // limit caps the collect BEFORE it reaches the driver, so an over-size
     // blocklist fails the require instead of exhausting driver memory
-    val cap = math.min(maxBlocklistShingles + 1, Int.MaxValue.toLong).toInt
-    val capped = blocklist
-      .select(explode(TextFunctions.hashedTextShingles(blocklistText, shingleSize)).as("__h"))
-      .distinct()
-      .limit(cap)
-      .collect()
-    require(capped.length <= maxBlocklistShingles,
-      s"blocklist has > $maxBlocklistShingles distinct shingles; " +
-        "use decontaminateBloom for blocklists this large")
-    val hashes = capped.map(_.getLong(0))
-    java.util.Arrays.sort(hashes)
-    val bcast = corpus.sparkSession.sparkContext.broadcast(hashes)
+    val capped = hashes.limit(math.min(maxShingles + 1, Int.MaxValue.toLong).toInt).collect()
+    require(capped.length <= maxShingles,
+      s"blocklist has > $maxShingles distinct shingles, the cap of the broadcast set")
+    val sorted = capped.map(_.getLong(0))
+    java.util.Arrays.sort(sorted)
+    val bcast = hashes.sparkSession.sparkContext.broadcast(sorted)
     graft.functions.SortedSetOverlapCount(
       TextFunctions.hashedTextShingles(text, shingleSize).asExpression, bcast).asColumn
+  }
+
+  /** The keep predicate of [[decontaminate]]: fewer than `minOverlap` of
+    * `text`'s shingles in `hashes`, or no shingles at all. */
+  private[graft] def belowOverlap(
+      hashes: DataFrame, text: Column, shingleSize: Int, minOverlap: Int): Column = {
+    require(minOverlap >= 1, s"minOverlap must be >= 1: $minOverlap")
+    val probe = shingleOverlap(hashes, text, shingleSize)
+    probe < minOverlap || probe.isNull
   }
 
   // --------------------------------------------------------------------------

@@ -143,19 +143,17 @@ object SnapshotDiff {
   /**
    * Row-level diff of two partitioned snapshots reading ONLY partitions
    * whose content differs. Detection uses the manifest sidecars when both
-   * exist (`useManifests`, default), else one grouped fingerprint scan per
-   * side. `maxChangedPartitions` caps the driver-side key collect (one
-   * tiny row per changed partition — a cap breach means "diff everything"
-   * is the right plan anyway, and the require says so).
+   * exist, else one grouped fingerprint scan per side.
+   * `maxChangedPartitions` caps the driver-side key collect (one tiny row
+   * per changed partition — a cap breach means "diff everything" is the
+   * right plan anyway, and the require says so).
    */
   def diffSnapshots(spark: SparkSession, leftDir: String, rightDir: String,
                     idColumns: Seq[String], partitionCols: Seq[String],
-                    useManifests: Boolean = true,
                     maxChangedPartitions: Int = 10000): DataFrame = {
     val left = FooterStats.readSparkWritten(spark, leftDir)
     val right = FooterStats.readSparkWritten(spark, rightDir)
-    val haveManifests = useManifests &&
-      manifestExists(spark, leftDir) && manifestExists(spark, rightDir)
+    val haveManifests = manifestExists(spark, leftDir) && manifestExists(spark, rightDir)
     val (lSum, rSum) =
       if (haveManifests)
         (partitionManifestSummary(spark, leftDir, partitionCols),

@@ -5,58 +5,15 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType}
-import org.apache.spark.util.sketch.BloomFilter
-
-/**
- * bloom_might_contain_long(hash): membership probe of a 64-bit hash against a
- * pre-built [[org.apache.spark.util.sketch.BloomFilter]] shipped to executors
- * as a [[Broadcast]] — one torrent transfer per executor, NOT a per-task
- * closure copy, which is what makes a multi-megabyte filter viable on a
- * 1000-executor cluster.
- *
- * No false negatives (every inserted hash probes true), tunable false
- * positives — so it is a safe PREFILTER: follow it with an exact check on the
- * survivors and the composition stays exact. Codegen caches the dereferenced
- * filter in a mutable slot at init, so the per-row cost is the two xxhash
- * probes inside `mightContainLong`, inside whole-stage codegen.
- */
-case class BloomMightContainLong(child: Expression, filter: Broadcast[BloomFilter])
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain_long expects bigint, got ${t.sql}")
-  }
-
-  @transient private lazy val localFilter: BloomFilter = filter.value
-
-  override def nullSafeEval(hash: Any): Any =
-    localFilter.mightContainLong(hash.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bloomBroadcast", filter,
-      "org.apache.spark.broadcast.Broadcast")
-    val bf = ctx.addMutableState("org.apache.spark.util.sketch.BloomFilter", "bloomFilter",
-      v => s"$v = (org.apache.spark.util.sketch.BloomFilter) $bcRef.value();")
-    defineCodeGen(ctx, ev, c => s"$bf.mightContainLong($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /**
  * sorted_set_overlap_count(hashes): how many elements of an `array<bigint>`
  * are members of a SORTED long array shipped to executors as a [[Broadcast]]
- * (binary search per element — exact, no false positives). The per-row
- * decision needs no shuffle, no join, and no state, which makes it legal in
- * a Structured Streaming micro-batch where a per-doc aggregate + anti-join
- * (the batch decontamination shape) is not. Null array -> null; null
- * elements are skipped.
+ * (binary search per element — exact, no false positives): the probe of
+ * [[graft.dedup.Dedup.decontaminate]]. The per-row decision needs no
+ * shuffle, no join, and no state, which makes it legal in a Structured
+ * Streaming micro-batch. Null array -> null; null elements are skipped.
  */
 case class SortedSetOverlapCount(child: Expression, set: Broadcast[Array[Long]])
     extends UnaryExpression {

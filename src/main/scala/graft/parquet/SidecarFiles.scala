@@ -1,6 +1,6 @@
 package graft.parquet
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -20,11 +20,17 @@ object SidecarFiles {
     * `_SUCCESS` excluded). */
   def dataFiles(spark: SparkSession, dir: String): Seq[String] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).filter(_.isFile).map(_.getPath)
-      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.toString).toSeq
+    dataFiles(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .map(_.getPath.toString).toSeq
   }
+
+  /** The files directly inside `dir` that are not hidden: no `_` or `.`
+    * name prefix (`_SUCCESS`, `.crc` checksums). One listing RPC. */
+  def dataFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    fs.listStatus(dir).filter { s =>
+      val name = s.getPath.getName
+      s.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
 
   /** Read the sidecar directory's data files as parquet. */
   def read(spark: SparkSession, dir: String): DataFrame = {

@@ -22,7 +22,9 @@ import org.apache.spark.storage.StorageLevel
  *  3.  exact dedup      — one hash shuffle on the normalized fingerprint
  *  4.  near-dup dedup   — MinHash bucket shuffle + exact-Jaccard verify,
  *                        keep-first per duplicate set
- *  5.  decontamination  — broadcast blocklist shingles, narrow corpus side
+ *  5.  decontamination  — sorted broadcast blocklist-shingle set probed by
+ *                        a narrow filter (Dedup.decontaminate); a blocklist
+ *                        over 32M distinct shingles is refused
  *  6.  hash sampling    — narrow md5-threshold filter
  *
  * Stages 1, 2, 2b, 5 and 6 are pure narrow filters: at 100 TB they fuse with
@@ -89,7 +91,7 @@ object Curation {
         Dedup.DefaultMaxBucketSize, handle)))
     val decontaminate: Option[Step] = blocklist.map { case (bdf, btext) =>
       "5_decontaminate" -> ((cur, _) => Dedup.decontaminate(
-        cur, id, text, bdf, btext, blocklistShingleSize, minOverlap))
+        cur, text, bdf, btext, blocklistShingleSize, minOverlap))
     }
     runStages(docs, id, text, leading, nearDup +: decontaminate.toSeq,
       sampleRate, sampleSalt, append = None, unpersistHandle)

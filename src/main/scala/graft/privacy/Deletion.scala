@@ -1,5 +1,6 @@
 package graft.privacy
 
+import graft.parquet.SidecarFiles
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -58,9 +59,7 @@ object Deletion {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
     graft.write.SwapFiles.recover(fs, dirPath)
-    val filesTotal = fs.listStatus(dirPath)
-      .count(s => s.isFile && !s.getPath.getName.startsWith("_")
-        && !s.getPath.getName.startsWith(".")).toLong
+    val filesTotal = SidecarFiles.dataFiles(fs, dirPath).length.toLong
 
     // the ONE corpus-sized pass: a column-pruned scan of the id column with
     // file provenance, semi-joined against the broadcast deletion list

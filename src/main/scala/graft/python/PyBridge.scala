@@ -386,32 +386,11 @@ object PyBridge {
                        separator: String, outputTextColumn: String): DataFrame =
     graft.dedup.Dedup.deduplicateLines(df, id, text, separator, outputTextColumn)
 
-  def decontaminate(corpus: DataFrame, id: Column, text: Column,
+  def decontaminate(corpus: DataFrame, text: Column,
                     blocklist: DataFrame, blocklistText: Column,
                     shingleSize: Int, minOverlap: Int): DataFrame =
-    graft.dedup.Dedup.decontaminate(corpus, id, text, blocklist, blocklistText,
+    graft.dedup.Dedup.decontaminate(corpus, text, blocklist, blocklistText,
       shingleSize, minOverlap)
-
-  def decontaminateBloom(corpus: DataFrame, id: Column, text: Column,
-                         blocklist: DataFrame, blocklistText: Column,
-                         shingleSize: Int, minOverlap: Int,
-                         expectedShingles: Long, fpp: Double): DataFrame =
-    graft.dedup.Dedup.decontaminateBloom(corpus, id, text, blocklist, blocklistText,
-      shingleSize, minOverlap, expectedShingles, fpp)
-
-  def decontaminateBroadcast(corpus: DataFrame, id: Column, text: Column,
-                             blocklist: DataFrame, blocklistText: Column,
-                             shingleSize: Int, minOverlap: Int,
-                             maxBlocklistShingles: Long): DataFrame =
-    graft.dedup.Dedup.decontaminateBroadcast(corpus, id, text, blocklist, blocklistText,
-      shingleSize, minOverlap, maxBlocklistShingles)
-
-  def decontaminateStream(stream: DataFrame, text: Column,
-                          blocklist: DataFrame, blocklistText: Column,
-                          shingleSize: Int, minOverlap: Int,
-                          maxBlocklistShingles: Long): DataFrame =
-    graft.streaming.StreamingDecontaminate.decontaminateStream(stream, text,
-      blocklist, blocklistText, shingleSize, minOverlap, maxBlocklistShingles)
 
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      queryId: Column, queryVec: Column,
@@ -590,15 +569,13 @@ object PyBridge {
     graft.multimodal.Multimodal.dropExactPayloadDuplicates(df, id, payload)
 
   def buildBlocklistArtifact(blocklist: DataFrame, text: Column, path: String,
-                             shingleSize: Int, expectedShingles: Long,
-                             fpp: Double): Unit =
-    graft.dedup.Blocklist.buildArtifact(blocklist, text, path, shingleSize,
-      expectedShingles, fpp)
+                             shingleSize: Int): Unit =
+    graft.dedup.Blocklist.buildArtifact(blocklist, text, path, shingleSize)
 
-  def decontaminateWithArtifact(corpus: DataFrame, id: Column, text: Column,
+  def decontaminateWithArtifact(corpus: DataFrame, text: Column,
                                 path: String, shingleSize: Int,
                                 minOverlap: Int): DataFrame =
-    graft.dedup.Blocklist.decontaminateWithArtifact(corpus, id, text, path,
+    graft.dedup.Blocklist.decontaminateWithArtifact(corpus, text, path,
       shingleSize, minOverlap)
 
   /** Checks rules arrive as parallel lists (py4j has no case-class ADTs):
@@ -1483,10 +1460,9 @@ object PyBridge {
 
   def diffSnapshots(spark: SparkSession, leftDir: String, rightDir: String,
                     idColumns: JList[String], partitionCols: JList[String],
-                    useManifests: Boolean, maxChangedPartitions: Int): DataFrame =
+                    maxChangedPartitions: Int): DataFrame =
     graft.diff.SnapshotDiff.diffSnapshots(spark, leftDir, rightDir,
-      idColumns.asScala.toSeq, partitionCols.asScala.toSeq,
-      useManifests, maxChangedPartitions)
+      idColumns.asScala.toSeq, partitionCols.asScala.toSeq, maxChangedPartitions)
 
   def verifyManifestSummary(spark: SparkSession, dir: String): DataFrame =
     graft.write.Manifest.verifySummary(spark, dir)

@@ -14,9 +14,10 @@ import org.apache.spark.sql.{Column, DataFrame}
  *  - language id, quality rules, classifier, hash sampling — STATELESS
  *    narrow filters (identical kernels and semantics to the batch stages,
  *    so a document passes the stream iff it passes the batch pass);
- *  - decontamination — the broadcast-exact variant
- *    ([[StreamingDecontaminate]]): the blocklist is a bounded sorted long
- *    array shipped once per executor, the probe a codegen'd narrow filter;
+ *  - decontamination — the batch stage's own filter
+ *    ([[graft.dedup.Dedup.decontaminate]]): the blocklist is a bounded
+ *    sorted long array shipped once per executor, the probe a codegen'd
+ *    narrow filter;
  *  - exact dedup — the only STATEFUL stage: keep-first per normalized-text
  *    fingerprint with watermark-bounded 8-byte state
  *    (`dropDuplicatesWithinWatermark`), the only sustainable mode for an
@@ -79,10 +80,9 @@ object StreamingCurate {
       minStopwordRatio, maxTopBigramFraction, classifierWeights, classifierBias,
       classifierThreshold, dsirWeights, dsirThreshold, dsirPortableHash)
     val decontKeep: Column = blocklist match {
-      case Some((bdf, btext)) =>
-        val probe = Dedup.broadcastShingleProbe(
-          stream, text, bdf, btext, blocklistShingleSize, Dedup.DefaultMaxBlocklistShingles)
-        probe < minOverlap || probe.isNull
+      case Some((bdf, btext)) => Dedup.belowOverlap(
+        Dedup.blocklistShingles(bdf, btext, blocklistShingleSize), text,
+        blocklistShingleSize, minOverlap)
       case None => lit(true)
     }
     val sampleKeep: Column =

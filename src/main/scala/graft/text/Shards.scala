@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.parquet.SidecarFiles
 import graft.write.{Compaction, Manifest, SwapFiles}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -147,9 +148,7 @@ object Shards {
       // artifact (an input_file_name row-filter over the whole directory
       // would be an O(artifact) scan at 100 TB).
       val hadoopConf = spark.sessionState.newHadoopConf()
-      val ranges = fs.listStatus(dirPath)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
+      val ranges = SidecarFiles.dataFiles(fs, dirPath)
         .flatMap { s =>
           graft.parquet.FooterStats
             .longColumnRange(hadoopConf, s.getPath, "seq_id")
@@ -369,9 +368,8 @@ object Shards {
                                 targetFileBytes: Long): Unit = {
     val dirPath = new org.apache.hadoop.fs.Path(dataDir)
     val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
-    def dataFiles = fs.listStatus(dirPath).filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    val current = dataFiles.length
+    val landed = SidecarFiles.dataFiles(fs, dirPath)
+    val current = landed.length
     val target = Compaction.targetFileCount(spark, dataDir, targetFileBytes)
     if (current > target * 3 / 2 || target > current * 3 / 2) {
       val resized = new org.apache.hadoop.fs.Path(
@@ -380,18 +378,15 @@ object Shards {
         .repartitionByRange(target, col("seq_id"))
         .sortWithinPartitions(col("seq_id"))
         .write.mode("overwrite").parquet(resized.toString)
-      dataFiles.foreach(s => require(fs.delete(s.getPath, false),
+      landed.foreach(s => require(fs.delete(s.getPath, false),
         s"failed to delete ${s.getPath} during shard resize"))
       // move DATA part files only — a _SUCCESS/_checksum sidecar would
       // collide with the original write's own marker in data/
-      fs.listStatus(resized).filter(s => s.isFile &&
-          !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .foreach { s =>
-          require(fs.rename(s.getPath,
-            new org.apache.hadoop.fs.Path(dirPath, s.getPath.getName)),
-            s"failed to move ${s.getPath} during shard resize")
-        }
+      SidecarFiles.dataFiles(fs, resized).foreach { s =>
+        require(fs.rename(s.getPath,
+          new org.apache.hadoop.fs.Path(dirPath, s.getPath.getName)),
+          s"failed to move ${s.getPath} during shard resize")
+      }
       require(fs.delete(resized, true), s"failed to drop $resized")
     }
   }

@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * (8 B/term) broadcast once per executor; every document is then scored by
  * one fused tokenize+hash+binary-search kernel pass next to the scan
  * ([[graft.functions.TokenSetCoverage]]) — no explode, no join, no shuffle,
- * streaming-legal (the [[graft.dedup.Dedup.decontaminateBroadcast]]
+ * streaming-legal (the [[graft.dedup.Dedup.decontaminate]]
  * discipline). Deriving a top-n corpus vocabulary costs one
  * map-side-combined token count plus a TakeOrderedAndProject top-n — the
  * only shuffle, carrying distinct tokens, not positions.

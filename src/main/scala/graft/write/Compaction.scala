@@ -1,6 +1,6 @@
 package graft.write
 
-import graft.parquet.ParquetMeta
+import graft.parquet.{ParquetMeta, SidecarFiles}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -85,9 +85,7 @@ object Compaction {
         s"${if (nested.length > 3) ", …" else ""}) — compact each partition " +
         "directory individually, or re-layout with PartitionedWrite")
     val n = targetFileCount(spark, dir, targetFileBytes)
-    def dataFiles = fs.listStatus(dirPath).filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    val old = dataFiles.map(_.getPath)
+    val old = SidecarFiles.dataFiles(fs, dirPath).map(_.getPath)
     val df = spark.read.parquet(dir)
     val sized =
       if (clusterCols.nonEmpty) df.repartition(n, clusterCols.map(col): _*)
@@ -96,7 +94,7 @@ object Compaction {
     val tmp = new org.apache.hadoop.fs.Path(dirPath, s"_compact_tmp_$uuid")
     sized.write.parquet(tmp.toString)
     SwapFiles.publishAndDelete(fs, dirPath, tmp, "compact", uuid, old.toSeq)
-    (old.length, dataFiles.length)
+    (old.length, SidecarFiles.dataFiles(fs, dirPath).length)
   }
 
   /**

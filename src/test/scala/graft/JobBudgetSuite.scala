@@ -133,8 +133,22 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
     info(s"jobs: curate $curateJobs, curateIncrement $incrementJobs")
     // exact pins, not ceilings: a change to how the stages run must not
     // move these counts unnoticed, in either direction
-    assert(curateJobs == 31, s"curate ran $curateJobs jobs")
+    assert(curateJobs == 29, s"curate ran $curateJobs jobs")
     assert(incrementJobs == 44, s"curateIncrement ran $incrementJobs jobs")
+  }
+
+  test("decontaminate: one call and its collect run the blocklist build and one corpus scan") {
+    val docs = (1 to 40).map { i =>
+      val text = s"document $i is about topic ${i % 3} with alpha beta gamma delta words"
+      (i.toLong, if (i % 10 == 0) s"$text the quick brown fox jumps over the lazy dog" else text)
+    }.toDF("id", "text")
+    val block = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
+    val (kept, jobs) = jobsIn(Dedup.decontaminate(docs, col("text"), block, col("text"),
+      shingleSize = 5).select("id").as[Long].collect())
+    assert(kept.sorted.toSeq == (1L to 40L).filter(_ % 10 != 0))
+    info(s"jobs: decontaminate $jobs")
+    // exact pin: the distinct blocklist collect, then the filtered scan
+    assert(jobs == 2, s"decontaminate ran $jobs jobs")
   }
 
   test("snapshot diff: storing and diffing snapshots runs no schema-inference job") {

@@ -163,7 +163,7 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     ).toDF("id", "text")
     val block = Seq("the quick brown fox jumps over the lazy dog today").toDF("text")
     def kept(minOverlap: Int): Seq[Int] =
-      Dedup.decontaminate(corpus, col("id"), col("text"), block, col("text"),
+      Dedup.decontaminate(corpus, col("text"), block, col("text"),
         shingleSize = 5, minOverlap = minOverlap)
         .select("id").as[Int].collect().sorted.toSeq
     // any shared 5-shingle contaminates: both the exact copy and the near-dup go
@@ -172,79 +172,53 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     // the common 9-token prefix — a 6-overlap requirement keeps it
     assert(kept(6) == Seq(2, 3))
     intercept[IllegalArgumentException] {
-      Dedup.decontaminate(corpus, col("id"), col("text"), block, col("text"), 5, 0)
+      Dedup.decontaminate(corpus, col("text"), block, col("text"), 5, 0)
     }
   }
 
+  /** 500 docs, every 25th carrying the benchmark sentence of [[benchmarkBlock]]. */
+  private def contaminatedCorpus = (1 to 500).map { i =>
+    val base = s"document number $i talks about topic ${i % 7} in depth with many words " +
+      s"alpha$i beta gamma delta epsilon zeta eta theta iota kappa"
+    val text = if (i % 25 == 0) base + " the quick brown fox jumps over the lazy dog" else base
+    (i.toLong, text)
+  }.toDF("id", "text")
+
+  private def benchmarkBlock = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
+
+  private def sortedIds(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("id").as[Long].collect().sorted.toSeq
+
   test("decontaminateBloom matches exact decontaminate on a sizeable corpus") {
-    // 500 docs, every 25th contaminated with a benchmark sentence; a tiny
-    // bloom filter (high fpp pressure) must still give the exact answer
-    // because the verify join runs on the probe survivors
-    val corpus = (1 to 500).map { i =>
-      val base = s"document number $i talks about topic ${i % 7} in depth with many words " +
-        s"alpha$i beta gamma delta epsilon zeta eta theta iota kappa"
-      val text = if (i % 25 == 0) base + " the quick brown fox jumps over the lazy dog" else base
-      (i.toLong, text)
-    }.toDF("id", "text")
-    val block = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select("id").as[Long].collect().sorted.toSeq
-    val exact = ids(Dedup.decontaminate(corpus, col("id"), col("text"), block, col("text"),
-      shingleSize = 5, minOverlap = 1))
-    val bloom = ids(Dedup.decontaminateBloom(corpus, col("id"), col("text"), block, col("text"),
-      shingleSize = 5, minOverlap = 1, expectedShingles = 64, fpp = 0.05))
-    assert(bloom == exact)
-    assert(exact.size == 480) // 20 contaminated docs dropped
-    // undersized filter (fpp pressure way past spec): still exact
-    val tiny = ids(Dedup.decontaminateBloom(corpus, col("id"), col("text"), block, col("text"),
-      shingleSize = 5, minOverlap = 1, expectedShingles = 4, fpp = 0.5))
-    assert(tiny == exact)
+    val kept = sortedIds(Dedup.decontaminate(contaminatedCorpus, col("text"),
+      benchmarkBlock, col("text"), shingleSize = 5, minOverlap = 1))
+    // the 20 contaminated docs are dropped, the other 480 kept
+    assert(kept == (1L to 500L).filter(_ % 25 != 0))
+    // the decision is per row: a clean row sharing a contaminated row's id
+    // is kept
+    val sharedId = contaminatedCorpus.union(Seq((25L, "a clean row reusing id 25")).toDF("id", "text"))
+    val keptShared = Dedup.decontaminate(sharedId, col("text"), benchmarkBlock, col("text"),
+      shingleSize = 5).select("text").as[String].collect()
+    assert(keptShared.length == 481 && keptShared.contains("a clean row reusing id 25"))
   }
 
   test("decontaminateBroadcast matches exact decontaminate; oversize blocklist refused") {
-    val corpus = (1 to 500).map { i =>
-      val base = s"document number $i talks about topic ${i % 7} in depth with many words " +
-        s"alpha$i beta gamma delta epsilon zeta eta theta iota kappa"
-      val text = if (i % 25 == 0) base + " the quick brown fox jumps over the lazy dog" else base
-      (i.toLong, text)
-    }.toDF("id", "text")
-    val block = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select("id").as[Long].collect().sorted.toSeq
-    val exact = ids(Dedup.decontaminate(corpus, col("id"), col("text"), block, col("text"),
-      shingleSize = 5, minOverlap = 1))
-    val bcast = ids(Dedup.decontaminateBroadcast(corpus, col("id"), col("text"),
-      block, col("text"), shingleSize = 5, minOverlap = 1))
-    assert(bcast == exact)
     // minOverlap above the shared-shingle count keeps everything
-    val lax = ids(Dedup.decontaminateBroadcast(corpus, col("id"), col("text"),
-      block, col("text"), shingleSize = 5, minOverlap = 100))
-    assert(lax.size == 500)
+    val lax = sortedIds(Dedup.decontaminate(contaminatedCorpus, col("text"),
+      benchmarkBlock, col("text"), shingleSize = 5, minOverlap = 100))
+    assert(lax == (1L to 500L))
     // null/short texts pass through unharmed (no shingles -> no overlap)
-    val withNull = corpus.union(Seq((9999L, null.asInstanceOf[String]), (9998L, "ab")).toDF("id", "text"))
-    val kept = ids(Dedup.decontaminateBroadcast(withNull, col("id"), col("text"),
-      block, col("text"), shingleSize = 5, minOverlap = 1))
-    assert(kept.contains(9999L) && kept.contains(9998L))
-    // a blocklist bigger than the bound is refused before it reaches the driver
+    val withNull = contaminatedCorpus.union(
+      Seq((9999L, null.asInstanceOf[String]), (9998L, "ab")).toDF("id", "text"))
+    val kept = sortedIds(Dedup.decontaminate(withNull, col("text"),
+      benchmarkBlock, col("text"), shingleSize = 5, minOverlap = 1))
+    assert(kept == (1L to 500L).filter(_ % 25 != 0) ++ Seq(9998L, 9999L))
+    // a blocklist bigger than the cap is refused before it reaches the driver
     val err = intercept[IllegalArgumentException] {
-      Dedup.decontaminateBroadcast(corpus, col("id"), col("text"),
-        corpus, col("text"), shingleSize = 5, minOverlap = 1, maxBlocklistShingles = 10L)
+      Dedup.shingleOverlap(Dedup.blocklistShingles(contaminatedCorpus, col("text"), 5),
+        col("text"), 5, maxShingles = 10L)
     }
-    assert(err.getMessage.contains("decontaminateBloom"))
-  }
-
-  test("bloom probe expression has no false negatives and codegen-compiles") {
-    import org.apache.spark.sql.graftext._
-    val values = spark.range(1000).select(xxhash64(col("id")).as("h"))
-    val bf = values.stat.bloomFilter("h", 1000, 0.03)
-    val bcast = spark.sparkContext.broadcast(bf)
-    val probe = graft.functions.BloomMightContainLong(col("h").asExpression, bcast).asColumn
-    // every inserted hash must probe true
-    assert(values.filter(!probe).count() === 0L)
-    // disjoint hashes mostly probe false (fpp 3%: allow generous 15%)
-    val fresh = spark.range(10000, 20000).select(xxhash64(col("id")).as("h"))
-    val fp = fresh.filter(probe).count()
-    assert(fp < 1500, s"false-positive count unexpectedly high: $fp")
+    assert(err.getMessage.contains("blocklist has > 10 distinct shingles"))
   }
 
   test("minhash near-dup pairs find planted duplicates only") {
@@ -457,10 +431,10 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
     assert(rep(2L).getLong(2) == 0L && rep(2L).getDouble(3) == 0.0)
     assert(rep(3L).getLong(1) == 0L && rep(3L).getDouble(3) == 0.0)
     // the report's minOverlap-1 decision equals the filter's
-    val kept = graft.dedup.Dedup.decontaminateBroadcast(
-        docs, col("id"), col("text"), block, col("text"), shingleSize = 5)
+    val kept = graft.dedup.Dedup.decontaminate(
+        docs, col("text"), block, col("text"), shingleSize = 5)
       .select("id").as[Long].collect().toSet
-    assert(kept == rep.filter(_._2.getLong(2) == 0L).keySet)
+    assert(kept == Set(2L, 3L) && kept == rep.filter(_._2.getLong(2) == 0L).keySet)
   }
 
   test("corpus drift: exact deltas, one-sided groups read as zero") {
@@ -1614,17 +1588,17 @@ class PipelineSuite extends AnyFunSuite with SparkTest {
       (3L, "another clean one about different topics altogether")).toDF("id", "text")
     val tmp = java.nio.file.Files.createTempDirectory("graft_bl").toString
     graft.dedup.Blocklist.buildArtifact(block, col("text"), tmp, shingleSize = 5)
-    val fromArtifact = graft.dedup.Blocklist.decontaminateWithArtifact(
-      corpus, col("id"), col("text"), tmp, shingleSize = 5)
+    def fromArtifact = graft.dedup.Blocklist.decontaminateWithArtifact(
+      corpus, col("text"), tmp, shingleSize = 5)
       .select("id").as[Long].collect().toSet
-    val direct = Dedup.decontaminateBloom(
-      corpus, col("id"), col("text"), block, col("text"), shingleSize = 5)
+    val direct = Dedup.decontaminate(
+      corpus, col("text"), block, col("text"), shingleSize = 5)
       .select("id").as[Long].collect().toSet
     assert(fromArtifact == direct && fromArtifact == Set(2L, 3L))
-    // the loaded bloom agrees with the frozen shingle set
-    val bf = graft.dedup.Blocklist.loadBloom(spark, tmp)
-    val hashes = spark.read.parquet(s"$tmp/shingles").select("h").as[Long].collect()
-    assert(hashes.nonEmpty && hashes.forall(bf.mightContainLong))
+    // an artifact written by an older build also carries a bloom/ directory:
+    // it is ignored, and the decisions stay the same
+    Seq(Tuple1(Array[Byte](1, 2, 3))).toDF("bloom").write.parquet(s"$tmp/bloom")
+    assert(fromArtifact == Set(2L, 3L))
   }
 
   test("IVF and PQ indexes persist to parquet and round-trip exactly") {

@@ -78,6 +78,22 @@ class SnapshotDiffSuite extends AnyFunSuite with SparkTest {
     assert(!inc.map(_._2).toSet.exists(Set(3L, 4L, 6L)))
   }
 
+  test("diffSnapshots without manifests detects by data scan: same rows as the manifest path") {
+    def rows(ld: String, rd: String) =
+      SnapshotDiff.diffSnapshots(spark, ld, rd, Seq("id"), Seq("p"))
+        .collect().map(_.toString).sorted.toSeq
+    val (ml, mr, pl, pr) = (tmp(), tmp(), tmp(), tmp())
+    SnapshotDiff.writePartitionedWithManifest(leftDf, ml, Seq("p"))
+    SnapshotDiff.writePartitionedWithManifest(rightDf, mr, Seq("p"))
+    leftDf.write.mode("overwrite").partitionBy("p").parquet(pl)
+    rightDf.write.mode("overwrite").partitionBy("p").parquet(pr)
+    assert(!new java.io.File(s"$pl/_manifest").exists())
+    val plain = rows(pl, pr)
+    assert(plain == rows(ml, mr))
+    // partitions a (changed), c (removed) and e (added) only
+    assert(plain.length == 4)
+  }
+
   test("identical snapshots produce an empty diff without reading data") {
     val (ld, rd) = (tmp(), tmp())
     SnapshotDiff.writePartitionedWithManifest(leftDf, ld, Seq("p"))

@@ -42,7 +42,7 @@ class StreamingDedupSuite extends AnyFunSuite with SparkTest {
 
     val input = MemoryStream[Long]
     val lookup = docs.toDF("id", "text")
-    val stream = graft.streaming.StreamingDecontaminate.decontaminateStream(
+    val stream = graft.dedup.Dedup.decontaminate(
       input.toDF().toDF("id").join(lookup, "id"), col("text"), block, col("text"),
       shingleSize = 5, minOverlap = 1)
     val query = stream.writeStream.format("memory")
@@ -54,17 +54,11 @@ class StreamingDedupSuite extends AnyFunSuite with SparkTest {
       query.processAllAvailable()
       val ids = spark.table("sdc_out").select("id").as[Long].collect().toSet
       assert(ids === Set(2L, 3L, 5L))
-      // identical to the batch operator over the same rows
-      val batch = graft.dedup.Dedup.decontaminateBroadcast(
-        lookup, col("id"), col("text"), block, col("text"),
+      // identical to the same operator over the same rows as a batch frame
+      val batch = graft.dedup.Dedup.decontaminate(
+        lookup, col("text"), block, col("text"),
         shingleSize = 5, minOverlap = 1).select("id").as[Long].collect().toSet
       assert(batch === ids)
-      // a batch frame is rejected (use the batch operator instead)
-      val err = intercept[IllegalArgumentException] {
-        graft.streaming.StreamingDecontaminate.decontaminateStream(
-          lookup, col("text"), block, col("text"))
-      }
-      assert(err.getMessage.contains("decontaminateBroadcast"))
     } finally query.stop()
   }
 
