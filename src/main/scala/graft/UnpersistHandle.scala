@@ -37,6 +37,10 @@ class UnpersistHandle {
     ()
   }
 
+  /** Load the cache of this handle's DataFrame, if one is set, before a
+    * plan that reads it runs ([[org.apache.spark.sql.graftext.loadCache]]). */
+  private[graft] def loadCache(): Unit = df.foreach(org.apache.spark.sql.graftext.loadCache)
+
   /** Run `func` with this handle's DataFrame guaranteed to be unpersisted afterwards. */
   def withUnpersist[R](blocking: Boolean = false)(func: => R): R =
     try func finally unpersist(blocking)

@@ -57,17 +57,16 @@ object SnapshotDiff {
 
   /** Hive-partitioned write + manifest sidecar (the incremental-diff-ready
     * snapshot format): data partitioned by `partitionCols`, then one
-    * manifest row per landed file. */
+    * manifest row per landed file, fingerprinted by
+    * [[Manifest.fileSummaryWith]] over a footer-schema read-back and landed
+    * driver-side. */
   def writePartitionedWithManifest(df: DataFrame, dir: String,
                                    partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "need at least one partition column")
+    val spark = df.sparkSession
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir)
-    val back = FooterStats.readSparkWritten(df.sparkSession, dir)
-    back.select(input_file_name().as("file"),
-        xxhash64(to_json(struct(col("*")))).as("h"))
-      .groupBy("file")
-      .agg(count(lit(1)).as("rows"), bit_xor(col("h")).as("fingerprint"))
-      .write.mode("overwrite").parquet(Manifest.manifestPath(dir))
+    Manifest.writeManifestRows(spark, dir, Manifest.fileSummaryWith(
+      FooterStats.readSparkWritten(spark, dir)).collect().toSeq)
   }
 
   /** Per-partition (partitionCols…, rows, fingerprint) from the DATA — one

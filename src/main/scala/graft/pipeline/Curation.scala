@@ -192,9 +192,14 @@ object Curation {
     counts ++= leading.report(leading.measure(docs))
     var cur = step("3_exact", Dedup.dropExactTextDuplicates(docs.filter(leading.keep), text, id))
 
+    // a step's internal cache is loaded before its stage count runs: the
+    // count's plan reads it from several table-cache stages, which would
+    // otherwise submit a timing-dependent number of load jobs
     steps.foreach { case (stage, body) =>
       val handle = new SilentUnpersistHandle()
-      cur = step(stage, body(cur, handle))
+      val next = body(cur, handle)
+      handle.loadCache()
+      cur = step(stage, next)
       handle.unpersist()
     }
 

@@ -1,7 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.parquet.LocalParquet
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /**
  * Byte-pair-encoding tokenizer — deterministic train + codegen'd encode,
@@ -148,18 +150,17 @@ object Bpe {
 
   /** Persist the merge list as a tiny `(rank, left, right)` parquet table —
     * a tokenizer is only useful if EVERY pipeline run (and the serving
-    * side) encodes against the same merges. */
-  def saveBpe(spark: SparkSession, model: BpeModel, path: String): Unit = {
-    import spark.implicits._
-    model.merges.zipWithIndex
-      .map { case ((l, r), rank) => (rank, l, r) }
-      .toDF("rank", "left", "right")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+    * side) encodes against the same merges. Driver-side, no Spark job. */
+  def saveBpe(spark: SparkSession, model: BpeModel, path: String): Unit =
+    LocalParquet.write(spark, path,
+      StructType(Seq(StructField("rank", IntegerType),
+        StructField("left", StringType), StructField("right", StringType))),
+      model.merges.zipWithIndex.map { case ((l, r), rank) => Row(rank, l, r) })
 
-  /** Load a model persisted by [[saveBpe]] (bounded numMerges-row collect). */
+  /** Load a model persisted by [[saveBpe]], or by a Spark write of the same
+    * table. Driver-side, no Spark job. */
   def loadBpe(spark: SparkSession, path: String): BpeModel =
-    BpeModel(spark.read.parquet(path).select("rank", "left", "right")
-      .collect().map(r => (r.getInt(0), (r.getString(1), r.getString(2))))
+    BpeModel(LocalParquet.read(spark, path)
+      .map(r => (r.getAs[Int]("rank"), (r.getAs[String]("left"), r.getAs[String]("right"))))
       .sortBy(_._1).map(_._2).toIndexedSeq)
 }

@@ -1,7 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.parquet.LocalParquet
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /**
  * Unigram-LM tokenizer — the third real subword family next to [[Bpe]]
@@ -247,18 +249,18 @@ object Unigram {
     * the stream. Pure column algebra, no shuffle. */
   def decode(tokens: Column): Column = array_join(tokens, "")
 
-  /** Persist the model as a tiny two-column parquet table. */
-  def saveUnigram(spark: SparkSession, model: UnigramModel, path: String): Unit = {
-    import spark.implicits._
-    model.pieces.zip(model.scores).toDF("piece", "score")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+  /** Persist the model as a tiny two-column parquet table. Driver-side,
+    * no Spark job. */
+  def saveUnigram(spark: SparkSession, model: UnigramModel, path: String): Unit =
+    LocalParquet.write(spark, path,
+      StructType(Seq(StructField("piece", StringType), StructField("score", LongType))),
+      model.pieces.zip(model.scores).map { case (p, sc) => Row(p, sc) })
 
-  /** Load a model persisted by [[saveUnigram]] (bounded vocab-sized
-    * collect). */
+  /** Load a model persisted by [[saveUnigram]], or by a Spark write of the
+    * same table. Driver-side, no Spark job. */
   def loadUnigram(spark: SparkSession, path: String): UnigramModel = {
-    val rows = spark.read.parquet(path).select("piece", "score")
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
+    val rows = LocalParquet.read(spark, path)
+      .map(r => (r.getAs[String]("piece"), r.getAs[Long]("score"))).sortBy(_._1)
     UnigramModel(rows.map(_._1).toIndexedSeq, rows.map(_._2).toIndexedSeq)
   }
 }

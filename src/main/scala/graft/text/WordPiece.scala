@@ -1,7 +1,9 @@
 package graft.text
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.parquet.LocalParquet
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /**
  * WordPiece-style tokenizer — the greedy longest-match-first segmentation
@@ -122,15 +124,15 @@ object WordPiece {
       when(t.startsWith("##"), t.substr(lit(3), length(t)))
         .otherwise(concat(lit(" "), t))), ""))
 
-  /** Persist the vocab as a tiny one-column parquet table. */
-  def saveWordPiece(spark: SparkSession, model: WordPieceModel, path: String): Unit = {
-    import spark.implicits._
-    model.pieces.toDF("piece").coalesce(1).write.mode("overwrite").parquet(path)
-  }
+  /** Persist the vocab as a tiny one-column parquet table. Driver-side,
+    * no Spark job. */
+  def saveWordPiece(spark: SparkSession, model: WordPieceModel, path: String): Unit =
+    LocalParquet.write(spark, path, StructType(Seq(StructField("piece", StringType))),
+      model.pieces.map(Row(_)))
 
-  /** Load a model persisted by [[saveWordPiece]] (bounded vocab-sized
-    * collect). */
+  /** Load a model persisted by [[saveWordPiece]], or by a Spark write of
+    * the same table. Driver-side, no Spark job. */
   def loadWordPiece(spark: SparkSession, path: String): WordPieceModel =
-    WordPieceModel(spark.read.parquet(path).select("piece")
-      .collect().map(_.getString(0)).sorted.toIndexedSeq)
+    WordPieceModel(LocalParquet.read(spark, path).map(_.getAs[String]("piece"))
+      .sorted.toIndexedSeq)
 }

@@ -85,8 +85,13 @@ object Manifest {
    * silently drift from [[verifyManifest]]'s recomputation.
    */
   def fileSummaryWith(spark: SparkSession, dir: String,
+                      extraAggs: org.apache.spark.sql.Column*): DataFrame =
+    fileSummaryWith(spark.read.parquet(dir), extraAggs: _*)
+
+  /** [[fileSummaryWith]] over the files `df` reads: a directory read with
+    * a known schema, or an explicit file list. */
+  def fileSummaryWith(df: DataFrame,
                       extraAggs: org.apache.spark.sql.Column*): DataFrame = {
-    val df = spark.read.parquet(dir)
     // struct() over the NAMED data columns: input_file_name/the hash
     // column must never fold into the fingerprinted struct
     val dataCols = df.columns.toSeq.map(col)
@@ -137,20 +142,14 @@ object Manifest {
     val removed = removedFiles.map(key).toSet
     // the kept rows are already on disk and file-count-bounded: merge them
     // DRIVER-side with the one scan of the new bytes, then land the sidecar
-    // driver-side — one Spark job total (the added-file fingerprint scan),
-    // where read-plan + localCheckpoint + write used to cost three more
+    // driver-side — the added-file fingerprint scan is the only Spark work
     val kept = readManifestRows(spark, dir)
       .filter(r => !removed.contains(key(r.getAs[String]("file"))))
       .map(r => org.apache.spark.sql.Row(r.getAs[String]("file"),
         r.getAs[Long]("rows"), r.getAs[Long]("fingerprint")))
     val added =
       if (addedFiles.isEmpty) Seq.empty[org.apache.spark.sql.Row]
-      else spark.read.parquet(addedFiles: _*)
-        .select(input_file_name().as("file"),
-          xxhash64(to_json(struct(col("*")))).as("h"))
-        .groupBy("file")
-        .agg(count(lit(1)).as("rows"), bit_xor(col("h")).as("fingerprint"))
-        .collect().toSeq
+      else fileSummaryWith(spark.read.parquet(addedFiles: _*)).collect().toSeq
     writeManifestRows(spark, dir, kept ++ added)
   }
 

@@ -26,6 +26,21 @@ package object graftext {
     * has recorded is complete only after this. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
+  /** Load a persisted frame's cache now, with the one job an adaptive
+    * plan's table-cache stage submits for it, so every plan that reads it
+    * afterwards finds it loaded. A plan that reads a lazily persisted frame
+    * from several table-cache stages submits one load job for each stage
+    * that starts before the cache is loaded, a count that depends on
+    * timing. A frame that is not persisted is left as it is. */
+  def loadCache(df: Dataset[_]): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).foreach { data =>
+      ds.sparkSession.sparkContext.runJob(
+        data.cachedRepresentation.cacheBuilder.cachedColumnBuffers,
+        (_: Iterator[columnar.CachedBatch]) => ())
+    }
+  }
+
   /** Type equality ignoring nullability (DataType.sameType is private[sql]). */
   def sameType(a: types.DataType, b: types.DataType): Boolean = a.sameType(b)
 

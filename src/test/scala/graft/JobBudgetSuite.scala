@@ -3,7 +3,7 @@ package graft
 import graft.ann.{Ann, Pq}
 import graft.dedup.{Clustering, Dedup, DedupIndex}
 import graft.diff.SnapshotDiff
-import graft.text.Shards
+import graft.text.{Bpe, Shards, Unigram, WordPiece}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, length}
 import org.apache.spark.sql.graftext.drainListeners
@@ -133,8 +133,8 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
     info(s"jobs: curate $curateJobs, curateIncrement $incrementJobs")
     // exact pins, not ceilings: a change to how the stages run must not
     // move these counts unnoticed, in either direction
-    assert(curateJobs == 29, s"curate ran $curateJobs jobs")
-    assert(incrementJobs == 44, s"curateIncrement ran $incrementJobs jobs")
+    assert(curateJobs == 27, s"curate ran $curateJobs jobs")
+    assert(incrementJobs == 39, s"curateIncrement ran $incrementJobs jobs")
   }
 
   test("decontaminate: one call and its collect run the blocklist build and one corpus scan") {
@@ -160,9 +160,10 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
       jobsIn(SnapshotDiff.writePartitionedWithManifest(rows.toDF("id", "p", "v"), dir,
         Seq("p")))._2
     }
-    // the write and the manifest aggregate; the read-back that fingerprints
-    // the written files takes its schema from a footer
-    assert(writeJobs.forall(_ <= 3), s"writePartitionedWithManifest ran $writeJobs jobs")
+    // the write and the manifest aggregate's collect; the read-back that
+    // fingerprints the written files takes its schema from a footer, and
+    // the manifest lands driver-side
+    assert(writeJobs.forall(_ == 3), s"writePartitionedWithManifest ran $writeJobs jobs")
     // detection collects the changed partitions from the manifests (an
     // aggregate and a join); both snapshot reads take their schemas from
     // footers
@@ -205,5 +206,30 @@ class JobBudgetSuite extends AnyFunSuite with SparkTest {
     // costs 2 more jobs per call
     assert(clusterJobs == 16, s"deduplicateMinHashClusters ran $clusterJobs jobs")
     assert(keepBestJobs == 17, s"deduplicateMinHashKeepBest ran $keepBestJobs jobs")
+  }
+
+  test("tokenizer models: BPE, WordPiece and Unigram save and load run 0 jobs") {
+    val bpe = Bpe.BpeModel(IndexedSeq(("t", "h"), ("th", "e"), ("a", "n")))
+    val wp = WordPiece.WordPieceModel(IndexedSeq("##s", "[UNK]", "an", "the"))
+    val ug = Unigram.UnigramModel(IndexedSeq("a", "an", "the"), IndexedSeq(-3L, -2L, -1L))
+    val dir = graft.createTemporaryDir("tokenizer-job-budget")
+    def load(suffix: String) = (Bpe.loadBpe(spark, s"$dir/bpe$suffix"),
+      WordPiece.loadWordPiece(spark, s"$dir/wp$suffix"),
+      Unigram.loadUnigram(spark, s"$dir/ug$suffix"))
+    val (loaded, jobs) = jobsIn {
+      Bpe.saveBpe(spark, bpe, s"$dir/bpe")
+      WordPiece.saveWordPiece(spark, wp, s"$dir/wp")
+      Unigram.saveUnigram(spark, ug, s"$dir/ug")
+      load("")
+    }
+    assert(loaded == ((bpe, wp, ug)))
+    info(s"jobs: save + load of three models $jobs")
+    assert(jobs == 0, s"tokenizer model save + load ran $jobs jobs")
+    // models persisted by a Spark job still load equal
+    bpe.merges.zipWithIndex.map { case ((l, r), rank) => (rank, l, r) }
+      .toDF("rank", "left", "right").coalesce(1).write.parquet(s"$dir/bpe-spark")
+    wp.pieces.toDF("piece").coalesce(1).write.parquet(s"$dir/wp-spark")
+    ug.pieces.zip(ug.scores).toDF("piece", "score").coalesce(1).write.parquet(s"$dir/ug-spark")
+    assert(load("-spark") == ((bpe, wp, ug)))
   }
 }

@@ -161,4 +161,20 @@ class SnapshotDiffSuite extends AnyFunSuite with SparkTest {
     assert(rows.head.getAs[String]("left_p") == "b")
     assert(rows.head.getAs[String]("right_p") == "c")
   }
+
+  test("the snapshot manifest holds the rows fileSummaryWith computes over the same directory") {
+    val d = tmp()
+    SnapshotDiff.writePartitionedWithManifest(leftDf.repartition(3), d, Seq("p"))
+    def summary(rows: Seq[org.apache.spark.sql.Row]) = rows.map(r =>
+      (r.getAs[String]("file"), r.getAs[Long]("rows"), r.getAs[Long]("fingerprint"))).toSet
+    val written = summary(graft.write.Manifest.readManifestRows(spark, d))
+    assert(written.toSeq.map(_._2).sum == 6L)
+    assert(written == summary(graft.write.Manifest.fileSummaryWith(spark, d).collect().toSeq))
+    // the documented fingerprint, spelled out: XOR of each row's xxhash64
+    // over its JSON, per landed file
+    val spelled = spark.read.parquet(d)
+      .select(input_file_name().as("file"), xxhash64(to_json(struct(col("*")))).as("h"))
+      .groupBy("file").agg(count(lit(1)).as("rows"), bit_xor(col("h")).as("fingerprint"))
+    assert(written == summary(spelled.collect().toSeq))
+  }
 }
